@@ -86,6 +86,24 @@ object Dedup {
       .groupBy(col("fp"))
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("dups"))
 
+  /** Most canonical edges the driver-local union-find in
+    * [[connectedComponents]] can size: its id map holds up to two ids
+    * per edge plus slack, and a java HashMap is sized by an Int. */
+  private[graft] val LocalCcMaxEdges: Long = (Int.MaxValue - 16L) / 2
+
+  /** `graft.cc.localMaxEdges` (default 500k), clamped to
+    * [[LocalCcMaxEdges]]: a larger setting (e.g. Long.MaxValue for
+    * "always local") means "local whenever the union-find can size
+    * it", and bigger edge sets take the distributed rounds. */
+  private[graft] def ccLocalMaxEdges(spark: SparkSession): Long = {
+    val conf = spark.conf.getOption("graft.cc.localMaxEdges")
+    val v = conf.fold(500000L) { s =>
+      s.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"graft.cc.localMaxEdges must be an integer edge count, got '$s'"))
+    }
+    math.min(v, LocalCcMaxEdges)
+  }
+
   /** Connected components over a near-dup pair graph (id_a, id_b) via
     * the ALTERNATING large-star / small-star algorithm (Kiveris et
     * al. 2014, "Connected Components in MapReduce and Beyond"):
@@ -143,8 +161,7 @@ object Dedup {
     // id type the pair producers emit) — anything else keeps the
     // distributed loop. At corpus scale the threshold never binds
     // and the star rounds run exactly as before.
-    val localMax = pairs.sparkSession.conf
-      .getOption("graft.cc.localMaxEdges").map(_.toLong).getOrElse(500000L)
+    val localMax = ccLocalMaxEdges(pairs.sparkSession)
     if (edgesCount <= localMax &&
         edges.schema.fields(0).dataType ==
           org.apache.spark.sql.types.LongType) {

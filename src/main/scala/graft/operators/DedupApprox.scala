@@ -189,20 +189,6 @@ object DedupApprox {
       .filter(size(col("ms")).between(2, maxBucket))
       .select(explode(pairExpand(col("ms"))).as("p"))
 
-  /** MinHash+LSH candidate pairs verified by exact Jaccard.
-    * Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
-    * bands*rowsPerBand must equal numHashes.
-    *
-    * Shuffle discipline (the sf0.1 profile that motivated it): carrying
-    * the shingle sets (~KBs/doc) through the band explode multiplies
-    * them ×bands through the groupBy shuffle — 80% of the operator's
-    * wall time. So the LSH stage shuffles only (band, band_hash, id),
-    * and verification joins the candidate pairs BACK to the shingle
-    * sets with the candidates broadcast: the wide arrays never move.
-    * (Near-dup candidates ≪ corpus is the regime this operator exists
-    * for; for an adversarial corpus where candidates rival the corpus
-    * size, pass broadcastCandidates=false to drop the hints and let
-    * AQE shuffle both sides — same plan shape, no driver limit.) */
   /** LSH band-key index of a corpus: (idCol, band, band_hash) — bands
     * rows per doc, each a 64-bit-safe fold of a signature slice. This
     * is the AT-REST dedup artifact for a growing corpus: build it once
@@ -396,6 +382,32 @@ object DedupApprox {
     ()
   }
 
+  /** MinHash+LSH candidate pairs verified by exact Jaccard.
+    * Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
+    * bands*rowsPerBand must equal numHashes.
+    *
+    * Shuffle discipline (the sf0.1 profile that motivated it): carrying
+    * the shingle sets (~KBs/doc) through the band explode multiplies
+    * them ×bands through the groupBy shuffle — 80% of the operator's
+    * wall time. So the LSH stage shuffles only (band, band_hash, id),
+    * and verification joins the candidate pairs BACK to the shingle
+    * sets.
+    *
+    * Build-side rule for that join: the PER-DOC side builds, the pair
+    * side streams. Every candidate doc appears in at least one pair, so
+    * the doc side never exceeds about twice the pair count; in
+    * clustered corpora it is far smaller, because pairs grow with the
+    * square of cluster size (26 clusters of 200 near-duplicates are
+    * ~517k pairs over ~5.2k docs). So the shingle table (id, sh) of the
+    * candidate docs is computed once — one shingle-UDF pass — and
+    * broadcast, and each pair probes it twice, by id_a and by id_b (the
+    * second probe reuses the first broadcast). The pairs stream from
+    * the checkpointed candidate set and never move.
+    * `broadcastCandidates` governs the broadcasts of the per-doc sides
+    * (the candidate-id semi-join and the shingle table); false drops
+    * the hints and lets AQE shuffle both sides — same plan shape, no
+    * driver limit, for a corpus whose candidate docs outgrow a
+    * broadcast. */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
                    threshold: Double = 0.5, maxBucket: Int = 500,
@@ -405,9 +417,10 @@ object DedupApprox {
     // the LSH stage, and only (bands × i64) per doc ever reach the
     // shuffle.
     val banded = minhashIndex(df, idCol, textCol, shingleN, numHashes, bands)
-    // materialized once (localCheckpoint): the candidate set feeds two
-    // broadcast joins, and a nested un-materialized broadcast re-runs
-    // the whole LSH subtree per exchange.
+    // materialized once (localCheckpoint): the candidate set feeds the
+    // candidate-id semi-join (inside the shingle table's broadcast) and
+    // the pair stream, and an un-materialized set would re-run the
+    // whole LSH subtree once per consumer.
     val cand = explodePairs(banded, Seq(col("band"), col("band_hash")),
         col(idCol), maxBucket)
       .select(least(col("p.a"), col("p.b")).as("id_a"),
@@ -418,17 +431,16 @@ object DedupApprox {
     // candidate pair (a small fraction of the corpus), not corpus-wide;
     // the 32-bit hashed form makes the exact intersect/union integer ops.
     val shHashUdf = udf { (text: String) => shingleHashesOf(text, shingleN) }
-    // candidates ≪ corpus → broadcast; adversarial corpora (candidates
-    // rivaling corpus size would blow the broadcast/driver limit) set
-    // broadcastCandidates=false for identical semantics via shuffles.
     val bc: DataFrame => DataFrame =
       if (broadcastCandidates) broadcast else identity
     val candIds = cand.select(col("id_a").as("cid"))
       .unionByName(cand.select(col("id_b").as("cid"))).distinct()
-    val candSh = df.join(bc(candIds), col(idCol) === col("cid"))
-      .select(col(idCol), shHashUdf(col(textCol)).as("sh"))
-    val withA = candSh.join(bc(cand), col(idCol) === col("id_a"))
-      .select(col("id_a"), col("id_b"), col("sh").as("sh_a"))
+    // the build side: one (id, sh) row per candidate doc. Both probes
+    // read the same plan (aliases only, no per-probe projection inside
+    // the hint), so the second broadcast is a reused exchange and the
+    // UDF runs once per call.
+    val docSh = bc(df.join(bc(candIds), col(idCol) === col("cid"), "left_semi")
+      .select(col(idCol).as("id"), shHashUdf(col(textCol)).as("sh")))
     // shingle-less pairs (both texts empty after upstream cleaning) have
     // union 0: jaccard is undefined (null), the pair is dropped by the
     // threshold filter — matching the oracle, where 0.0/0 is NULL in DuckDB and
@@ -437,11 +449,14 @@ object DedupApprox {
     // is not safe because predicate pushdown combines it with the
     // threshold conjunct in unspecified order, and ANSI division
     // throws before the guard runs.
-    candSh.join(bc(withA), col(idCol) === col("id_b"))
-      .withColumn("__u", size(array_union(col("sh_a"), col("sh"))))
+    cand
+      .join(docSh.as("a"), col("id_a") === col("a.id"))
+      .join(docSh.as("b"), col("id_b") === col("b.id"))
+      .select(col("id_a"), col("id_b"), col("a.sh").as("sh_a"), col("b.sh").as("sh_b"))
+      .withColumn("__u", size(array_union(col("sh_a"), col("sh_b"))))
       .select(col("id_a"), col("id_b"),
         when(col("__u") > 0,
-          size(array_intersect(col("sh_a"), col("sh"))).cast("double") /
+          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
             col("__u")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Sentiment
@@ -19,14 +20,26 @@ object BatchPipeline {
 
   /** Step 1 (dag:31-52): last-window envelopes not yet processed.
     * `processed` only contributes its url column — Catalyst prunes the
-    * scan to that column and broadcasts it while small (J-2). */
+    * scan to that column and broadcasts it while small (J-2).
+    *
+    * The window itself is deduplicated by url first, like the
+    * reference's consumer (one document per `article.url`): a url that
+    * both feeds deliver inside one window keeps one deterministic row,
+    * the earliest `fetched_at`, ties broken by `source_api`. Rows
+    * without a url are never duplicates of each other and all pass. */
   def extractUnprocessed(raw: DataFrame, processed: DataFrame,
-                         cutoff: org.apache.spark.sql.Column): DataFrame =
-    Dedup.dedupAgainst(
-      raw.filter(col("fetched_at") >= cutoff)
-        .withColumn("url", col("article.url")),
+                         cutoff: org.apache.spark.sql.Column): DataFrame = {
+    val firstFetch = Window.partitionBy(col("url"))
+      .orderBy(col("fetched_at"), col("source_api"))
+    val window = raw.filter(col("fetched_at") >= cutoff)
+      .withColumn("url", col("article.url"))
+      .withColumn("__rn", row_number().over(firstFetch))
+      .filter(col("url").isNull || col("__rn") === 1)
+      .drop("__rn")
+    Dedup.dedupAgainst(window,
       processed.select(col("article.url").as("url")),
       "url")
+  }
 
   /** Step 2 (dag:54-99): score + classify. Adds the A.3 `sentiment`
     * struct; drops rows with blank assembled text (F-10). */

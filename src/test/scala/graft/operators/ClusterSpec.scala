@@ -47,6 +47,24 @@ class ClusterSpec extends SparkSpec {
     } finally spark.conf.unset("graft.cc.localMaxEdges")
   }
 
+  test("localMaxEdges above the union-find's sizing limit is clamped, not overflowed") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+    spark.conf.set("graft.cc.localMaxEdges", Long.MaxValue.toString)
+    try {
+      assert(Dedup.ccLocalMaxEdges(spark) == Dedup.LocalCcMaxEdges)
+      // the id map of the largest edge set the local path admits still
+      // sizes to a valid (positive Int) initial capacity
+      assert((Dedup.LocalCcMaxEdges * 2).toInt + 16 > 0)
+      val comps = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+      assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    } finally spark.conf.unset("graft.cc.localMaxEdges")
+    spark.conf.set("graft.cc.localMaxEdges", "lots")
+    try {
+      val e = intercept[IllegalArgumentException](Dedup.connectedComponents(pairs))
+      assert(e.getMessage.contains("graft.cc.localMaxEdges must be an integer edge count"))
+    } finally spark.conf.unset("graft.cc.localMaxEdges")
+  }
+
   test("end-to-end: minhash pairs -> clusters on the planted corpus") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val pairs = DedupApprox.minhashPairs(docs, "doc_id", "text", threshold = 0.5)

@@ -1,9 +1,13 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.ProjectExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-class DedupApproxSpec extends SparkSpec {
+class DedupApproxSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val corpus = Seq(
@@ -33,6 +37,53 @@ class DedupApproxSpec extends SparkSpec {
       .filter($"id_a" === 1 && $"id_b" === 2)
       .select("jaccard").as[Double].head()
     assert(j > 0.6 && j < 1.0) // 11 of 13 shingles shared
+  }
+
+  // one clique of 60 docs that differ only in their last word (pairs
+  // grow with the square of cluster size, docs linearly) + unrelated docs
+  private lazy val cliqueDocs: Seq[(Long, String)] = {
+    val base = (1 to 40).map(i => s"w$i").mkString(" ")
+    val rnd = new scala.util.Random(7)
+    (0L until 60L).map(i => (i, s"$base last$i")) ++
+      (100L until 140L).map(i =>
+        (i, Seq.fill(30)("u" + rnd.nextInt(5000)).mkString(" ")))
+  }
+
+  test("minhashPairs on a clique: every pair, driver-exact jaccard, both join modes") {
+    val docs = cliqueDocs.toDF("doc_id", "text")
+    def run(bc: Boolean) = DedupApprox.minhashPairs(docs, "doc_id", "text",
+        threshold = 0.5, broadcastCandidates = bc)
+      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect()
+    val pairs = run(bc = true)
+    val clique = (for (a <- 0L until 60L; b <- (a + 1) until 60L) yield (a, b)).toSet
+    assert(clique.size == 60 * 59 / 2)
+    assert(pairs.map(p => (p._1, p._2)).toSet.intersect(clique) == clique)
+    val sh = cliqueDocs.map { case (id, t) =>
+      id -> DedupApprox.shingleHashesOf(t, 3).toSet }.toMap
+    pairs.foreach { case (a, b, j) =>
+      val exact = sh(a).intersect(sh(b)).size.toDouble / sh(a).union(sh(b)).size
+      assert(java.lang.Double.doubleToRawLongBits(j) ==
+        java.lang.Double.doubleToRawLongBits(exact), s"($a, $b): $j vs $exact")
+    }
+    assert(run(bc = false).toSet == pairs.toSet)
+  }
+
+  test("minhashPairs plan: shingle table built once and broadcast, pairs stream") {
+    val pairs = DedupApprox.minhashPairs(cliqueDocs.toDF("doc_id", "text"),
+      "doc_id", "text", threshold = 0.5)
+    pairs.collect()
+    val plan = pairs.queryExecution.executedPlan
+    // one shingle-UDF projection; the second probe reuses its broadcast
+    val udfProjects = collect(plan) {
+      case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[ScalaUDF])) => p
+    }
+    assert(udfProjects.size == 1)
+    assert(collect(plan) {
+      case r: ReusedExchangeExec if r.child.isInstanceOf[BroadcastExchangeExec] => r
+    }.size == 1)
+    // the candidate pair set is never a broadcast build side
+    val builds = collect(plan) { case b: BroadcastExchangeExec => b.output.map(_.name) }
+    assert(builds.nonEmpty && builds.forall(o => !o.contains("id_a") && !o.contains("id_b")))
   }
 
   test("simhashPairs finds the near-dups and not the unrelated doc") {

@@ -22,8 +22,9 @@ class BatchPipelineSpec extends SparkSpec {
       "2024-01-01T10:00:00", content)
 
   private def envelope(title: String, url: String, desc: String = "d",
-                       content: String = "c", fetched: String = "2024-01-01 10:30:00"): Row =
-    Row("newsapi", ts(fetched), article(title, url, desc, content), ts(fetched))
+                       content: String = "c", fetched: String = "2024-01-01 10:30:00",
+                       feed: String = "newsapi"): Row =
+    Row(feed, ts(fetched), article(title, url, desc, content), ts(fetched))
 
   private def envelopes(rows: Row*) =
     spark.createDataFrame(
@@ -66,6 +67,30 @@ class BatchPipelineSpec extends SparkSpec {
     assert(stats.getAs[Boolean]("has_content"))
     assert(searchable.columns.toSeq == Seq("doc_id", "title", "content", "url",
       "published_at", "sentiment", "timestamp", "stats"))
+  }
+
+  test("a url both feeds deliver in one window is processed once: earliest fetch, then feed") {
+    val raw = envelopes(
+      envelope("From newsapi", "https://x.com/both", fetched = "2024-01-01 10:20:00"),
+      envelope("From gnews", "https://x.com/both", fetched = "2024-01-01 10:40:00",
+        feed = "gnews"),
+      envelope("Tie gnews", "https://x.com/tie", feed = "gnews"),
+      envelope("Tie newsapi", "https://x.com/tie"),
+      envelope("Only once", "https://x.com/one"),
+      // no url: never a duplicate of another url-less article
+      envelope("No url one", null), envelope("No url two", null))
+    val (proc, searchable) = BatchPipeline.run(raw, envelopes().limit(0),
+      lit(ts("2024-01-01 10:00:00")))
+    val rows = proc.select(col("article.url"), col("source_api"), col("article.title"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(rows.count(_._1 == "https://x.com/both") == 1)
+    assert(rows.sortBy(_._3).toSeq == Seq(
+      ("https://x.com/both", "newsapi", "From newsapi"),
+      (null, "newsapi", "No url one"),
+      (null, "newsapi", "No url two"),
+      ("https://x.com/one", "newsapi", "Only once"),
+      ("https://x.com/tie", "gnews", "Tie gnews")))
+    assert(searchable.count() == 5)
   }
 
   test("searchable content is clamped to 1000 chars") {
