@@ -27,14 +27,27 @@ import org.apache.spark.sql.functions._
   *    Candidate docs groupBy once (candidate-sized), corpus-level
   *    constants (N, Σdl) come from a 1-row stats ledger, df(t) from
   *    the pruned postings themselves (a term's postings live entirely
-  *    in its bucket, so the pruned read sees every one).
-  *  - MAINTAIN: [[appendBatch]] folds a delta batch in ES-bulk style —
-  *    postings append under the same bucket layout, the stats ledger
-  *    folds additively (StatsLedger's algebra: N and Σdl are sums),
-  *    and the card-family crash contract holds: batches dedup against
-  *    a seen-ids ledger (redelivery folds nothing), partials land
-  *    FIRST and ids LAST, so the one crash window re-appends postings
-  *    a later read-side `dropDuplicates(term, doc_id)` heals.
+  *    in its bucket and the append segment, so the pruned read sees
+  *    every one).
+  *  - MAINTAIN: [[appendBatch]] folds a delta batch in ES-bulk style.
+  *    Like an Elasticsearch refresh, each batch's postings land as ONE
+  *    small unbucketed SEGMENT under the reserved partition
+  *    `bucket=`[[SegmentBucket]] (one file per write task, not one per
+  *    touched bucket); every serve read adds that partition to its
+  *    bucket predicate, so a term's postings are its bucket plus the
+  *    segment. Like an ES merge, the maintenance pass FOLDS the segment
+  *    into the bucket layout (re-bucketed by [[writeIndex]]'s clustered
+  *    write, then the folded files deleted) once it holds more than
+  *    `graft.index.compactMaxFiles` files (default 12) — so a serve
+  *    read scans a bounded segment, and a long-lived index writes
+  *    ~1 + numBuckets/threshold files per batch instead of numBuckets.
+  *    The stats ledger folds additively (StatsLedger's algebra: N and
+  *    Σdl are sums), and the card-family crash contract holds: batches
+  *    dedup against a seen-ids ledger (redelivery folds nothing),
+  *    partials land FIRST and ids LAST, so the one crash window
+  *    re-appends postings a later read-side `dropDuplicates(term,
+  *    doc_id)` heals — as it heals the fold's own window (rows landed
+  *    in their buckets, segment files not yet deleted).
   *
   * Scoring is bit-identical to [[Search.bm25Scored]]: the same
   * integer tf/dl/df/N/Σdl enter the same left-associated double
@@ -50,6 +63,10 @@ object InvertedIndex {
   private def toks(fields: Seq[String]): Column =
     graft.functions.Analyzer.tokenize(concat_ws(" ", fields.map(col): _*))
 
+  /** The postings partition [[appendBatch]] lands each batch's
+    * unbucketed segment in. Bucket ids are `pmod`s, never negative. */
+  val SegmentBucket: Int = -1
+
   /** `bucket` for a term column/literal. With a literal term this
     * constant-folds, which is what lets the serve-path filter reach
     * the partition pruner as `bucket = <const>`. INT, not LONG: the
@@ -58,6 +75,16 @@ object InvertedIndex {
     * wrapped around the partition column defeats pruning). */
   def bucketOf(term: Column, numBuckets: Int): Column =
     pmod(xxhash64(term), lit(numBuckets.toLong)).cast("int")
+
+  /** [[bucketOf]] of a literal term, computed on the driver (names the
+    * `bucket=N` dir a pruned read lists): the same seed-42 XxHash64
+    * Spark's `xxhash64` evaluates, floor-modded like `pmod`. */
+  private[operators] def bucketId(term: String, numBuckets: Int): Int =
+    Math.floorMod(
+      org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+        org.apache.spark.unsafe.types.UTF8String.fromString(term),
+        org.apache.spark.sql.types.StringType, 42L),
+      numBuckets.toLong).toInt
 
   /** Posting rows `(term, doc_id, tf, dl, positions)` — one per
     * (term, doc), tf = occurrences, dl = the doc's token count
@@ -126,20 +153,24 @@ object InvertedIndex {
     post.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
 
-  /** Build the index at `dir`: bucketed postings + the 1-row corpus
-    * stats ledger `(n_docs, sum_dl, num_buckets)`. */
-  def writeIndex(df: DataFrame, idCol: String, fields: Seq[String],
-                 dir: String, numBuckets: Int = 64,
-                 keywordCols: Seq[String] = Nil): Unit = {
-    postings(df, idCol, fields)
-      .withColumn("bucket", bucketOf(col("term"), numBuckets))
+  /** Posting rows written under the bucket layout at `dir/postings`. */
+  private def writeBucketed(post: DataFrame, dir: String, numBuckets: Int,
+                            mode: String): Unit =
+    post.withColumn("bucket", bucketOf(col("term"), numBuckets))
       // cluster by the partition column before the partitioned write
       // (guide §6): without it every shuffle task writes a sliver into
       // every bucket dir (~tasks×buckets files), paid again by every
       // pruned serve read's listing
       .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite")
+      .write.partitionBy("bucket").mode(mode)
       .parquet(s"$dir/postings")
+
+  /** Build the index at `dir`: bucketed postings + the 1-row corpus
+    * stats ledger `(n_docs, sum_dl, num_buckets)`. */
+  def writeIndex(df: DataFrame, idCol: String, fields: Seq[String],
+                 dir: String, numBuckets: Int = 64,
+                 keywordCols: Seq[String] = Nil): Unit = {
+    writeBucketed(postings(df, idCol, fields), dir, numBuckets, "overwrite")
     // corpus constants from the SOURCE frame, not the postings — a
     // zero-token doc has no posting rows but still counts in N/Σdl
     // (exactly as the scan path's one-pass agg counts it)
@@ -168,12 +199,17 @@ object InvertedIndex {
     }.reduce(_ unionByName _)
 
   /** Fold a delta batch into a standing index (ES `_bulk`): postings
-    * and a stats partial append under the standing layout; a seen-ids
+    * append as one segment and a stats partial appends; a seen-ids
     * ledger (landing LAST) makes redelivery fold nothing. Safe to
-    * call on an empty `dir` — the first batch creates the index. */
+    * call on an empty `dir` — the first batch creates the index.
+    * `graft.index.compactMaxFiles` ≤ 0 turns off the segment fold
+    * along with compaction, so every read then scans every segment
+    * file ever appended. */
   def appendBatch(batch: DataFrame, idCol: String, fields: Seq[String],
                   dir: String, numBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
+    val maxFiles = graft.plans.Maintenance.maxFilesConf(spark,
+      "graft.index.compactMaxFiles")
     // the bucket layout is fixed at first write: appending under a
     // different modulus would mis-bucket new postings while the serve
     // path prunes with the standing value — silently losing matches
@@ -204,13 +240,7 @@ object InvertedIndex {
         .groupBy(col("term"), col("doc_id"))
         .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"),
           sort_array(collect_list(col("pos"))).as("positions"))
-        // NO pre-write repartition here (unlike writeIndex): a delta
-        // batch's postings are small, the extra per-batch shuffle
-        // measured a net loss (q117 1.17x) — compaction at rest is the
-        // file-count answer for long-lived incremental indexes
-        .withColumn("bucket", bucketOf(col("term"), numBuckets))
-        .write.partitionBy("bucket").mode("append")
-        .parquet(s"$dir/postings")
+        .write.mode("append").parquet(segmentDir(dir))
       fresh.agg(count(lit(1)).as("n_docs"),
           sum(size(col("__toks")).cast("long")).as("sum_dl"),
           statsBatchKey(col(idCol)))
@@ -218,22 +248,24 @@ object InvertedIndex {
         .write.mode("append").parquet(s"$dir/stats")
       fresh.select(col(idCol).cast("long").as("doc_id"))
         .write.mode("append").parquet(s"$dir/seenIds")
-      // COMPACTION AT REST (round 17; guide §6 small-files — the
-      // round-16 note above names this as the file-count answer for
-      // long-lived incremental indexes). Threshold-triggered:
+      // MAINTENANCE AT REST (guide §6 small-files), AFTER the ids
+      // ledger (the documented single-maintainer pass, add-then-delete,
+      // crash = duplicates healed read-side). Threshold-triggered: a
+      // segment past maxFiles files folds into the buckets first (the
+      // fold empties it, so the compaction below never rewrites the
+      // segment in place, which would leave it unbucketed); then
       // Maintenance.compact no-ops every group at or under maxFiles,
       // so a young index pays only the driver listing; once a bucket
-      // (or the flat ledgers) exceeds the threshold it is rewritten
-      // into few files, deduplicating on the exact natural keys the
-      // read side already heals on — so a compacted index reads
-      // byte-identically. Runs AFTER the ids ledger (it is the
-      // documented single-maintainer pass, add-then-delete, crash =
-      // duplicates healed next pass). `graft.index.compactMaxFiles`
-      // ≤ 0 disables; the default keeps serve reads at O(1) files per
-      // bucket across stream lifetimes.
-      val maxFiles = spark.conf.getOption("graft.index.compactMaxFiles")
-        .map(_.toInt).getOrElse(12)
+      // (or a flat ledger) exceeds the threshold it is rewritten into
+      // few files, deduplicating on the exact natural keys the read
+      // side already heals on — so a compacted index reads
+      // byte-identically. `graft.index.compactMaxFiles` ≤ 0 disables
+      // both; the default keeps serve reads at O(1) files per bucket
+      // across stream lifetimes.
       if (maxFiles > 0) {
+        graft.plans.Maintenance.fold(spark, segmentDir(dir), maxFiles) {
+          writeBucketed(_, dir, numBuckets, "append")
+        }
         graft.plans.Maintenance.compact(spark, s"$dir/postings",
           Seq("term", "doc_id"), maxFiles)
         graft.plans.Maintenance.compact(spark, s"$dir/stats",
@@ -260,16 +292,32 @@ object InvertedIndex {
         appendBatch(b, idCol, fields, dir, numBuckets)
       }
 
-  /** The pruned postings read for a term set: bucket predicates fold
-    * to literals → partition pruning keeps the scan posting-list-
-    * sized. The `dropDuplicates` heals the appendBatch crash window
-    * (duplicate postings from a re-appended partial). */
+  private def segmentDir(dir: String): String =
+    s"$dir/postings/bucket=$SegmentBucket"
+
+  /** The pruned postings read for a term set: the query terms' buckets
+    * plus the [[appendBatch]] segment partition (the unfolded recent
+    * batches, bounded by the fold threshold). Only those partition
+    * dirs are LISTED — via `basePath`, skipping ones that hold no
+    * data — so a query never pays a whole-root listing (past 32 dirs
+    * Spark lists a root with a parallel job); when none hold data the
+    * read falls back to the root. The bucket predicates fold to
+    * literals as well, so partition pruning keeps the scan
+    * posting-list-sized either way. The `dropDuplicates` heals the
+    * crash windows: postings re-appended by a retried batch, and
+    * segment rows already folded into their buckets. */
   def readPostings(spark: SparkSession, dir: String, terms: Seq[String],
                    numBuckets: Int): DataFrame = {
     val ts = terms.map(_.toLowerCase)
-    spark.read.parquet(s"$dir/postings")
-      .filter(ts.map(t => col("bucket") === bucketOf(lit(t), numBuckets))
-        .reduce(_ || _))
+    val root = s"$dir/postings"
+    val parts = (SegmentBucket +: ts.map(bucketId(_, numBuckets))).distinct
+      .map(b => s"$root/bucket=$b")
+      .filter(graft.plans.Maintenance.dataFiles(spark, _).nonEmpty)
+    val all =
+      if (parts.isEmpty) spark.read.parquet(root)
+      else spark.read.option("basePath", root).parquet(parts: _*)
+    all.filter((lit(SegmentBucket) +: ts.map(t => bucketOf(lit(t), numBuckets)))
+        .map(col("bucket") === _).reduce(_ || _))
       .filter(col("term").isin(ts: _*))
       .dropDuplicates("term", "doc_id")
   }

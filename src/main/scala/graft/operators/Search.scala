@@ -334,6 +334,8 @@ object Search {
                           fields: Seq[String], queries: DataFrame,
                           targetDir: String): Unit = {
     val spark = batch.sparkSession
+    val maxFiles = graft.plans.Maintenance.maxFilesConf(spark,
+      "graft.percolate.compactMaxFiles")
     val matched = percolate(batch, idCol, fields, queries)
     def keyed(df: DataFrame): DataFrame = df.withColumn("__mk",
       concat_ws(":", col(idCol), col("query_id")))
@@ -351,8 +353,6 @@ object Search {
     // (id, query_id) natural key the idempotent landing uses, so a
     // crash-residue duplicate heals and everything else is untouched.
     // `graft.percolate.compactMaxFiles` ≤ 0 disables.
-    val maxFiles = spark.conf.getOption("graft.percolate.compactMaxFiles")
-      .map(_.toInt).getOrElse(12)
     if (maxFiles > 0) {
       graft.plans.Maintenance.compact(spark, targetDir,
         Seq(idCol, "query_id"), maxFiles)

@@ -51,6 +51,18 @@ object Maintenance {
   private def isHidden(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
 
+  /** A sink's compaction threshold `key` (`graft.index.compactMaxFiles`,
+    * `graft.percolate.compactMaxFiles`; default 12, ≤ 0 disables).
+    * Sinks read it BEFORE their first write: a malformed value that
+    * only threw after the batch's ledger landed would fail every
+    * micro-batch past its commit, so the stream would retry forever
+    * and never run maintenance. */
+  def maxFilesConf(spark: SparkSession, key: String): Int =
+    spark.conf.getOption(key).fold(12) { s =>
+      s.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be an integer file count, got '$s'"))
+    }
+
   /** One compaction group: a partition subdir (`part` =
     * `"__bucket=3"`) or the flat root (`part` = `""`). */
   final case class GroupStat(part: String, files: Int, bytes: Long)
@@ -62,6 +74,33 @@ object Maintenance {
   private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** The visible data files directly under `dir`, none when it is
+    * missing: the snapshot a compaction or fold reads, then deletes. */
+  def dataFiles(spark: SparkSession, dir: String): Seq[Path] = {
+    val (fs, p) = fsOf(spark, dir)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p)
+      .filter(st => st.isFile && !isHidden(st.getPath.getName))
+      .map(_.getPath).toSeq
+  }
+
+  /** Move one group's rows elsewhere once it holds more than
+    * `maxFiles` data files: `rewrite` gets a frame over a snapshot of
+    * the group's files and must land every row before this returns;
+    * then exactly the snapshot is deleted. Same add-then-delete
+    * contract as [[compact]] — files appended mid-fold wait for the
+    * next pass, and a crash between the rewrite and the delete leaves
+    * duplicates for the reader's natural-key dedup. */
+  def fold(spark: SparkSession, dir: String, maxFiles: Int)
+          (rewrite: org.apache.spark.sql.DataFrame => Unit): Unit = {
+    val snapshot = dataFiles(spark, dir)
+    if (snapshot.length > maxFiles) {
+      rewrite(spark.read.parquet(snapshot.map(_.toString): _*))
+      val (fs, _) = fsOf(spark, dir)
+      snapshot.foreach(s => fs.delete(s, false))
+    }
   }
 
   /** Driver-side listing of the dir's compaction groups. Listing cost
@@ -105,19 +144,15 @@ object Maintenance {
         val groupDir = if (g.part.isEmpty) root else new Path(root, g.part)
         // snapshot: exactly these files are read and later deleted;
         // concurrent appends land new names and are left alone
-        val snapshot = fs.listStatus(groupDir)
-          .filter(st => st.isFile && !isHidden(st.getPath.getName))
-          .map(_.getPath)
+        val snapshot = dataFiles(spark, groupDir.toString)
         val nOut = math.max(1L, (g.bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        val df0 = spark.read.parquet(snapshot.map(_.toString).toIndexedSeq: _*)
+        val df0 = spark.read.parquet(snapshot.map(_.toString): _*)
         val df = (if (dedupCols.isEmpty) df0.dropDuplicates()
                   else df0.dropDuplicates(dedupCols))
           .coalesce(nOut)
         val tmp = new Path(tmpRoot, if (g.part.isEmpty) "root" else g.part)
         df.write.mode("overwrite").parquet(tmp.toString)
-        val outs = fs.listStatus(tmp)
-          .filter(st => st.isFile && !isHidden(st.getPath.getName))
-          .map(_.getPath)
+        val outs = dataFiles(spark, tmp.toString)
         // add-then-delete: land every compacted file before removing
         // any input (crash here = duplicates, healed next pass)
         outs.foreach(o => fs.rename(o, new Path(groupDir, o.getName)))

@@ -7,7 +7,8 @@ import graft.sources.Tables
 /** The inverted index at rest: serving equals the scan-time BM25
   * bit-for-bit, the postings read partition-prunes to the query's
   * buckets, and incremental maintenance (append + redelivery + the
-  * crash window's duplicate postings) never changes the answer. */
+  * crash window's duplicate postings + the segment fold) never
+  * changes the answer. */
 class InvertedIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,6 +30,58 @@ class InvertedIndexSpec extends SparkSpec {
   private def indexScores(d: String): Map[Long, Double] =
     InvertedIndex.scored(spark, d, terms)
       .as[(Long, Double)].collect().toMap
+
+  private def withMaxFiles[T](v: String)(f: => T): T = {
+    spark.conf.set("graft.index.compactMaxFiles", v)
+    try f finally spark.conf.unset("graft.index.compactMaxFiles")
+  }
+
+  private def segmentDir(d: String): String =
+    s"$d/postings/bucket=${InvertedIndex.SegmentBucket}"
+
+  private def segmentFiles(d: String): Seq[org.apache.hadoop.fs.Path] =
+    graft.plans.Maintenance.dataFiles(spark, segmentDir(d))
+
+  /** The `bucket=N` dirs of the bucket layout (the segment excluded). */
+  private def bucketDirs(d: String): Seq[String] =
+    graft.plans.Maintenance.groupStats(spark, s"$d/postings").map(_.part)
+      .filter(_ != s"bucket=${InvertedIndex.SegmentBucket}")
+
+  /** `doc_id % 3` slices appended one batch each. */
+  private def appendThirds(d: String): Unit = {
+    val docs = Tables.documents(spark, dir)
+    Seq(0L, 1L, 2L).foreach { sl =>
+      InvertedIndex.appendBatch(docs.filter(col("doc_id") % 3 === sl),
+        "doc_id", Seq("text"), d)
+    }
+  }
+
+  private def bits(rows: Seq[(Long, Double)]): Seq[(Long, Long)] =
+    rows.map { case (id, s) => id -> java.lang.Double.doubleToLongBits(s) }
+
+  /** Every kind of served answer, scores as raw double bits. */
+  private def answers(d: String): Seq[Iterable[Any]] = Seq(
+    bits(InvertedIndex.scored(spark, d, terms).as[(Long, Double)]
+      .collect().toSeq).toSet,
+    bits(InvertedIndex.topK(spark, d, terms, k = 20).as[(Long, Double)]
+      .collect().toSeq),
+    InvertedIndex.booleanQuery(spark, d, Seq("dup", "window"), Seq("vector"))
+      .as[(Long, Long)].collect().toSet,
+    InvertedIndex.phraseCount(spark, d, Seq("fast", "spark"))
+      .as[(Long, Long)].collect().toSet,
+    InvertedIndex.minSpan(spark, d, Seq("fast", "spark"))
+      .as[(Long, Long)].collect().toSet)
+
+  /** The index over the corpus, three ways: one-shot, appended with no
+    * fold (the default threshold), appended with the third batch
+    * folding the segment into the buckets (threshold 2). */
+  private lazy val (oneShotIdx, youngIdx, foldedIdx) = {
+    val young = java.nio.file.Files.createTempDirectory("graft-idx-yg").toString
+    val folded = java.nio.file.Files.createTempDirectory("graft-idx-fd").toString
+    appendThirds(young)
+    withMaxFiles("2")(appendThirds(folded))
+    (freshIndex(), young, folded)
+  }
 
   test("index-served scores are bit-identical to the scan path") {
     val d = freshIndex()
@@ -64,6 +117,101 @@ class InvertedIndexSpec extends SparkSpec {
     assert(dirs.nonEmpty && dirs.length <= terms.length,
       s"expected ≤${terms.length} bucket dirs, touched ${dirs.length}")
     assert(dirs.forall(_.contains("bucket=")), dirs.mkString(","))
+    // the LISTING is pruned too: the scan's file index is rooted at the
+    // query's bucket dirs, never at the 64-dir postings root
+    val roots = pruned.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths
+    }.flatten
+    assert(roots.nonEmpty && roots.length <= terms.length &&
+      roots.forall(_.getName.startsWith("bucket=")), roots.mkString(","))
+    // the driver-side bucket ids naming those dirs are bucketOf's
+    val probe = terms ++ Seq("", "ünïcödé", "日本語", "a" * 100)
+    val viaSpark = spark.range(1)
+      .select(probe.map(t => InvertedIndex.bucketOf(lit(t), 64)): _*).head()
+    probe.zipWithIndex.foreach { case (t, i) =>
+      assert(InvertedIndex.bucketId(t, 64) == viaSpark.getInt(i), t)
+    }
+  }
+
+  test("appendBatch lands a batch as one segment file; buckets untouched") {
+    val d = java.nio.file.Files.createTempDirectory("graft-idx-seg").toString
+    val docs = Tables.documents(spark, dir)
+    InvertedIndex.writeIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id",
+      Seq("text"), d)
+    def dataFiles(t: Map[String, Seq[Byte]]): Set[String] = t.keySet
+      .filterNot(_.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
+    def inBuckets(t: Map[String, Seq[Byte]]) = t.filter { case (f, _) =>
+      !f.startsWith(s"bucket=${InvertedIndex.SegmentBucket}/") }
+    val before = treeBytes(s"$d/postings")
+    InvertedIndex.appendBatch(docs.filter(col("doc_id") % 2 === 1).limit(5),
+      "doc_id", Seq("text"), d)
+    val after = treeBytes(s"$d/postings")
+    val added = dataFiles(after) -- dataFiles(before)
+    assert(added.size == 1 &&
+      added.head.startsWith(s"bucket=${InvertedIndex.SegmentBucket}/"),
+      added.mkString(","))
+    assert(inBuckets(after) == inBuckets(before),
+      "no bucket dir may gain, lose or change a file")
+  }
+
+  test("appended index answers equal the one-shot build, before and after a fold") {
+    assert(segmentFiles(youngIdx).nonEmpty && bucketDirs(youngIdx).isEmpty,
+      "default threshold: three batches stay in the segment")
+    assert(segmentFiles(foldedIdx).isEmpty && bucketDirs(foldedIdx).nonEmpty,
+      "threshold 2: the third batch folds the segment into the buckets")
+    val want = answers(oneShotIdx)
+    assert(want.forall(_.nonEmpty), "every query kind must have answers to compare")
+    assert(answers(youngIdx) == want)
+    assert(answers(foldedIdx) == want)
+  }
+
+  test("crash between the fold's write and its delete heals read-side") {
+    val d = java.nio.file.Files.createTempDirectory("graft-idx-fc").toString
+    withMaxFiles("2")(appendThirds(d))
+    // the crash residue: every segment row back beside its folded copy
+    // (the unfolded twin's segment holds exactly those rows)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(segmentDir(d)))
+    segmentFiles(youngIdx).foreach { f =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(f.toUri),
+        java.nio.file.Paths.get(segmentDir(d), f.getName))
+    }
+    assert(segmentFiles(d).nonEmpty && bucketDirs(d).nonEmpty)
+    assert(answers(d) == answers(oneShotIdx))
+  }
+
+  test("the fold bounds the segment across appends, answers unchanged") {
+    val d = java.nio.file.Files.createTempDirectory("graft-idx-bd").toString
+    val docs = Tables.documents(spark, dir)
+    withMaxFiles("3") {
+      (0L until 10L).foreach { sl =>
+        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 10 === sl),
+          "doc_id", Seq("text"), d)
+        assert(segmentFiles(d).length <= 3, s"after batch $sl")
+        val ref = java.nio.file.Files.createTempDirectory("graft-idx-br").toString
+        InvertedIndex.writeIndex(docs.filter(col("doc_id") % 10 <= sl),
+          "doc_id", Seq("text"), ref)
+        assert(bits(indexScores(d).toSeq).toSet == bits(indexScores(ref).toSeq).toSet,
+          s"after batch $sl")
+      }
+    }
+    assert(bucketDirs(d).nonEmpty, "ten batches past threshold 3 must fold")
+  }
+
+  test("a malformed compactMaxFiles fails appendBatch before any write") {
+    val d = java.nio.file.Files.createTempDirectory("graft-idx-bad").toString
+    val docs = Tables.documents(spark, dir)
+    InvertedIndex.appendBatch(docs.filter(col("doc_id") % 2 === 0),
+      "doc_id", Seq("text"), d)
+    val before = treeBytes(d)
+    val ex = withMaxFiles("twelve") {
+      intercept[IllegalArgumentException] {
+        InvertedIndex.appendBatch(docs.filter(col("doc_id") % 2 === 1),
+          "doc_id", Seq("text"), d)
+      }
+    }
+    assert(ex.getMessage.contains("graft.index.compactMaxFiles"), ex.getMessage)
+    assert(treeBytes(d) == before, "the index dir must be byte-unchanged")
   }
 
   test("incremental build + full redelivery serves the one-shot answer") {

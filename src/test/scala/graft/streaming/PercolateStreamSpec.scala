@@ -47,6 +47,21 @@ class PercolateStreamSpec extends SparkSpec {
     assert(spark.read.parquet(target).count() == 4L) // no dup rows either
   }
 
+  test("a malformed compactMaxFiles fails the batch before any write") {
+    val queries = stored.toDF("query_id", "terms")
+    val (target, _) = dirs()
+    Search.percolateDeltaBatch(Seq((1L, "alpha beta gamma")).toDF("doc_id", "text"),
+      "doc_id", Seq("text"), queries, target)
+    val before = treeBytes(target)
+    spark.conf.set("graft.percolate.compactMaxFiles", "twelve")
+    val ex = try intercept[IllegalArgumentException] {
+      Search.percolateDeltaBatch(Seq((3L, "gamma ray")).toDF("doc_id", "text"),
+        "doc_id", Seq("text"), queries, target)
+    } finally spark.conf.unset("graft.percolate.compactMaxFiles")
+    assert(ex.getMessage.contains("graft.percolate.compactMaxFiles"), ex.getMessage)
+    assert(treeBytes(target) == before, "the alert log must be byte-unchanged")
+  }
+
   test("auto-compaction bounds the alert log's files, alerts unchanged") {
     // round 17: percolateDeltaBatch's threshold-triggered compaction —
     // the standing alert log is re-read every micro-batch, so its
