@@ -38,9 +38,11 @@ import org.apache.spark.sql.functions._
   *    segment. Like an ES merge, the maintenance pass FOLDS the segment
   *    into the bucket layout (re-bucketed by [[writeIndex]]'s clustered
   *    write, then the folded files deleted) once it holds more than
-  *    `graft.index.compactMaxFiles` files (default 12) — so a serve
-  *    read scans a bounded segment, and a long-lived index writes
-  *    ~1 + numBuckets/threshold files per batch instead of numBuckets.
+  *    `graft.index.compactMaxFiles` files (default 12; a value ≤ 0
+  *    turns off only the in-place compaction, and the fold keeps the
+  *    default) — so a serve read scans a bounded segment, and a
+  *    long-lived index writes ~1 + numBuckets/threshold files per
+  *    batch instead of numBuckets.
   *    The stats ledger folds additively (StatsLedger's algebra: N and
   *    Σdl are sums), and the card-family crash contract holds: batches
   *    dedup against a seen-ids ledger (redelivery folds nothing),
@@ -202,9 +204,8 @@ object InvertedIndex {
     * append as one segment and a stats partial appends; a seen-ids
     * ledger (landing LAST) makes redelivery fold nothing. Safe to
     * call on an empty `dir` — the first batch creates the index.
-    * `graft.index.compactMaxFiles` ≤ 0 turns off the segment fold
-    * along with compaction, so every read then scans every segment
-    * file ever appended. */
+    * `graft.index.compactMaxFiles` ≤ 0 turns off in-place compaction;
+    * the segment still folds at the default threshold. */
   def appendBatch(batch: DataFrame, idCol: String, fields: Seq[String],
                   dir: String, numBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
@@ -260,12 +261,11 @@ object InvertedIndex {
       // few files, deduplicating on the exact natural keys the read
       // side already heals on — so a compacted index reads
       // byte-identically. `graft.index.compactMaxFiles` ≤ 0 disables
-      // both; the default keeps serve reads at O(1) files per bucket
-      // across stream lifetimes.
+      // the compaction only: the segment still folds at the default
+      // threshold, so serve reads stay pruned to their buckets.
+      foldSegment(spark, dir,
+        if (maxFiles > 0) maxFiles else graft.plans.Maintenance.DefaultMaxFiles)
       if (maxFiles > 0) {
-        graft.plans.Maintenance.fold(spark, segmentDir(dir), maxFiles) {
-          writeBucketed(_, dir, numBuckets, "append")
-        }
         graft.plans.Maintenance.compact(spark, s"$dir/postings",
           Seq("term", "doc_id"), maxFiles)
         graft.plans.Maintenance.compact(spark, s"$dir/stats",
@@ -295,6 +295,18 @@ object InvertedIndex {
   private def segmentDir(dir: String): String =
     s"$dir/postings/bucket=$SegmentBucket"
 
+  /** The ES merge: once the [[appendBatch]] segment holds more than
+    * `maxFiles` files (0: any), its rows are written into their
+    * buckets with [[writeIndex]]'s clustered write and the folded
+    * files deleted ([[graft.plans.Maintenance.fold]]'s add-then-delete
+    * contract). appendBatch runs it after every batch; it is also a
+    * manual maintenance pass, like `Maintenance.compact`. */
+  def foldSegment(spark: SparkSession, dir: String,
+                  maxFiles: Int = graft.plans.Maintenance.DefaultMaxFiles): Unit =
+    graft.plans.Maintenance.fold(spark, segmentDir(dir), maxFiles) {
+      writeBucketed(_, dir, storedNumBuckets(spark, dir, 64), "append")
+    }
+
   /** The pruned postings read for a term set: the query terms' buckets
     * plus the [[appendBatch]] segment partition (the unfolded recent
     * batches, bounded by the fold threshold). Only those partition
@@ -305,18 +317,36 @@ object InvertedIndex {
     * literals as well, so partition pruning keeps the scan
     * posting-list-sized either way. The `dropDuplicates` heals the
     * crash windows: postings re-appended by a retried batch, and
-    * segment rows already folded into their buckets. */
+    * segment rows already folded into their buckets.
+    *
+    * A fold running meanwhile moves segment rows into a bucket dir
+    * this read may have found empty before the fold wrote it. The
+    * fold deletes segment files only after their rows have landed, so
+    * the read lists the segment before anything else and again after
+    * its own listing: while no file of the first listing has gone the
+    * read saw every folded row in the segment; otherwise it lists
+    * again (a few times, then fails loudly rather than miss rows). */
   def readPostings(spark: SparkSession, dir: String, terms: Seq[String],
                    numBuckets: Int): DataFrame = {
     val ts = terms.map(_.toLowerCase)
     val root = s"$dir/postings"
-    val parts = (SegmentBucket +: ts.map(bucketId(_, numBuckets))).distinct
-      .map(b => s"$root/bucket=$b")
-      .filter(graft.plans.Maintenance.dataFiles(spark, _).nonEmpty)
-    val all =
-      if (parts.isEmpty) spark.read.parquet(root)
-      else spark.read.option("basePath", root).parquet(parts: _*)
-    all.filter((lit(SegmentBucket) +: ts.map(t => bucketOf(lit(t), numBuckets)))
+    val segment = segmentDir(dir)
+    def segmentFiles = graft.plans.Maintenance.dataFiles(spark, segment).toSet
+    def listed(attempts: Int): DataFrame = {
+      val seg = segmentFiles
+      val parts = (if (seg.isEmpty) Nil else Seq(segment)) ++
+        ts.map(t => s"$root/bucket=${bucketId(t, numBuckets)}").distinct
+          .filter(graft.plans.Maintenance.dataFiles(spark, _).nonEmpty)
+      // the listing happens here, when the read is built
+      val all =
+        if (parts.isEmpty) spark.read.parquet(root)
+        else spark.read.option("basePath", root).parquet(parts: _*)
+      if (seg.subsetOf(segmentFiles)) all
+      else if (attempts > 1) listed(attempts - 1)
+      else throw new IllegalStateException(
+        s"postings segment $segment kept being folded during the read")
+    }
+    listed(3).filter((lit(SegmentBucket) +: ts.map(t => bucketOf(lit(t), numBuckets)))
         .map(col("bucket") === _).reduce(_ || _))
       .filter(col("term").isin(ts: _*))
       .dropDuplicates("term", "doc_id")

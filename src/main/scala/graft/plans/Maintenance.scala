@@ -51,14 +51,17 @@ object Maintenance {
   private def isHidden(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
 
+  /** The sinks' file-count threshold when their conf is unset. */
+  val DefaultMaxFiles: Int = 12
+
   /** A sink's compaction threshold `key` (`graft.index.compactMaxFiles`,
-    * `graft.percolate.compactMaxFiles`; default 12, ≤ 0 disables).
-    * Sinks read it BEFORE their first write: a malformed value that
-    * only threw after the batch's ledger landed would fail every
-    * micro-batch past its commit, so the stream would retry forever
-    * and never run maintenance. */
+    * `graft.percolate.compactMaxFiles`; default [[DefaultMaxFiles]],
+    * ≤ 0 disables in-place compaction). Sinks read it BEFORE their
+    * first write: a malformed value that only threw after the batch's
+    * ledger landed would fail every micro-batch past its commit, so
+    * the stream would retry forever and never run maintenance. */
   def maxFilesConf(spark: SparkSession, key: String): Int =
-    spark.conf.getOption(key).fold(12) { s =>
+    spark.conf.getOption(key).fold(DefaultMaxFiles) { s =>
       s.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
         s"$key must be an integer file count, got '$s'"))
     }
@@ -92,7 +95,10 @@ object Maintenance {
     * then exactly the snapshot is deleted. Same add-then-delete
     * contract as [[compact]] — files appended mid-fold wait for the
     * next pass, and a crash between the rewrite and the delete leaves
-    * duplicates for the reader's natural-key dedup. */
+    * duplicates for the reader's natural-key dedup. Unlike compact it
+    * moves rows BETWEEN dirs, so a reader that lists the group and the
+    * rewrite's target separately must list the group again after its
+    * own listing (see [[graft.operators.InvertedIndex.readPostings]]). */
   def fold(spark: SparkSession, dir: String, maxFiles: Int)
           (rewrite: org.apache.spark.sql.DataFrame => Unit): Unit = {
     val snapshot = dataFiles(spark, dir)

@@ -180,6 +180,30 @@ class InvertedIndexSpec extends SparkSpec {
     assert(answers(d) == answers(oneShotIdx))
   }
 
+  test("a fold landing between readPostings' listings hides no rows") {
+    val d = java.nio.file.Files.createTempDirectory("graft-idx-race").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(youngIdx),
+      new java.io.File(d))
+    // a concurrent fold as the read sees it: the first bucket dir the
+    // read checks is still missing, then the fold lands every bucket
+    // (the folded twin's) and deletes the segment files
+    FoldRaceFs.foldAtNextBucketCheck = Some { () =>
+      bucketDirs(foldedIdx).foreach { b =>
+        org.apache.commons.io.FileUtils.copyDirectory(
+          new java.io.File(s"$foldedIdx/postings", b),
+          new java.io.File(s"$d/postings", b))
+      }
+      segmentFiles(d).foreach(f => java.nio.file.Files.delete(
+        java.nio.file.Paths.get(f.toUri)))
+    }
+    spark.sparkContext.hadoopConfiguration.set("fs.foldrace.impl",
+      classOf[FoldRaceFs].getName)
+    val got = try indexScores(s"foldrace://$d")
+      finally FoldRaceFs.foldAtNextBucketCheck = None
+    assert(segmentFiles(d).isEmpty, "the fold must have landed mid-read")
+    assert(bits(got.toSeq).toSet == bits(indexScores(oneShotIdx).toSeq).toSet)
+  }
+
   test("the fold bounds the segment across appends, answers unchanged") {
     val d = java.nio.file.Files.createTempDirectory("graft-idx-bd").toString
     val docs = Tables.documents(spark, dir)
@@ -380,18 +404,40 @@ class InvertedIndexSpec extends SparkSpec {
     // (the auto-trigger has its own test below)
     spark.conf.set("graft.index.compactMaxFiles", "0")
     try {
-      // many tiny batches → many small posting files per bucket
+      // many tiny batches, each folded at once → many small posting
+      // files per bucket, none left in the segment
       (0L until 6L).foreach { sl =>
         InvertedIndex.appendBatch(docs.filter(col("doc_id") % 6 === sl),
           "doc_id", Seq("text"), inc)
+        InvertedIndex.foldSegment(spark, inc, maxFiles = 0)
       }
+      def groupFiles = graft.plans.Maintenance.groupStats(spark,
+        s"$inc/postings").map(_.files)
+      assert(segmentFiles(inc).isEmpty && groupFiles.max > 1)
       val before = indexScores(inc)
       val report = graft.plans.Maintenance.compact(spark,
         s"$inc/postings", Seq("term", "doc_id"), maxFiles = 1)
       assert(report.compacted > 0 && report.filesAfter < report.filesBefore,
         report.toString)
+      assert(groupFiles.max == 1, "every bucket compacted to one file")
       assert(indexScores(inc) == before)
     } finally spark.conf.unset("graft.index.compactMaxFiles")
+  }
+
+  test("compactMaxFiles 0 keeps folding the segment at the default threshold") {
+    val d = java.nio.file.Files.createTempDirectory("graft-idx-nc").toString
+    val docs = Tables.documents(spark, dir)
+    val n = graft.plans.Maintenance.DefaultMaxFiles + 1
+    withMaxFiles("0") {
+      (0 until n).foreach { sl =>
+        InvertedIndex.appendBatch(docs.filter(col("doc_id") % n === sl),
+          "doc_id", Seq("text"), d)
+        if (sl == n - 2)
+          assert(segmentFiles(d).length == n - 1 && bucketDirs(d).isEmpty)
+      }
+    }
+    assert(segmentFiles(d).isEmpty && bucketDirs(d).nonEmpty)
+    assert(answers(d) == answers(oneShotIdx))
   }
 
   test("appendBatch auto-compaction bounds file counts, same answer") {
@@ -481,5 +527,30 @@ class InvertedIndexSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       assert(got == want, s"seed $seed")
     }
+  }
+}
+
+/** The local file system under the `foldrace` scheme, with a hook that
+  * runs once right after the next existence check of a `bucket=N` dir
+  * (the segment's excluded); the check still answers as it found the
+  * dir before the hook ran. */
+class FoldRaceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("foldrace:///")
+  override def getScheme: String = "foldrace"
+  override def exists(p: org.apache.hadoop.fs.Path): Boolean = {
+    val found = super.exists(p)
+    if (p.getName.startsWith("bucket=") &&
+        p.getName != s"bucket=${InvertedIndex.SegmentBucket}")
+      FoldRaceFs.fire()
+    found
+  }
+}
+
+object FoldRaceFs {
+  @volatile var foldAtNextBucketCheck: Option[() => Unit] = None
+  def fire(): Unit = synchronized {
+    val hook = foldAtNextBucketCheck
+    foldAtNextBucketCheck = None
+    hook.foreach(_())
   }
 }
