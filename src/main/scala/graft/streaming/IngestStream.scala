@@ -18,15 +18,21 @@ import graft.operators.{Dedup, Envelope, Validate}
   *
   *   - transport = any streaming DataFrame (kafka source in prod, file
   *     or MemoryStream in tests — same plan either way);
-  *   - T-3 dedup state = `dropDuplicates` over the key, bounded by a
-  *     `withWatermark` on event time (the reference's unbounded
-  *     processed-url set, made explicit and bounded);
-  *   - T-5 exactly-once effect = checkpointed micro-batches + an
+  *   - T-3 dedup = the sink's per-batch `dropDuplicates` + left-anti
+  *     join against the whole target (the reference's processed-url
+  *     set, read from the landed rows themselves): exactly-once over
+  *     all of history with no state store in the streaming plan;
+  *   - T-5 exactly-once effect = checkpointed micro-batches + that
   *     idempotent anti-join sink (foreachBatch), replacing the per-row
   *     read-before-write round-trips;
-  *   - T-4's silent 1-hour late-data loss becomes an explicit watermark
-  *     policy (documented divergence: nothing is silently skipped
-  *     within the watermark, everything older is *visibly* dropped).
+  *   - T-4's silent 1-hour late-data loss becomes an explicit, stateless
+  *     cut (documented divergence: nothing is silently skipped inside the
+  *     hour, everything older is *visibly* dropped). The sink drops a row
+  *     whose event time is at or before the newest event time in the
+  *     target minus [[LatenessMs]] — the boundary a 1-hour watermark
+  *     drew. The cut counts only rows that LANDED; the watermark it
+  *     replaces also counted duplicates and late rows, so a redelivered
+  *     key with a newer event time no longer moves the cut.
   */
 object IngestStream {
 
@@ -43,31 +49,45 @@ object IngestStream {
       .withColumn("key", concat(lit(sourceApi), lit("_"), col(urlCol)))
   }
 
-  /** T-3: watermark-bounded streaming dedup on the message key —
-    * duplicate keys arriving within the watermark window collapse to
-    * one row and state is evicted past the watermark (the bounded
-    * version of the reference's ever-growing processed-url set). */
-  def dedupStream(df: DataFrame, eventTimeCol: String, keyCol: String,
-                  lateness: String = "1 hour"): DataFrame =
-    df.withWatermark(eventTimeCol, lateness)
-      .dropDuplicatesWithinWatermark(keyCol)
+  /** T-4 lateness: how far behind the newest landed event time a row
+    * may be and still land. */
+  private val LatenessMs: Long = 60L * 60 * 1000
 
   /** T-5: idempotent landing sink — per micro-batch `dropDuplicates` +
     * left-anti against the target, then append (S-5/J-1..J-3 fused).
-    * Parquet target stands in for the Mongo collection. */
+    * Parquet target stands in for the Mongo collection. With
+    * `eventTimeCol`, late rows ([[dropLate]]) are dropped first, against
+    * the same target read. A target that exists but cannot be read
+    * fails the micro-batch ([[Dedup.readStateOr]]): landing against an
+    * empty key set would append every row again as a duplicate. */
   def idempotentSink(stream: DataFrame, targetDir: String, key: String,
-                     checkpointDir: String): DataStreamWriter[Row] =
+                     checkpointDir: String,
+                     eventTimeCol: Option[String] = None): DataStreamWriter[Row] =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val existing =
-          try spark.read.parquet(targetDir).select(col(key))
-          catch { case _: Exception => batch.limit(0).select(col(key)) }
-        Dedup.idempotentBatch(batch, existing, key)
+        val existing = Dedup.readStateOr(batch.sparkSession, targetDir, batch.limit(0))
+        val onTime = eventTimeCol.fold(batch)(dropLate(batch, existing, _))
+        Dedup.idempotentBatch(onTime, existing, key)
           .write.mode("append").parquet(targetDir)
         ()
       }
+
+  /** T-4, stateless: the rows of `batch` whose `eventTimeCol` is after
+    * the cut = newest event time in `existing`, truncated to the
+    * millisecond, minus [[LatenessMs]]. A row AT the cut is late, and a
+    * row with no event time is kept — the boundary of the watermark
+    * (`withWatermark` + a stateful operator) this replaces. An empty
+    * target has no cut. */
+  private def dropLate(batch: DataFrame, existing: DataFrame,
+                       eventTimeCol: String): DataFrame = {
+    val newest = existing.agg(max(col(eventTimeCol))).head()
+    if (newest.isNullAt(0)) batch
+    else {
+      val cut = new java.sql.Timestamp(newest.getTimestamp(0).getTime - LatenessMs)
+      batch.filter(col(eventTimeCol).isNull || col(eventTimeCol) > lit(cut))
+    }
+  }
 
   /** T-1: the producer cadence (5 min in prod; tests use availableNow). */
   def withProducerTrigger[T](w: DataStreamWriter[T],
@@ -105,14 +125,23 @@ object IngestStream {
       .start()
 
   /** Full landing pipeline for tests/local: stream → validate/envelope →
-    * watermark dedup → idempotent parquet sink, processed availableNow. */
+    * idempotent parquet sink with the late cut on `eventTimeCol`,
+    * processed availableNow. The plan holds no stateful operator, so
+    * each trigger runs one micro-batch per batch of new input and no
+    * state-eviction (no-data) batch.
+    *
+    * UPGRADE NOTE (stateless landing): a checkpoint written by the
+    * earlier plan (watermark + `dropDuplicatesWithinWatermark`) carries
+    * state-store metadata the stateless plan does not match, so resuming
+    * it fails with `STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA`.
+    * Operationally: restart each standing landing stream on a FRESH
+    * checkpoint dir over the SAME target. The source replays from its
+    * start, and the anti-join against the target lands nothing twice. */
   def runLanding(stream: DataFrame, sourceApi: String, urlCol: String,
                  eventTimeCol: String, targetDir: String,
-                 checkpointDir: String, requiredCols: String*): StreamingQuery = {
-    val shaped = producerTransform(stream, sourceApi, urlCol, requiredCols: _*)
-    val deduped = dedupStream(shaped, eventTimeCol, "key")
-    idempotentSink(deduped, targetDir, "key", checkpointDir)
+                 checkpointDir: String, requiredCols: String*): StreamingQuery =
+    idempotentSink(producerTransform(stream, sourceApi, urlCol, requiredCols: _*),
+      targetDir, "key", checkpointDir, Some(eventTimeCol))
       .trigger(Trigger.AvailableNow())
       .start()
-  }
 }

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSpec
 
@@ -101,6 +102,142 @@ class IngestStreamSpec extends SparkSpec {
     val after = spark.read.parquet(target)
     assert(after.count() == 3)
     assert(after.filter($"key" === "newsapi_https://ex.com/good").count() == 1)
+  }
+
+  private def landOnce(mem: MemoryStream[Msg], target: String, ckpt: String): Unit =
+    IngestStream.runLanding(mem.toDF(), "newsapi", "url", "ts",
+      target, ckpt, "title").awaitTermination()
+
+  private def landedKeys(target: String): Seq[String] =
+    spark.read.parquet(target).select("key").as[String].collect().toSeq.sorted
+
+  private def keysOf(paths: String*): Seq[String] =
+    paths.map(p => s"newsapi_https://ex.com/$p")
+
+  /** Entries of `dir` other than markers and checksums. */
+  private def dataFiles(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).toSet.flatten
+      .filterNot(f => f.startsWith("_") || f.startsWith("."))
+
+  test("late rule: a row at or before (newest landed - 1 hour) does not land") {
+    implicit val sqlCtx = spark.sqlContext
+    val target = Files.createTempDirectory("graft-late").toString + "/t"
+    val ckpt = Files.createTempDirectory("graft-late-ckpt").toString
+    val mem = MemoryStream[Msg]
+    def m(u: String, t: String) = Msg(s"https://ex.com/$u", u, ts(t))
+
+    // the first batch has no cut: an empty target bounds nothing
+    mem.addData(m("a", "2024-01-01 10:00:00.0005"), m("old", "2023-01-01 00:00:00"))
+    landOnce(mem, target, ckpt)
+    assert(landedKeys(target) == keysOf("a", "old"))
+
+    // newest landed = 10:00:00.0005, truncated to the ms → cut 09:00:00.000
+    mem.addData(
+      m("at", "2024-01-01 09:00:00"),               // at the cut: late
+      m("before", "2024-01-01 08:59:59.999999"),    // older: late
+      m("in1us", "2024-01-01 09:00:00.000001"),     // just inside
+      m("in400us", "2024-01-01 09:00:00.0004"),     // inside only if max is ms-truncated
+      m("new", "2024-01-01 11:00:00"))
+    landOnce(mem, target, ckpt)
+    assert(landedKeys(target) == keysOf("a", "in1us", "in400us", "new", "old"))
+
+    // the cut moves with what landed: newest is now 11:00 → cut 10:00
+    mem.addData(m("at2", "2024-01-01 10:00:00"), m("in2", "2024-01-01 10:00:00.001"))
+    landOnce(mem, target, ckpt)
+    assert(landedKeys(target) == keysOf("a", "in1us", "in2", "in400us", "new", "old"))
+  }
+
+  test("one micro-batch per trigger: one commit, one data file, no state store") {
+    implicit val sqlCtx = spark.sqlContext
+    val target = Files.createTempDirectory("graft-one").toString + "/t"
+    val ckpt = Files.createTempDirectory("graft-one-ckpt").toString
+    val mem = MemoryStream[Msg]
+    def commits = Option(new java.io.File(ckpt, "commits").list()).toSeq.flatten
+      .filterNot(_.startsWith("."))
+
+    mem.addData(Msg("https://ex.com/a", "A", ts("2024-01-01 10:00:00")),
+      Msg("https://ex.com/b", "B", ts("2024-01-01 10:01:00")))
+    landOnce(mem, target, ckpt)
+    assert(commits.size == 1)
+    val first = dataFiles(target)
+    assert(first.size == 1)
+
+    mem.addData(Msg("https://ex.com/c", "C", ts("2024-01-01 10:02:00")),
+      Msg("https://ex.com/a", "A again", ts("2024-01-01 10:03:00")))
+    landOnce(mem, target, ckpt)
+    assert(commits.size == 2)
+    val added = dataFiles(target) -- first
+    assert(added.size == 1)
+    // the added file holds the new row: it is not an empty (no-data) write
+    assert(spark.read.parquet(s"$target/${added.head}").count() == 1)
+    assert(!new java.io.File(ckpt, "state").exists())
+  }
+
+  test("an unreadable target fails the batch and is left byte-unchanged") {
+    implicit val sqlCtx = spark.sqlContext
+    def corruptTarget(): String = {
+      val target = Files.createTempDirectory("graft-corrupt").toString + "/t"
+      Files.createDirectories(java.nio.file.Paths.get(target))
+      Files.write(java.nio.file.Paths.get(target, "part-00000-corrupt.snappy.parquet"),
+        "not a parquet file".getBytes("UTF-8"))
+      target
+    }
+
+    val landTarget = corruptTarget()
+    val before = treeBytes(landTarget)
+    val mem = MemoryStream[Msg]
+    mem.addData(Msg("https://ex.com/a", "A", ts("2024-01-01 10:00:00")))
+    intercept[StreamingQueryException] {
+      landOnce(mem, landTarget, Files.createTempDirectory("graft-corrupt-ckpt").toString)
+    }
+    assert(treeBytes(landTarget) == before)
+
+    val pubTarget = corruptTarget()
+    val pubBefore = treeBytes(pubTarget)
+    val raw = MemoryStream[RawArticle]
+    raw.addData(RawArticle("https://ex.com/good", "Great news", "wonderful",
+      "the best", ts("2024-01-01 10:00:00")))
+    val analyzed = graft.plans.BatchPipeline.analyze(
+      raw.toDF().select(lit("newsapi").as("source_api"), $"ts".as("fetched_at"),
+        struct($"url", $"title", $"description", $"content").as("article")))
+    intercept[StreamingQueryException] {
+      IngestStream.runProcessedPublish(analyzed, pubTarget,
+        Files.createTempDirectory("graft-corrupt-pub-ckpt").toString).awaitTermination()
+    }
+    assert(treeBytes(pubTarget) == pubBefore)
+  }
+
+  test("upgrade: a stateful-plan checkpoint resumes on a fresh checkpoint dir") {
+    implicit val sqlCtx = spark.sqlContext
+    val target = Files.createTempDirectory("graft-upg").toString + "/t"
+    val oldCkpt = Files.createTempDirectory("graft-upg-old").toString
+    val mem = MemoryStream[Msg]
+    mem.addData(Msg("https://ex.com/a", "A", ts("2024-01-01 10:00:00")),
+      Msg("https://ex.com/b", "B", ts("2024-01-01 10:01:00")))
+
+    // the earlier landing plan: watermark-bounded state-store dedup
+    // ahead of the same sink
+    val shaped = IngestStream.producerTransform(mem.toDF(), "newsapi", "url", "title")
+    IngestStream.idempotentSink(
+        shaped.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark("key"),
+        target, "key", oldCkpt)
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    assert(new java.io.File(oldCkpt, "state").exists())
+    assert(landedKeys(target).size == 2)
+
+    // the standing checkpoint does not resume under the stateless plan
+    mem.addData(Msg("https://ex.com/c", "C", ts("2024-01-01 10:02:00")))
+    intercept[StreamingQueryException] {
+      landOnce(mem, target, oldCkpt)
+    }
+
+    // the procedure: a fresh checkpoint over the same target; the source
+    // replays from its start (a, b again), plus new (c, d) and repeated (a)
+    mem.addData(Msg("https://ex.com/d", "D", ts("2024-01-01 10:03:00")),
+      Msg("https://ex.com/a", "A again", ts("2024-01-01 10:04:00")))
+    landOnce(mem, target, Files.createTempDirectory("graft-upg-new").toString)
+    assert(landedKeys(target) == keysOf("a", "b", "c", "d"))
   }
 
   test("producerTransform shapes the envelope like the reference") {
