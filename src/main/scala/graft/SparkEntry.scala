@@ -976,8 +976,8 @@ object SparkEntry {
           .reduce(StatsLedger.histMerge))
     }),
 
-    // The incremental card maintained BY the delta stream (batch form
-    // of cardDeltaSink, the x34/x35 pattern): three delta batches
+    // The incremental card maintained BY the delta stream (the
+    // cardDeltaBatch sink body, the x34/x35 pattern): three delta batches
     // cover the corpus, then batch 1 is REDELIVERED in full — the
     // seen-ids ledger folds in nothing, so the streamed card equals
     // the one-shot recompute and q108's replay is the oracle.

@@ -29,14 +29,17 @@ object Dedup {
   def dropDupes(df: DataFrame, key: String, more: String*): DataFrame =
     df.dropDuplicates(key +: more)
 
-  /** J-2/J-3: rows of `batch` whose `key` does not appear in
-    * `existing` — the idempotent-append precondition. */
-  def dedupAgainst(batch: DataFrame, existing: DataFrame, key: String): DataFrame =
-    batch.join(existing.select(col(key)).distinct(), Seq(key), "left_anti")
+  /** J-2/J-3: rows of `batch` whose `keys` do not appear in
+    * `existing` — the idempotent-append precondition. The build side is
+    * the pruned key columns as they are: duplicate keys there cannot
+    * change a left-anti join's answer, so no aggregate or shuffle is
+    * paid over the whole target. */
+  def dedupAgainst(batch: DataFrame, existing: DataFrame, keys: String*): DataFrame =
+    batch.join(existing.select(keys.map(col): _*), keys, "left_anti")
 
   /** J-1+J-2 fused: what the foreachBatch sink runs per micro-batch. */
-  def idempotentBatch(batch: DataFrame, existing: DataFrame, key: String): DataFrame =
-    dedupAgainst(dropDupes(batch, key), existing, key)
+  def idempotentBatch(batch: DataFrame, existing: DataFrame, keys: String*): DataFrame =
+    dedupAgainst(batch.dropDuplicates(keys), existing, keys: _*)
 
   /** Read `dir` as parquet when it holds committed state; `fallback`
     * when it does not (the first batch of an incremental pipeline,

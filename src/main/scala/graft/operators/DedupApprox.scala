@@ -346,41 +346,18 @@ object DedupApprox {
   }
 
   /** Effectively-once landing for [[minhashPairsAgainstStream]]
-    * verdicts: per micro-batch, the per-band duplicate rows collapse
-    * (`dropDuplicates` on the pair key) and the target is anti-joined
-    * before the append — the engine's S-5/S-8 idempotent machinery
-    * ([[Dedup.idempotentBatch]]) applied to the verdict stream, which
-    * upgrades its documented at-least-once contract to
-    * effectively-once: a redelivered micro-batch (or a delta doc
-    * replayed in a later batch) lands nothing new. The anti-join
-    * build side is one pruned synthetic-key column of the standing
-    * verdict table — the same cost class as the landing sink. */
-  def minhashVerdictSink(verdicts: DataFrame, targetDir: String,
-                         checkpointDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    verdicts.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        minhashVerdictBatch(batch, targetDir)
-      }
-
-  /** One [[minhashVerdictSink]] micro-batch, callable directly (the
-    * soak suite drives the exact sink body through fault
-    * interleavings the MemoryStream harness cannot inject). */
-  def minhashVerdictBatch(batch: DataFrame, targetDir: String): Unit = {
-    val spark = batch.sparkSession
-    def keyed(df: DataFrame): DataFrame = df.withColumn("__vk",
-      concat_ws(":", col("new_id"), col("idx_id")))
-    val kb = keyed(batch)
-    // missing-path → first batch; any other read failure must fail
-    // the micro-batch (retry) rather than land vs an empty target
-    val existing = keyed(Dedup.readStateOr(spark, targetDir,
-      batch.limit(0))).select(col("__vk"))
-    Dedup.idempotentBatch(kb, existing, "__vk")
-      .drop("__vk")
-      .write.mode("append").parquet(targetDir)
-    ()
-  }
+    * verdicts, one micro-batch (a stream runs it through
+    * [[graft.plans.Ledger.sink]]; the soak suite drives it directly):
+    * the per-band duplicate rows collapse on the `(new_id, idx_id)`
+    * pair key and the target is anti-joined on it before the append
+    * ([[graft.plans.Ledger.land]]), which upgrades the candidate
+    * stream's at-least-once contract to effectively-once: a
+    * redelivered micro-batch (or a delta doc replayed in a later
+    * batch) lands nothing new. Null ids: the keys compare with SQL
+    * equality, so a pair with a null id matches no landed pair and
+    * lands again on every delivery. */
+  def minhashVerdictBatch(batch: DataFrame, targetDir: String): Unit =
+    graft.plans.Ledger.land(batch, targetDir, Seq("new_id", "idx_id"))
 
   /** MinHash+LSH candidate pairs verified by exact Jaccard.
     * Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Ledger
+
 /** Distribution-drift monitoring between two corpus slices — the
   * question behind every "did the feed change under us" alert the
   * reference's freshness watchdog (T-6) cannot answer: freshness says
@@ -121,34 +123,26 @@ object Drift {
       micro(ratio).as("norm_ratio_micro"))
   }
 
-  /** One micro-batch of the INCREMENTAL embedding-drift monitor —
-    * the [[driftDeltaBatch]] contract applied to the vector ledger:
-    * dedup on `idCol`, anti-join the seen-ids ledger (a redelivered
-    * batch lands nothing), append the delta's per-dim sums and slice
-    * counts tagged with `batchId` (the torn-append heal), ids last.
-    * Per-dim sums are plain BIGINT adds, so any fold order equals the
-    * one-shot [[embeddingDrift]] bit-for-bit. */
+  /** One micro-batch of the INCREMENTAL embedding-drift monitor: the
+    * delta's per-dim sums and slice counts, tagged with `batchId` (the
+    * torn-append heal), under [[graft.plans.Ledger]]'s seen-ids
+    * contract. Per-dim sums are plain BIGINT adds, so any fold order
+    * equals the one-shot [[embeddingDrift]] bit-for-bit. */
   def embDriftDeltaBatch(batch: DataFrame, idCol: String, vecCol: String,
                          inRef: Column, baseDir: String, batchId: Long,
                          quantScale: Double = 1000.0): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.dropDuplicates(idCol)
-    val seen = Dedup.readStateOr(spark, s"$baseDir/seenIds",
-      b.select(col(idCol)).limit(0))
-    val fresh = b.join(seen, Seq(idCol), "left_anti")
-      .localCheckpoint(eager = false) // materialized by the first consumer (round 16)
-    embDimSums(fresh, vecCol, inRef, quantScale)
-      .select(lit(batchId).as("batch_id"), col("__d"),
-        col("sa"), col("sb"))
-      .write.mode("append").parquet(s"$baseDir/dims")
-    fresh.agg(
-        sum(when(inRef, 1L).otherwise(0L)).as("n_a"),
-        sum(when(inRef, 0L).otherwise(1L)).as("n_b"))
-      .select(lit(batchId).as("batch_id"), col("n_a"), col("n_b"))
-      .write.mode("append").parquet(s"$baseDir/counts")
-    fresh.select(col(idCol)).write.mode("append")
-      .parquet(s"$baseDir/seenIds")
-    fresh.unpersist()
+    val idsDir = s"$baseDir/seenIds"
+    val fresh = Ledger.fresh(batch, idCol, idsDir)
+    Ledger.commit(fresh, col(idCol), idsDir)(
+      () => embDimSums(fresh, vecCol, inRef, quantScale)
+        .select(lit(batchId).as("batch_id"), col("__d"),
+          col("sa"), col("sb"))
+        .write.mode("append").parquet(s"$baseDir/dims"),
+      () => fresh.agg(
+          sum(when(inRef, 1L).otherwise(0L)).as("n_a"),
+          sum(when(inRef, 0L).otherwise(1L)).as("n_b"))
+        .select(lit(batchId).as("batch_id"), col("n_a"), col("n_b"))
+        .write.mode("append").parquet(s"$baseDir/counts"))
     ()
   }
 
@@ -253,31 +247,24 @@ object Drift {
         sum(col("jsd_c")).as("jsd_micro"))
   }
 
-  /** One micro-batch of the INCREMENTAL keyed drift monitor — the
-    * [[driftDeltaBatch]] contract with (key, bin) partials: dedup on
-    * `idCol`, anti-join the seen-ids ledger, append the delta's
-    * per-(key, bin) counts tagged with `batchId`, ids last. Counts
-    * merge as plain BIGINT adds, so any fold order reproduces the
-    * one-shot [[keyedDrift]] bit-for-bit. */
+  /** One micro-batch of the INCREMENTAL keyed drift monitor: the
+    * [[driftDeltaBatch]] partial per (key, bin), tagged with
+    * `batchId`, under [[graft.plans.Ledger]]'s seen-ids contract.
+    * Counts merge as plain BIGINT adds, so any fold order reproduces
+    * the one-shot [[keyedDrift]] bit-for-bit. */
   def keyedDriftDeltaBatch(batch: DataFrame, idCol: String, keyCol: String,
                            binCol: String, inRef: Column, baseDir: String,
                            batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.dropDuplicates(idCol)
-    val seen = Dedup.readStateOr(spark, s"$baseDir/seenIds",
-      b.select(col(idCol)).limit(0))
-    val fresh = b.join(seen, Seq(idCol), "left_anti")
-      .localCheckpoint(eager = false) // materialized by the first consumer (round 16)
-    fresh.groupBy(col(keyCol).as("key"), col(binCol).as("bin"))
-      .agg(
-        sum(when(inRef, 1L).otherwise(0L)).as("a_n"),
-        sum(when(inRef, 0L).otherwise(1L)).as("b_n"))
-      .select(lit(batchId).as("batch_id"), col("key"), col("bin"),
-        col("a_n"), col("b_n"))
-      .write.mode("append").parquet(s"$baseDir/bins")
-    fresh.select(col(idCol)).write.mode("append")
-      .parquet(s"$baseDir/seenIds")
-    fresh.unpersist()
+    val idsDir = s"$baseDir/seenIds"
+    val fresh = Ledger.fresh(batch, idCol, idsDir)
+    Ledger.commit(fresh, col(idCol), idsDir)(
+      () => fresh.groupBy(col(keyCol).as("key"), col(binCol).as("bin"))
+        .agg(
+          sum(when(inRef, 1L).otherwise(0L)).as("a_n"),
+          sum(when(inRef, 0L).otherwise(1L)).as("b_n"))
+        .select(lit(batchId).as("batch_id"), col("key"), col("bin"),
+          col("a_n"), col("b_n"))
+        .write.mode("append").parquet(s"$baseDir/bins"))
     ()
   }
 
@@ -291,36 +278,26 @@ object Drift {
         sum(col("a_n")).as("a_n"), sum(col("b_n")).as("b_n")))
 
   /** One micro-batch of the INCREMENTAL drift monitor: fold `batch`'s
-    * per-bin slice counts into the standing ledger at `baseDir`,
-    * effectively-once (the cardDeltaBatch contract): rows are
-    * deduped on `idCol`, anti-joined against the seen-ids ledger so a
-    * REDELIVERED batch lands nothing, partial counts append first and
-    * ids last (ledger-last heals a crash between the two appends —
-    * the crashed batch re-lands its counts idempotently because its
-    * ids were never committed). Counts are mergeable BIGINTs, so the
-    * fold is order-free and the final drift equals the one-shot
-    * [[slicedDrift]] bit-for-bit.
+    * per-bin slice counts, tagged with `batchId`, into the standing
+    * ledger at `baseDir` under [[graft.plans.Ledger]]'s seen-ids
+    * contract. Counts are mergeable BIGINTs, so the fold is order-free
+    * and the final drift equals the one-shot [[slicedDrift]]
+    * bit-for-bit.
     *
     * Scale shape per batch: one delta-sized shuffle (the bin groupBy)
     * + one anti-join probe of the id ledger; the standing state this
     * monitor keeps is ≤ |bins| rows per batch plus the id ledger. */
   def driftDeltaBatch(batch: DataFrame, idCol: String, binCol: String,
                       inRef: Column, baseDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.dropDuplicates(idCol)
-    val seen = Dedup.readStateOr(spark, s"$baseDir/seenIds",
-      b.select(col(idCol)).limit(0))
-    val fresh = b.join(seen, Seq(idCol), "left_anti")
-      .localCheckpoint(eager = false) // materialized by the first consumer (round 16)
-    fresh.groupBy(col(binCol).as("bin")).agg(
-        sum(when(inRef, 1L).otherwise(0L)).as("a_n"),
-        sum(when(inRef, 0L).otherwise(1L)).as("b_n"))
-      .select(lit(batchId).as("batch_id"), col("bin"),
-        col("a_n"), col("b_n"))
-      .write.mode("append").parquet(s"$baseDir/bins")
-    fresh.select(col(idCol)).write.mode("append")
-      .parquet(s"$baseDir/seenIds")
-    fresh.unpersist()
+    val idsDir = s"$baseDir/seenIds"
+    val fresh = Ledger.fresh(batch, idCol, idsDir)
+    Ledger.commit(fresh, col(idCol), idsDir)(
+      () => fresh.groupBy(col(binCol).as("bin")).agg(
+          sum(when(inRef, 1L).otherwise(0L)).as("a_n"),
+          sum(when(inRef, 0L).otherwise(1L)).as("b_n"))
+        .select(lit(batchId).as("batch_id"), col("bin"),
+          col("a_n"), col("b_n"))
+        .write.mode("append").parquet(s"$baseDir/bins"))
     ()
   }
 
@@ -338,18 +315,6 @@ object Drift {
       .dropDuplicates("batch_id", "bin")
       .groupBy(col("bin")).agg(
         sum(col("a_n")).as("a_n"), sum(col("b_n")).as("b_n")))
-
-  /** [[driftDeltaBatch]] as a stream sink — drift follows the ingest
-    * micro-batches, effectively-once (the engine redelivers a crashed
-    * batch under the same id, which is exactly what the heal needs). */
-  def driftDeltaSink(deltaStream: DataFrame, idCol: String, binCol: String,
-                     inRef: Column, baseDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deltaStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        driftDeltaBatch(b, idCol, binCol, inRef, baseDir, id)
-      }
 
   /** Shared tail: `(bin, a_n, b_n)` exact counts → smoothed PSI/JSD
     * contributions. The totals side is a single row, broadcast. The

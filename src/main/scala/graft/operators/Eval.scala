@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Ledger
+
 /** Classifier evaluation over labeled frames — the quality loop the
   * reference runs by eye (it combines two sentiment engines,
   * dags/sentiment_analysis_dag.py:75-81, but never measures how often
@@ -130,15 +132,12 @@ object Eval {
   }
 
   /** One micro-batch of the INCREMENTAL confusion matrix — the
-    * monitoring loop's eval twin of [[Drift.driftDeltaBatch]], under
-    * the same effectively-once ledger contract: rows dedup on
-    * `idCol`, anti-join the seen-ids ledger (a REDELIVERED batch
-    * lands nothing), the delta's per-(truth, pred) counts append
-    * FIRST tagged with `batchId`, ids LAST (the crash between the two
-    * appends re-lands an identical partial that the read-side
-    * `dropDuplicates(batch_id, truth, pred)` heals). Counts are
-    * mergeable BIGINTs, so any fold order reproduces the one-shot
-    * [[confusionMatrix]] bit-for-bit.
+    * monitoring loop's eval twin of [[Drift.driftDeltaBatch]]: the
+    * delta's per-(truth, pred) counts, tagged with `batchId`, under
+    * [[graft.plans.Ledger]]'s seen-ids contract (the read-side
+    * `dropDuplicates(batch_id, truth, pred)` heals a torn append).
+    * Counts are mergeable BIGINTs, so any fold order reproduces the
+    * one-shot [[confusionMatrix]] bit-for-bit.
     *
     * Scale shape per batch: one delta-sized map-side-combined shuffle
     * (≤ |classes|² partial rows) + one anti-join probe of the id
@@ -146,20 +145,14 @@ object Eval {
   def confusionDeltaBatch(batch: DataFrame, idCol: String,
                           truthCol: String, predCol: String,
                           baseDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.dropDuplicates(idCol)
-    val seen = Dedup.readStateOr(spark, s"$baseDir/seenIds",
-      b.select(col(idCol)).limit(0))
-    val fresh = b.join(seen, Seq(idCol), "left_anti")
-      .localCheckpoint(eager = false) // materialized by the first consumer (round 16)
-    fresh.groupBy(col(truthCol).as("truth"), col(predCol).as("pred"))
-      .agg(count(lit(1)).as("n"))
-      .select(lit(batchId).as("batch_id"), col("truth"), col("pred"),
-        col("n"))
-      .write.mode("append").parquet(s"$baseDir/cells")
-    fresh.select(col(idCol)).write.mode("append")
-      .parquet(s"$baseDir/seenIds")
-    fresh.unpersist()
+    val idsDir = s"$baseDir/seenIds"
+    val fresh = Ledger.fresh(batch, idCol, idsDir)
+    Ledger.commit(fresh, col(idCol), idsDir)(
+      () => fresh.groupBy(col(truthCol).as("truth"), col(predCol).as("pred"))
+        .agg(count(lit(1)).as("n"))
+        .select(lit(batchId).as("batch_id"), col("truth"), col("pred"),
+          col("n"))
+        .write.mode("append").parquet(s"$baseDir/cells"))
     ()
   }
 
@@ -229,31 +222,23 @@ object Eval {
   /** One micro-batch of the INCREMENTAL calibration ledger — every
     * per-bin quantity is additive (counts, a BIGINT confidence sum, a
     * DECIMAL(38,0) squared-error sum), so the monitoring loop's
-    * calibration folds under the standard effectively-once contract:
-    * id-dedup, seen-ledger anti-join (a redelivered batch's groupBy
-    * emits ZERO rows — nothing lands), bin partials tagged `batchId`
-    * append FIRST, ids LAST; torn appends re-land bit-identical
-    * partials that the read-side dedup folds once. */
+    * calibration folds its bin partials, tagged `batchId`, under
+    * [[graft.plans.Ledger]]'s seen-ids contract; torn appends re-land
+    * bit-identical partials that the read-side dedup folds once. */
   def calibrationDeltaBatch(batch: DataFrame, idCol: String,
                             confCol: Column, correctCol: Column,
                             baseDir: String, batchId: Long,
                             bins: Int = 10): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.dropDuplicates(idCol)
-    val seen = Dedup.readStateOr(spark, s"$baseDir/seenIds",
-      b.select(col(idCol)).limit(0))
-    val fresh = b.join(seen, Seq(idCol), "left_anti")
-      .localCheckpoint(eager = false) // materialized by the first consumer (round 16)
-    calibrationCells(fresh, confCol, correctCol, bins)
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"), sum(col("__c")).as("n_correct"),
-        sum(col("__cq")).as("sumq"), sum(col("__sq")).as("ssq"))
-      .select(lit(batchId).as("batch_id"), col("bin"), col("n"),
-        col("n_correct"), col("sumq"), col("ssq"))
-      .write.mode("append").parquet(s"$baseDir/cells")
-    fresh.select(col(idCol)).write.mode("append")
-      .parquet(s"$baseDir/seenIds")
-    fresh.unpersist()
+    val idsDir = s"$baseDir/seenIds"
+    val fresh = Ledger.fresh(batch, idCol, idsDir)
+    Ledger.commit(fresh, col(idCol), idsDir)(
+      () => calibrationCells(fresh, confCol, correctCol, bins)
+        .groupBy(col("bin"))
+        .agg(count(lit(1)).as("n"), sum(col("__c")).as("n_correct"),
+          sum(col("__cq")).as("sumq"), sum(col("__sq")).as("ssq"))
+        .select(lit(batchId).as("batch_id"), col("bin"), col("n"),
+          col("n_correct"), col("sumq"), col("ssq"))
+        .write.mode("append").parquet(s"$baseDir/cells"))
     ()
   }
 
@@ -268,38 +253,4 @@ object Eval {
         .groupBy(col("bin"))
         .agg(sum(col("n")).as("n"), sum(col("n_correct")).as("n_correct"),
           sum(col("sumq")).as("__sumq"), sum(col("ssq")).as("__ssq")))
-
-  /** [[confusionDeltaBatch]] as a stream sink — the live monitoring
-    * loop: each micro-batch of labeled predictions folds into the
-    * standing matrix effectively-once (Spark's replayed batch re-runs
-    * the same delta; the id ledger makes the replay land nothing). */
-  def confusionSink(labeledStream: DataFrame, idCol: String,
-                    truthCol: String, predCol: String, baseDir: String,
-                    checkpointDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    labeledStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        confusionDeltaBatch(b, idCol, truthCol, predCol, baseDir, bid)
-      }
-
-  /** [[calibrationDeltaBatch]] as a stream sink — live calibration
-    * monitoring: each micro-batch of (confidence, correctness) pairs
-    * folds into the standing per-bin ledger effectively-once (a
-    * replayed batch's anti-join lands nothing), and
-    * [[calibrationFromDirs]] serves the reliability-diagram report at
-    * any instant, bit-identical to re-scoring history in one shot.
-    * Same contract as [[confusionSink]]/[[graft.operators.Pca]]'s
-    * momentsSink: per-bin partials append FIRST, ids LAST; torn
-    * appends heal on the read side. */
-  def calibrationSink(labeledStream: DataFrame, idCol: String,
-                      confCol: Column, correctCol: Column, baseDir: String,
-                      checkpointDir: String, bins: Int = 10)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    labeledStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        calibrationDeltaBatch(b, idCol, confCol, correctCol, baseDir, bid,
-          bins)
-      }
 }

@@ -201,9 +201,10 @@ object InvertedIndex {
     }.reduce(_ unionByName _)
 
   /** Fold a delta batch into a standing index (ES `_bulk`): postings
-    * append as one segment and a stats partial appends; a seen-ids
-    * ledger (landing LAST) makes redelivery fold nothing. Safe to
-    * call on an empty `dir` — the first batch creates the index.
+    * append as one segment and a stats partial appends, under
+    * [[graft.plans.Ledger]]'s seen-ids contract (the ledger holds
+    * `doc_id`). Safe to call on an empty `dir` — the first batch
+    * creates the index.
     * `graft.index.compactMaxFiles` ≤ 0 turns off in-place compaction;
     * the segment still folds at the default threshold. */
   def appendBatch(batch: DataFrame, idCol: String, fields: Seq[String],
@@ -218,37 +219,32 @@ object InvertedIndex {
     require(stored == numBuckets,
       s"appendBatch numBuckets=$numBuckets does not match the standing " +
         s"index layout at $dir (num_buckets=$stored)")
-    val b = batch.dropDuplicates(idCol)
-    val seen = Dedup.readStateOr(spark, s"$dir/seenIds",
-      b.select(col(idCol).cast("long").as("doc_id")).limit(0))
-    // ONE analyzer pass per batch (round-16): the anti-joined fresh
-    // set is checkpointed WITH its token arrays, so the postings
-    // build and the stats partial read the same materialized tokens
-    // instead of each re-running the Porter pipeline over the batch
-    // text. The checkpoint is batch-sized by the micro-batch contract
-    // (this is the delta path; the one-shot corpus build is
-    // [[writeIndex]], which keeps the two-pass form rather than
-    // materialize corpus-sized token arrays).
-    val fresh = b.join(
-        seen.select(col("doc_id").as(idCol)), Seq(idCol), "left_anti")
-      .select(col(idCol), toks(fields).as("__toks"))
-      .localCheckpoint(eager = false) // materialized by the isEmpty probe
-    if (!fresh.isEmpty) {
-      // partials FIRST (crash re-appends heal read-side), ids LAST
-      fresh.select(col(idCol).cast("long").as("doc_id"),
+    // ONE analyzer pass per batch (round-16): the fresh set is
+    // checkpointed WITH its token arrays, so the postings build and
+    // the stats partial read the same materialized tokens instead of
+    // each re-running the Porter pipeline over the batch text. The
+    // checkpoint is batch-sized by the micro-batch contract (this is
+    // the delta path; the one-shot corpus build is [[writeIndex]],
+    // which keeps the two-pass form rather than materialize
+    // corpus-sized token arrays).
+    val fresh = graft.plans.Ledger.fresh(
+      batch.select(col(idCol), toks(fields).as("__toks")), idCol,
+      s"$dir/seenIds")
+    val landed = graft.plans.Ledger.commit(fresh,
+        col(idCol).cast("long").as("doc_id"), s"$dir/seenIds")(
+      () => fresh.select(col(idCol).cast("long").as("doc_id"),
           size(col("__toks")).cast("long").as("dl"),
           posexplode(col("__toks")).as(Seq("pos", "term")))
         .groupBy(col("term"), col("doc_id"))
         .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"),
           sort_array(collect_list(col("pos"))).as("positions"))
-        .write.mode("append").parquet(segmentDir(dir))
-      fresh.agg(count(lit(1)).as("n_docs"),
+        .write.mode("append").parquet(segmentDir(dir)),
+      () => fresh.agg(count(lit(1)).as("n_docs"),
           sum(size(col("__toks")).cast("long")).as("sum_dl"),
           statsBatchKey(col(idCol)))
         .withColumn("num_buckets", lit(numBuckets))
-        .write.mode("append").parquet(s"$dir/stats")
-      fresh.select(col(idCol).cast("long").as("doc_id"))
-        .write.mode("append").parquet(s"$dir/seenIds")
+        .write.mode("append").parquet(s"$dir/stats"))
+    if (landed) {
       // MAINTENANCE AT REST (guide §6 small-files), AFTER the ids
       // ledger (the documented single-maintainer pass, add-then-delete,
       // crash = duplicates healed read-side). Threshold-triggered: a
@@ -276,21 +272,6 @@ object InvertedIndex {
       }
     }
   }
-
-  /** The index maintained BY a stream — [[appendBatch]] per
-    * micro-batch (the ES `_bulk` consumer as a foreachBatch sink).
-    * Checkpointed micro-batch ids plus the seen-ids ledger give the
-    * usual effectively-once contract: a redelivered batch folds
-    * nothing, a half-landed batch heals read-side. */
-  def indexDeltaSink(deltaStream: DataFrame, idCol: String,
-                     fields: Seq[String], dir: String,
-                     checkpointDir: String, numBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deltaStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        appendBatch(b, idCol, fields, dir, numBuckets)
-      }
 
   private def segmentDir(dir: String): String =
     s"$dir/postings/bucket=$SegmentBucket"

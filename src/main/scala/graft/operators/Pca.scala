@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Ledger
+
 /** Distributed PCA over the embedding column — the standard pre-ANN /
   * pre-SemDeDup transform (FAISS's PCAMatrix; Jégou 2011 uses it ahead
   * of PQ; SemDeDup clusters whitened vectors), built so the entire
@@ -224,14 +226,10 @@ object Pca {
   // ---- incremental moments ledger ----------------------------------------
 
   /** One micro-batch of the INCREMENTAL moments ledger — model
-    * training under the q149/q165/q182 effectively-once contract:
-    * rows dedup on `idCol`, anti-join the seen-ids ledger (a
-    * REDELIVERED batch contributes nothing — its fresh set is empty,
-    * so NO partial lands), the delta's packed moment buffer appends
-    * FIRST tagged `batchId`, ids LAST. A crash between the two
-    * appends re-lands a bit-identical partial under the same
-    * batch_id, which the read-side `dropDuplicates("batch_id", "m")`
-    * folds once. Moments are exact additive BIGINTs, so ANY slicing
+    * training under [[graft.plans.Ledger]]'s seen-ids contract: the
+    * delta's packed moment buffer, tagged `batchId`, is the partial,
+    * and a torn append re-lands a bit-identical one that the read-side
+    * `dropDuplicates("batch_id", "m")` folds once. Moments are exact additive BIGINTs, so ANY slicing
     * folds to the one-shot [[moments]] — and therefore the solved
     * components hash-match q96's oracle verbatim.
     *
@@ -243,23 +241,18 @@ object Pca {
                         scale: Int = 1000): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val b = batch.dropDuplicates(idCol)
-    val seen = Dedup.readStateOr(spark, s"$baseDir/seenIds",
-      b.select(col(idCol)).limit(0))
-    val fresh = b.join(seen, Seq(idCol), "left_anti")
-      .localCheckpoint(eager = false) // materialized by the first consumer (round 16)
-    val packed = fresh.select(qvec(col(vecCol), scale).as("qv"))
-      .filter(size(col("qv")) === dim)
-      .select(graft.functions.MomentsAgg.momentsAgg(col("qv"), dim).as("m"))
-      .head().getSeq[Long](0)
-    // n == 0 ⟺ redelivery (or an all-short batch): land nothing, the
-    // Eval.confusionDeltaBatch empty-groupBy shape
-    if (packed.head > 0L)
-      Seq((batchId, packed)).toDF("batch_id", "m")
-        .write.mode("append").parquet(s"$baseDir/moments")
-    fresh.select(col(idCol)).write.mode("append")
-      .parquet(s"$baseDir/seenIds")
-    fresh.unpersist()
+    val idsDir = s"$baseDir/seenIds"
+    val fresh = Ledger.fresh(batch, idCol, idsDir)
+    Ledger.commit(fresh, col(idCol), idsDir) { () =>
+      val packed = fresh.select(qvec(col(vecCol), scale).as("qv"))
+        .filter(size(col("qv")) === dim)
+        .select(graft.functions.MomentsAgg.momentsAgg(col("qv"), dim).as("m"))
+        .head().getSeq[Long](0)
+      // n == 0 ⟺ every fresh vector is short: no partial lands
+      if (packed.head > 0L)
+        Seq((batchId, packed)).toDF("batch_id", "m")
+          .write.mode("append").parquet(s"$baseDir/moments")
+    }
     ()
   }
 
@@ -283,22 +276,6 @@ object Pca {
     }
     graft.functions.MomentsAgg.unpack(agg.toSeq, dim)
   }
-
-  /** [[momentsDeltaBatch]] as a stream sink — live model-state
-    * maintenance: each micro-batch of new vectors folds its moment
-    * partial into the standing ledger effectively-once (a replayed
-    * batch derives an empty fresh set and lands nothing), and
-    * [[componentsFromDirs]] serves the current model at any point
-    * without touching the corpus. */
-  def momentsSink(vecStream: DataFrame, idCol: String, vecCol: String,
-                  dim: Int, baseDir: String, checkpointDir: String,
-                  scale: Int = 1000)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        momentsDeltaBatch(b, idCol, vecCol, dim, baseDir, bid, scale)
-      }
 
   /** The q96 component table solved from the folded ledger — the
     * incremental path's read side; bit-identical to [[components]]

@@ -326,26 +326,22 @@ object Search {
       .orderBy(col("dist"), col("cf").desc, col("term"))
       .limit(k)
 
-  /** One alert micro-batch: [[percolate]] the batch, then
-    * insert-if-absent on (doc, query) into the standing alert log —
-    * redelivered batches land nothing, so alerts fire effectively
-    * once (the crash-safety contract the funnel sinks share). */
+  /** One alert micro-batch (a stream runs it through
+    * [[graft.plans.Ledger.sink]]): [[percolate]] the batch, then
+    * insert-if-absent on the (`idCol`, `query_id`) natural key into the
+    * standing alert log ([[graft.plans.Ledger.land]]) — redelivered
+    * batches land nothing, so alerts fire effectively once. Null ids:
+    * the keys compare with SQL equality, so an alert whose doc id or
+    * query id is null matches no landed alert and lands again on every
+    * delivery (the compaction below then folds the copies into one). */
   def percolateDeltaBatch(batch: DataFrame, idCol: String,
                           fields: Seq[String], queries: DataFrame,
                           targetDir: String): Unit = {
     val spark = batch.sparkSession
     val maxFiles = graft.plans.Maintenance.maxFilesConf(spark,
       "graft.percolate.compactMaxFiles")
-    val matched = percolate(batch, idCol, fields, queries)
-    def keyed(df: DataFrame): DataFrame = df.withColumn("__mk",
-      concat_ws(":", col(idCol), col("query_id")))
-    // missing-path → first batch; any other read failure must fail
-    // the micro-batch (retry) rather than land vs an empty target
-    val existing = keyed(Dedup.readStateOr(spark, targetDir,
-      matched.limit(0))).select(col("__mk"))
-    Dedup.idempotentBatch(keyed(matched), existing, "__mk")
-      .drop("__mk")
-      .write.mode("append").parquet(targetDir)
+    graft.plans.Ledger.land(percolate(batch, idCol, fields, queries),
+      targetDir, Seq(idCol, "query_id"))
     // COMPACTION AT REST (round 17, guide §6): every micro-batch both
     // APPENDS to and RE-READS the standing alert log (the idempotency
     // anti-join above), so its file count is paid per batch, forever.
@@ -359,20 +355,6 @@ object Search {
       ()
     }
   }
-
-  /** Streaming PERCOLATION — the alerting use case stored queries
-    * exist for ("tell me ONCE when a doc about X arrives"): each
-    * micro-batch runs [[percolateDeltaBatch]] against the standing
-    * alert log. */
-  def percolateSink(docs: DataFrame, idCol: String,
-                    fields: Seq[String], queries: DataFrame,
-                    targetDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        percolateDeltaBatch(batch, idCol, fields, queries, targetDir)
-      }
 
   /** SIGNIFICANT TERMS (ES `significant_terms`, JLH heuristic):
     * terms overrepresented in a FOREGROUND doc set versus the whole

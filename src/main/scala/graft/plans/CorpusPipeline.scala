@@ -42,36 +42,6 @@ import graft.operators.{Blocklist, Dedup, DedupApprox, Export, TextAnalysis}
   */
 object CorpusPipeline {
 
-  /** Run order-free Spark actions as CONCURRENT jobs from a small
-    * driver thread pool (guide §2.6: actions are only sequential
-    * because the driver calls them sequentially; concurrent jobs
-    * back-fill executors freed by each other's task tails). Used by
-    * the delta batches whose crash contract orders only the ids
-    * ledger LAST — the partial writes before it are order-free.
-    * Concurrent first-consumption of a lazily-checkpointed frame is
-    * safe: block-level locks make one task compute each partition
-    * while the others wait and read (the plans are deterministic, so
-    * a re-computation could not diverge anyway). Any failure
-    * propagates after all jobs settle — the ids ledger never lands
-    * unless EVERY partial landed, preserving the crash contract. */
-  private def concurrently(work: (() => Unit)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
-    try {
-      val futures = work.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = w()
-      }))
-      // collect every outcome before throwing: a fast failure must not
-      // leave sibling write jobs running into teardown
-      val errs = futures.flatMap(f =>
-        try { f.get(); None }
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            Some(Option(e.getCause).getOrElse(e))
-        })
-      errs.headOption.foreach(throw _)
-    } finally pool.shutdownNow()
-  }
-
   /** Tunable thresholds; defaults follow the cited recipes (Gopher's
     * repetition bounds, C4's line rules, 0.5-Jaccard MinHash dedup). */
   case class Config(
@@ -398,8 +368,8 @@ object CorpusPipeline {
     "v_repetition", "v_blocklist", "v_compress", "v_entropy", "v_dedup",
     "v_substr", "v_decontam")
 
-  /** One micro-batch of the STREAMING crawl-drop funnel (exposed for
-    * direct redelivery testing; [[deltaFunnelSink]] wraps it): run
+  /** One micro-batch of the STREAMING crawl-drop funnel (a stream
+    * runs it through [[Ledger.sink]]): run
     * [[deltaVerdicts]] for `batch` against the standing artifacts at
     * `indexDir`/`docsDir`, land the verdict rows EFFECTIVELY-ONCE in
     * `targetDir` (idempotent insert on the doc id), then fold the
@@ -485,10 +455,7 @@ object CorpusPipeline {
     // the landing write is the materializing action)
     val v = deltaVerdicts(batch, idCol, textCol, index, standingDocs,
       benchDocs, cfg).localCheckpoint(eager = false)
-    val existing = Dedup.readStateOr(spark, targetDir, v.limit(0))
-      .select(col(idCol))
-    Dedup.idempotentBatch(v, existing, idCol)
-      .write.mode("append").parquet(targetDir)
+    Ledger.land(v, targetDir, Seq(idCol))
     // dropDuplicates mirrors the landing path's intra-batch dedup: a
     // batch carrying the same doc id twice must fold in one row, not
     // two (duplicate docs rows + band keys would inflate standing
@@ -507,22 +474,6 @@ object CorpusPipeline {
       .write.partitionBy("__bucket").mode("append").parquet(docsDir)
   }
 
-  /** The incremental funnel as a STREAM: readStream of new docs →
-    * [[deltaFunnelBatch]] per micro-batch. Append-legal by
-    * construction (all cross-doc work happens inside the batch). */
-  def deltaFunnelSink(deltaStream: DataFrame, idCol: String,
-                      textCol: String, benchDocs: DataFrame, cfg: Config,
-                      indexDir: String, docsDir: String, targetDir: String,
-                      checkpointDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deltaStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        deltaFunnelBatch(b, idCol, textCol, benchDocs, cfg,
-          indexDir, docsDir, targetDir)
-        ()
-      }
-
   /** Streaming decontamination probe — q90's n-gram overlap analysis
     * as a DELTA stream against standing 8-byte-key indexes, landed
     * effectively-once (round-6 directive #7). Per micro-batch:
@@ -536,17 +487,15 @@ object CorpusPipeline {
     *      of grams from prior deltas (cross-delta overlap, the
     *      streaming analog of q90's cross-slice report);
     *   3. verdicts land idempotently in `targetDir` (anti-join on the
-    *      doc id — a redelivered batch lands nothing);
-    *   4. the batch's grams fold into `seenIndexDir`, with
-    *      `seenDocsDir` (ids) appended LAST as the fold-in commit
-    *      marker — the [[deltaFunnelBatch]] crash rule: fold-in is
-    *      derived from the batch vs the LEDGER, never from this run's
-    *      landing, so a crash between appends heals on redelivery.
+    *      doc id), then the batch's grams fold into `seenIndexDir`,
+    *      and the ids land in the `seenDocsDir` ledger ([[Ledger]]'s
+    *      contract: a redelivered batch writes nothing).
     *
-    * Effectively-once note: a redelivered batch recomputes verdicts
-    * against a `seen` index that now contains its own grams, but those
-    * recomputed rows are dropped by the idempotent landing — landed
-    * verdicts always reflect first-delivery state. Scale shape: every
+    * Only the batch's fresh docs are scored: a doc in the ledger has its
+    * verdict landed already. The landing runs before the fold, in one
+    * partial: a retry after a crash between them scores its docs
+    * against a `seen` index that still lacks their own grams, so a
+    * verdict always reflects first-delivery state. Scale shape: every
     * join key is 8 bytes; the batch side is delta-sized and broadcast;
     * the standing index is read column-pruned (`h` only). Duplicate
     * hash rows in the index are tolerated (the probe DISTINCTs them),
@@ -556,8 +505,9 @@ object CorpusPipeline {
                        seenDocsDir: String, targetDir: String,
                        n: Int = 8): Unit = {
     val spark = batch.sparkSession
-    val ids = batch.select(col(idCol)).dropDuplicates(idCol)
-    val grams = batch.dropDuplicates(idCol)
+    val fresh = Ledger.fresh(batch.select(col(idCol), col(textCol)), idCol,
+      seenDocsDir)
+    val grams = fresh
       .select(col(idCol),
         explode_outer(TextAnalysis.docGramHashes(col(textCol), n)).as("h"))
       .localCheckpoint(eager = false) // materialized by the verdict agg
@@ -573,37 +523,14 @@ object CorpusPipeline {
       .agg(count(col("h")).as("n_grams"),
         sum(coalesce(col("__b"), lit(0L))).as("n_bench_hits"),
         sum(coalesce(col("__s"), lit(0L))).as("n_seen_hits"))
-      .localCheckpoint(eager = false) // materialized by the landing write
-    val existing = Dedup.readStateOr(spark, targetDir, verdict.limit(0))
-      .select(col(idCol))
-    Dedup.idempotentBatch(verdict, existing, idCol)
-      .write.mode("append").parquet(targetDir)
-    // fold-in vs the LEDGER (not this run's landing): heals partials
-    val ledger = Dedup.readStateOr(spark, seenDocsDir, ids.limit(0))
-      .select(col(idCol))
-    val foldIds = ids.join(broadcast(ledger.join(broadcast(ids), Seq(idCol))),
-      Seq(idCol), "left_anti").localCheckpoint(eager = false)
-    grams.join(broadcast(foldIds), Seq(idCol))
-      .filter(col("h").isNotNull)
-      .select(col("h")).distinct()
-      .write.mode("append").parquet(seenIndexDir)
-    foldIds.write.mode("append").parquet(seenDocsDir)
+    Ledger.commit(fresh, col(idCol), seenDocsDir)(() => {
+      Ledger.land(verdict, targetDir, Seq(idCol))
+      grams.filter(col("h").isNotNull)
+        .select(col("h")).distinct()
+        .write.mode("append").parquet(seenIndexDir)
+    })
+    ()
   }
-
-  /** [[contamDeltaBatch]] as a stream sink: readStream of new docs →
-    * decontamination verdicts per micro-batch, effectively-once. */
-  def contamDeltaSink(deltaStream: DataFrame, idCol: String,
-                      textCol: String, benchIndexDir: String,
-                      seenIndexDir: String, seenDocsDir: String,
-                      targetDir: String, checkpointDir: String, n: Int = 8)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deltaStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        contamDeltaBatch(b, idCol, textCol, benchIndexDir, seenIndexDir,
-          seenDocsDir, targetDir, n)
-        ()
-      }
 
   /** The attrition funnel as ONE aggregate over the verdict plan:
     * docs surviving each stage, counted causally (stage N counts only
@@ -632,21 +559,12 @@ object CorpusPipeline {
   // ---- the incremental release card, maintained by the stream -------
   // The corpus card kept current as delta batches land — per-batch
   // LEDGER PARTIALS (StatsLedger moments + histogram, Sketch HLL
-  // registers) appended to dirs, never rewritten. Crash contract,
-  // same discipline as contamDeltaBatch:
-  //  - batches dedup against a seen-ids ledger (overlapping deltas
-  //    and redeliveries contribute zero fresh docs);
-  //  - partials land FIRST, the seen-ids append lands LAST. A crash
-  //    in between makes the retry recompute the IDENTICAL partial
-  //    rows (they are deterministic in the batch content, and
-  //    Structured Streaming replays the same offsets under the same
-  //    batchId) — the read side heals the duplicates by natural-key
-  //    dedup before folding;
-  //  - appends are visible only on commit (the readStateOr
-  //    assumption), so a crash mid-write leaves nothing to heal.
-  // At stream lifetimes the partial dirs accumulate one small file
-  // per batch; `Maintenance.compact`'s snapshot-dedup-rewrite bounds
-  // that exactly as it does for the funnel's ledgers.
+  // registers) appended to dirs, never rewritten, under [[Ledger]]'s
+  // seen-ids contract; the `batch_id` tag is the natural-key part
+  // the read side heals duplicates on. At stream lifetimes the partial
+  // dirs accumulate one small file per batch; `Maintenance.compact`'s
+  // snapshot-dedup-rewrite bounds that exactly as it does for the
+  // funnel's ledgers.
 
   /** Fold one delta batch's card partials into `baseDir`. `batchId`
     * tags the partial rows (the natural-key component that makes
@@ -654,21 +572,10 @@ object CorpusPipeline {
   def cardDeltaBatch(batch: DataFrame, idCol: String, keyCol: String,
                      valCol: String, textCol: String, baseDir: String,
                      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.dropDuplicates(idCol)
-    val seen = Dedup.readStateOr(spark, s"$baseDir/seenIds",
-      b.select(col(idCol)).limit(0))
-    // lazy: the first ledger write materializes the checkpoint, the
-    // later writes reuse it — one fewer job per micro-batch (round 16)
-    val fresh = b.join(seen, Seq(idCol), "left_anti")
-      .localCheckpoint(eager = false)
+    val idsDir = s"$baseDir/seenIds"
+    val fresh = Ledger.fresh(batch, idCol, idsDir)
     val tag = lit(batchId).as("batch_id")
-    // The three partials are order-free among themselves (only the
-    // ids ledger must land last): run them as CONCURRENT jobs
-    // (guide §2.6, round 17) — the per-batch critical path is one
-    // write-job span instead of three, and the fixed job costs that
-    // dominate a micro-batch overlap instead of adding up.
-    concurrently(
+    Ledger.commit(fresh, col(idCol), idsDir)(
       () => graft.operators.StatsLedger.partial(fresh, keyCol, valCol)
         .select(tag, col("key"), col("n"), col("sum"), col("min"),
           col("max"), col("sumsq"))
@@ -679,24 +586,8 @@ object CorpusPipeline {
       () => graft.operators.Sketch.hllRegisters(fresh, keyCol, textCol)
         .select(tag, col("key"), col("bucket"), col("m"))
         .write.mode("append").parquet(s"$baseDir/hll"))
-    // ids land LAST (ledger-last heals a crash between the appends)
-    fresh.select(col(idCol)).write.mode("append")
-      .parquet(s"$baseDir/seenIds")
-    fresh.unpersist()
     ()
   }
-
-  /** [[cardDeltaBatch]] as a stream sink — the card ledgers follow
-    * the ingest micro-batches, effectively-once. */
-  def cardDeltaSink(deltaStream: DataFrame, idCol: String, keyCol: String,
-                    valCol: String, textCol: String, baseDir: String,
-                    checkpointDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deltaStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        cardDeltaBatch(b, idCol, keyCol, valCol, textCol, baseDir, id)
-      }
 
   // ---- the media firehose: streaming perceptual dedup ---------------
   // x28's incremental text dedup, re-expressed for binary media: a
@@ -706,14 +597,14 @@ object CorpusPipeline {
   // (Similarity.nearDupAgainst — delta-sized, never O(standing)),
   // elects within-delta keepers (smallest id per near-dup cluster,
   // the x28 convention), and appends only the keepers' signatures to
-  // the index. Same crash discipline as the other delta sinks:
-  // seen-ids dedup makes redelivery fold nothing, verdicts land
-  // idempotently, the signature append lands before the ids ledger.
-  // The one crash window — verdicts landed, signatures appended,
-  // ids NOT landed — can re-append the same keeper signatures on
-  // retry; duplicates are benign (every pair consumer ends in a
-  // pair-key dedup) and a Maintenance.compact keyed on media_id
-  // removes them at rest.
+  // the index, under [[Ledger]]'s seen-ids contract. The verdicts
+  // land BEFORE the signatures grow: a retry after a crash between
+  // them probes an index that lacks its own keepers, so it lands the
+  // first delivery's verdicts. The other crash window — verdicts
+  // landed, signatures appended, ids NOT landed — re-appends the same
+  // keeper signatures on retry; duplicates are benign (every pair
+  // consumer ends in a pair-key dedup) and a Maintenance.compact
+  // keyed on media_id removes them at rest.
 
   /** One media delta batch: writes per-media verdicts
     * `(media_id, dup_standing, dup_delta, keep)` to `targetDir` and
@@ -723,12 +614,9 @@ object CorpusPipeline {
                       threshold: Double = 0.995): Unit = {
     val spark = batch.sparkSession
     import graft.operators.{Multimodal, Similarity}
-    val b = batch.dropDuplicates(idCol)
-      .select(col(idCol).cast("long").as("media_id"),
-        col(payloadCol).as("payload"))
-    val seen = Dedup.readStateOr(spark, s"$baseDir/seenIds",
-      b.select(col("media_id")).limit(0))
-    val fresh = b.join(seen, Seq("media_id"), "left_anti")
+    val idsDir = s"$baseDir/seenIds"
+    val fresh = Ledger.fresh(batch.select(col(idCol).cast("long").as("media_id"),
+      col(payloadCol).as("payload")), "media_id", idsDir)
     val sigs = Multimodal.gridEmbedding(fresh).localCheckpoint(eager = false)
     val standing = Dedup.readStateOr(spark, s"$baseDir/signatures",
       sigs.limit(0))
@@ -752,38 +640,16 @@ object CorpusPipeline {
         coalesce(col("dup_delta"), lit(false)).as("dup_delta"))
       .withColumn("keep", !col("dup_standing") && !col("dup_delta"))
       .localCheckpoint(eager = false) // materialized by the landing write
-    val existing = Dedup.readStateOr(spark, s"$baseDir/verdicts",
-      verdicts.limit(0)).select(col("media_id"))
-    // Verdict landing and signature growth are order-free (round 17,
-    // guide §2.6): only the ids ledger orders the contract. The new
-    // crash window this opens — signatures appended, verdicts NOT
-    // landed — heals exactly like the pre-existing one: ids never
-    // landed, so the retry recomputes byte-identical verdicts from the
-    // same fresh set, lands them idempotently, and the re-appended
-    // keeper signatures are the already-documented benign duplicates.
-    concurrently(
-      () => Dedup.idempotentBatch(verdicts, existing, "media_id")
-        .write.mode("append").parquet(s"$baseDir/verdicts"),
-      // keepers' signatures grow the index; ids ledger lands LAST
-      () => sigs.join(verdicts.filter(col("keep")), Seq("media_id"), "left_semi")
-        .write.mode("append").parquet(s"$baseDir/signatures"))
-    fresh.select(col("media_id")).write.mode("append")
-      .parquet(s"$baseDir/seenIds")
+    Ledger.commit(fresh, col("media_id"), idsDir)(() => {
+      Ledger.land(verdicts, s"$baseDir/verdicts", Seq("media_id"))
+      // keepers' signatures grow the index
+      sigs.join(verdicts.filter(col("keep")), Seq("media_id"), "left_semi")
+        .write.mode("append").parquet(s"$baseDir/signatures")
+    })
     sigs.unpersist()
     verdicts.unpersist()
     ()
   }
-
-  /** [[mediaDeltaBatch]] as a stream sink. */
-  def mediaDeltaSink(deltaStream: DataFrame, idCol: String,
-                     payloadCol: String, baseDir: String,
-                     checkpointDir: String, threshold: Double = 0.995)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deltaStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        mediaDeltaBatch(b, idCol, payloadCol, baseDir, threshold)
-      }
 
   /** Read the current card from the partial dirs: natural-key dedup
     * (heals duplicate partials from replayed batches), fold, join —

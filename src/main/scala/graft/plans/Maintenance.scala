@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * Design constraints, in order:
   *
   *  1. SAFE CONCURRENT WITH APPENDS. The writer (a running
-  *     [[CorpusPipeline.deltaFunnelSink]] stream) only ever ADDS
+  *     [[CorpusPipeline.deltaFunnelBatch]] stream) only ever ADDS
   *     files; compaction reads a recorded snapshot of file paths and
   *     deletes exactly those paths, so a file appended mid-compaction
   *     is never read, rewritten, or deleted — it just waits for the

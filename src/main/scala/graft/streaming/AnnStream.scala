@@ -59,43 +59,20 @@ object AnnStream {
         Similarity.cosineFast(col("__v"), col("__qv")).as("cos"))
   }
 
-  /** INGEST side of the streaming ANN story: a live embedding stream
-    * folds into the standing at-rest IVF layout, one
-    * [[Similarity.appendIvfBatch]] per micro-batch — new vectors are
-    * assigned under the frozen coarse quantizer and appended into
-    * their cell directories, idempotently on `idCol` (a redelivered
-    * batch lands nothing, so checkpoint + fold-in is effectively-once
-    * like the minhash-index sink). Serving ([[ivfCandidates]],
-    * [[Similarity.ivfTopKAtRest]]) reads the same layout: index
-    * growth and query serving share one at-rest structure with no
-    * rebuild on the write path. */
-  def ivfIngestSink(deltaStream: DataFrame, idCol: String, vecCol: String,
-                    centroids: DataFrame, dir: String,
-                    checkpointDir: String): DataStreamWriter[Row] =
-    deltaStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Similarity.appendIvfBatch(batch, idCol, vecCol, centroids, dir)
-        ()
-      }
-
   /** Ranked top-k landing: per micro-batch, one mergeable
     * [[graft.functions.TopKAgg]] per query (shuffle = queries×k rows,
     * not candidates), exploded to `(query_id, rank, id, cos)` and
     * appended. Exact per query because candidates never span batches. */
   def topKSink(candidates: DataFrame, k: Int, targetDir: String,
                checkpointDir: String): DataStreamWriter[Row] =
-    candidates.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg.topk(col("cos"), col("id"), k)
-            .as("__top"))
-          .select(col("query_id"), posexplode(col("__top")))
-          .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
-            col("col.id").as("id"), col("col.score").as("cos"))
-          .write.mode("append").parquet(targetDir)
-        ()
-      }
+    graft.plans.Ledger.sink(candidates, checkpointDir) { (batch, _) =>
+      batch
+        .groupBy(col("query_id"))
+        .agg(graft.functions.TopKAgg.topk(col("cos"), col("id"), k)
+          .as("__top"))
+        .select(col("query_id"), posexplode(col("__top")))
+        .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
+          col("col.id").as("id"), col("col.score").as("cos"))
+        .write.mode("append").parquet(targetDir)
+    }
 }

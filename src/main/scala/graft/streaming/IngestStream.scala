@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
-import graft.operators.{Dedup, Envelope, Validate}
+import graft.operators.{Envelope, Validate}
 
 /** The reference's ingest + landing paths as Structured Streaming
   * (SURVEY.md §2 T-1..T-5, §3.1/§3.2).
@@ -57,21 +57,16 @@ object IngestStream {
     * left-anti against the target, then append (S-5/J-1..J-3 fused).
     * Parquet target stands in for the Mongo collection. With
     * `eventTimeCol`, late rows ([[dropLate]]) are dropped first, against
-    * the same target read. A target that exists but cannot be read
-    * fails the micro-batch ([[Dedup.readStateOr]]): landing against an
-    * empty key set would append every row again as a duplicate. */
+    * the same target read ([[graft.plans.Ledger.land]]). A target that
+    * exists but cannot be read fails the micro-batch: landing against
+    * an empty key set would append every row again as a duplicate. */
   def idempotentSink(stream: DataFrame, targetDir: String, key: String,
                      checkpointDir: String,
                      eventTimeCol: Option[String] = None): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val existing = Dedup.readStateOr(batch.sparkSession, targetDir, batch.limit(0))
-        val onTime = eventTimeCol.fold(batch)(dropLate(batch, existing, _))
-        Dedup.idempotentBatch(onTime, existing, key)
-          .write.mode("append").parquet(targetDir)
-        ()
-      }
+    graft.plans.Ledger.sink(stream, checkpointDir) { (batch, _) =>
+      graft.plans.Ledger.land(batch, targetDir, Seq(key),
+        (rows, existing) => eventTimeCol.fold(rows)(dropLate(rows, existing, _)))
+    }
 
   /** T-4, stateless: the rows of `batch` whose `eventTimeCol` is after
     * the cut = newest event time in `existing`, truncated to the

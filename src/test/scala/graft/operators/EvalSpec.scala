@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.plans.Ledger
 
 /** Classifier-eval suite: confusion matrix / class report / Cohen's
   * kappa vs independent plain-Scala recomputation on randomized label
@@ -227,8 +228,8 @@ class EvalSpec extends SparkSpec {
     val mem = MemoryStream[LabeledPredRow]
     mem.addData(rows.filter(_.id % 2 == 0))
     mem.addData(rows.filter(_.id % 2 == 1))
-    val q = Eval.confusionSink(mem.toDF(), "id", "truth", "pred",
-        s"$base/led", s"$base/ckpt")
+    val q = Ledger.sink(mem.toDF(), s"$base/ckpt")(
+        Eval.confusionDeltaBatch(_, "id", "truth", "pred", s"$base/led", _))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -252,8 +253,9 @@ class EvalSpec extends SparkSpec {
     val mem = MemoryStream[CalibScoreRow]
     mem.addData(rows.filter(_.id % 2 == 0))
     mem.addData(rows.filter(_.id % 2 == 1))
-    val q = Eval.calibrationSink(mem.toDF(), "id", col("conf"), col("ok"),
-        s"$base/led", s"$base/ckpt")
+    val q = Ledger.sink(mem.toDF(), s"$base/ckpt")(
+        Eval.calibrationDeltaBatch(_, "id", col("conf"), col("ok"),
+          s"$base/led", _))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()

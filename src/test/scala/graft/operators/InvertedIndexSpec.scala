@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.plans.Ledger
 import graft.sources.Tables
 
 /** The inverted index at rest: serving equals the scan-time BM25
@@ -306,8 +307,8 @@ class InvertedIndexSpec extends SparkSpec {
       .select(col("doc_id").cast("long"), coalesce(col("text"), lit("")))
       .as[(Long, String)].collect().toSeq
     val mem = MemoryStream[(Long, String)]
-    val sink = InvertedIndex.indexDeltaSink(
-      mem.toDF().toDF("doc_id", "text"), "doc_id", Seq("text"), inc, ckpt)
+    val sink = Ledger.sink(mem.toDF().toDF("doc_id", "text"), ckpt)((b, _) =>
+      InvertedIndex.appendBatch(b, "doc_id", Seq("text"), inc))
     // two micro-batches cover the corpus, then batch 0 is REDELIVERED
     val (b0, b1) = docs.partition(_._1 % 2 == 0)
     Seq(b0, b1, b0).foreach { g =>

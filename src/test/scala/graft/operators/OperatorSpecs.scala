@@ -83,6 +83,15 @@ class DedupSpec extends SparkSpec {
     val out = Dedup.dedupAgainst(batch, existing, "url")
       .select("url").as[String].collect().toSet
     assert(out == Set("u1", "u3"))
+    // duplicate keys on the build side change nothing, and the build
+    // side is the pruned key column as it is: no aggregate over it
+    val dupExisting = Seq(("u2", 9), ("u2", 8), ("u2", 9)).toDF("url", "v")
+    val dupOut = Dedup.dedupAgainst(batch, dupExisting, "url")
+    assert(dupOut.select("url").as[String].collect().toSet == Set("u1", "u3"))
+    val aggs = dupOut.queryExecution.sparkPlan.collect {
+      case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
+    }
+    assert(aggs.isEmpty, dupOut.queryExecution.sparkPlan.toString)
   }
 
   test("idempotentBatch: re-delivery lands nothing new") {

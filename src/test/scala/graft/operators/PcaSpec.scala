@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.plans.Ledger
 
 /** [[Pca]] on a corpus with KNOWN eigenstructure: vectors built as
   * α·p + β·q for fixed orthogonal p ⟂ q with var(α) ≫ var(β), so the
@@ -151,8 +152,8 @@ class PcaSpec extends SparkSpec {
     val mem = MemoryStream[PcaVecRow]
     mem.addData(rows.filter(_._1 % 2 == 0).map(r => PcaVecRow(r._1, r._2.toSeq)))
     mem.addData(rows.filter(_._1 % 2 == 1).map(r => PcaVecRow(r._1, r._2.toSeq)))
-    val q = Pca.momentsSink(mem.toDF(), "vec_id", "embedding", dim,
-        s"$base/led", s"$base/ckpt")
+    val q = Ledger.sink(mem.toDF(), s"$base/ckpt")(
+        Pca.momentsDeltaBatch(_, "vec_id", "embedding", dim, s"$base/led", _))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()

@@ -211,8 +211,9 @@ class DeltaFunnelSpec extends SparkSpec {
     mem.addData((1L, "the quick brown fox jumps over the lazy dog and " +
       "then runs far away into the deep green forest tonight"))
     val stream = mem.toDF().toDF("doc_id", "text")
-    val q = CorpusPipeline.deltaFunnelSink(stream, "doc_id", "text",
-        bench, cfg, s"$dir/ix", s"$dir/dc", s"$dir/tg", s"$dir/ck")
+    val q = Ledger.sink(stream, s"$dir/ck")((b, _) =>
+        CorpusPipeline.deltaFunnelBatch(b, "doc_id", "text",
+          bench, cfg, s"$dir/ix", s"$dir/dc", s"$dir/tg"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination()
     assert(spark.read.parquet(s"$dir/tg").count() == 1L)

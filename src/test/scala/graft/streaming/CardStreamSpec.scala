@@ -6,12 +6,12 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.operators.{Report, Sketch, StatsLedger}
-import graft.plans.CorpusPipeline
+import graft.plans.{CorpusPipeline, Ledger}
 
 case class CardDoc(doc_id: Long, source: String, text: String, n_chars: Long)
 
 /** The incremental release card as a stream sink
-  * ([[CorpusPipeline.cardDeltaSink]]): the streamed ledgers must equal
+  * ([[CorpusPipeline.cardDeltaBatch]] under [[Ledger.sink]]): the streamed ledgers must equal
   * the one-shot recompute, survive redelivery, and heal the
   * duplicate-partials crash window by read-side natural-key dedup. */
 class CardStreamSpec extends SparkSpec {
@@ -39,8 +39,9 @@ class CardStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("card-ckpt").toString
     val docs = mkDocs(1 to 200)
     val mem = MemoryStream[CardDoc]
-    val sink = CorpusPipeline.cardDeltaSink(mem.toDF(), "doc_id", "source",
-      "n_chars", "text", base, ckpt)
+    val sink = Ledger.sink(mem.toDF(), ckpt)(
+      CorpusPipeline.cardDeltaBatch(_, "doc_id", "source", "n_chars", "text",
+        base, _))
     // three micro-batches
     docs.grouped(70).foreach { g =>
       mem.addData(g: _*)

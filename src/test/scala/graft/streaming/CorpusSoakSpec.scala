@@ -9,7 +9,7 @@ import graft.plans.CorpusPipeline
 
 /** Long-haul fault soak of the four corpus/media/ANN sinks the ledger
   * soak does not cover (round-13 VERDICT directive 3):
-  * minhashVerdictSink, contamDeltaSink, mediaDeltaSink, ivfIngestSink.
+  * the minhash verdict, contam, media and IVF ingest batch bodies.
   * Each takes >=150 micro-batches with seeded-random fault injection —
   * same-batch replays (task retry), full redeliveries (source replay
   * after checkpoint loss), TRUE torn writes at every documented crash

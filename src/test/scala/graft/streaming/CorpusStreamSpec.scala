@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.{LmScore, Pii, Sampling, TextAnalysis}
+import graft.plans.Ledger
 
 case class Doc(doc_id: Long, text: String)
 
@@ -284,7 +285,8 @@ class CorpusStreamSpec extends SparkSpec {
     val mem = MemoryStream[Doc]
     val verdicts = DedupApprox.minhashPairsAgainstStream(
       mem.toDF(), "doc_id", "text", index, indexed)
-    def run() = DedupApprox.minhashVerdictSink(verdicts, target, ckpt)
+    def run() = Ledger.sink(verdicts, ckpt)((b, _) =>
+        DedupApprox.minhashVerdictBatch(b, target))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start().awaitTermination()
 
@@ -377,9 +379,10 @@ class CorpusStreamSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$base/bench")
     val mem = MemoryStream[Doc]
     mem.addData(Doc(1L, "prefix alpha beta gamma delta suffix words here"))
-    val q = CorpusPipeline.contamDeltaSink(mem.toDF(), "doc_id", "text",
-        s"$base/bench", s"$base/seen", s"$base/seenDocs", s"$base/target",
-        s"$base/ckpt", n = 4)
+    val q = Ledger.sink(mem.toDF(), s"$base/ckpt")((b, _) =>
+        CorpusPipeline.contamDeltaBatch(b, "doc_id", "text",
+          s"$base/bench", s"$base/seen", s"$base/seenDocs", s"$base/target",
+          n = 4))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()

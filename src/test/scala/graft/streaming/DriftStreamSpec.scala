@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.operators.Drift
+import graft.plans.Ledger
 
 case class DriftEv(event_id: Long, bin: Long, is_ref: Boolean)
 
@@ -28,8 +29,8 @@ class DriftStreamSpec extends SparkSpec {
     val (base, ckpt) = dirs()
     val mem = MemoryStream[DriftEv]
     def run(): Unit = {
-      val q = Drift.driftDeltaSink(mem.toDF(), "event_id", "bin",
-          inRef = col("is_ref"), base, ckpt)
+      val q = Ledger.sink(mem.toDF(), ckpt)(
+          Drift.driftDeltaBatch(_, "event_id", "bin", col("is_ref"), base, _))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.Similarity
-import graft.plans.Maintenance
+import graft.plans.{Ledger, Maintenance}
 import graft.sources.Tables
 
 case class EVec(vec_id: Long, embedding: Seq[Double])
@@ -138,8 +138,9 @@ class IvfIngestSpec extends SparkSpec {
       .map { case (i, v) => EVec(i, v) }
 
     val mem = MemoryStream[EVec]
-    val q = AnnStream.ivfIngestSink(mem.toDF(), "vec_id", "embedding",
-        cents, s"$dir/inc", s"$dir/ck").start()
+    val q = Ledger.sink(mem.toDF(), s"$dir/ck")((b, _) =>
+        Similarity.appendIvfBatch(b, "vec_id", "embedding", cents,
+          s"$dir/inc")).start()
     // one processAllAvailable per group forces three separate
     // micro-batches (AvailableNow would drain them all in one)
     vecs.grouped(20).foreach { g =>

@@ -6,12 +6,12 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.operators.Multimodal
-import graft.plans.CorpusPipeline
+import graft.plans.{CorpusPipeline, Ledger}
 
 case class Media(media_id: Long, payload: Array[Byte])
 
-/** Streaming perceptual dedup ([[CorpusPipeline.mediaDeltaBatch]] /
-  * [[mediaDeltaSink]]): cross-batch re-encode detection against the
+/** Streaming perceptual dedup ([[CorpusPipeline.mediaDeltaBatch]] under
+  * [[Ledger.sink]]): cross-batch re-encode detection against the
   * standing signature index, within-delta keeper election, and the
   * redelivery/crash contract. */
 class MediaStreamSpec extends SparkSpec {
@@ -61,8 +61,8 @@ class MediaStreamSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("media-sink").toString
     val ckpt = java.nio.file.Files.createTempDirectory("media-ckpt").toString
     val mem = MemoryStream[Media]
-    val sink = CorpusPipeline.mediaDeltaSink(mem.toDF(), "media_id",
-      "payload", base, ckpt)
+    val sink = Ledger.sink(mem.toDF(), ckpt)((b, _) =>
+      CorpusPipeline.mediaDeltaBatch(b, "media_id", "payload", base))
     val batch = (0L until 6L)
       .map(s => Media(s, Multimodal.encodePng(Multimodal.synthRaster(s))))
     mem.addData(batch: _*)

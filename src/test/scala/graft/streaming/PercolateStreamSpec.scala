@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.operators.Search
+import graft.plans.Ledger
 
 /** Streaming percolation: stored-query alerts fire over a
   * MemoryStream micro-batch by micro-batch, and a redelivered batch
@@ -24,8 +25,8 @@ class PercolateStreamSpec extends SparkSpec {
     val (target, ckpt) = dirs()
     val mem = MemoryStream[Doc]
     def run(): Unit = {
-      val q = Search.percolateSink(mem.toDF(), "doc_id", Seq("text"),
-          queries, target, ckpt)
+      val q = Ledger.sink(mem.toDF(), ckpt)((b, _) =>
+          Search.percolateDeltaBatch(b, "doc_id", Seq("text"), queries, target))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
@@ -45,6 +46,25 @@ class PercolateStreamSpec extends SparkSpec {
       "doc_id", Seq("text"), queries, target)
     assert(alerts() == expected)
     assert(spark.read.parquet(target).count() == 4L) // no dup rows either
+  }
+
+  test("alerts land on (doc, query), not on a joined string key") {
+    // with string ids, doc "a:b" x query "c" and doc "a" x query "b:c"
+    // are distinct alerts that a ":"-joined key would collide
+    val queries = Seq(("c", Seq("alpha")), ("b:c", Seq("beta")))
+      .toDF("query_id", "terms")
+    val (target, _) = dirs()
+    Search.percolateDeltaBatch(Seq(("a:b", "alpha")).toDF("doc_id", "text"),
+      "doc_id", Seq("text"), queries, target)
+    Search.percolateDeltaBatch(Seq(("a", "beta")).toDF("doc_id", "text"),
+      "doc_id", Seq("text"), queries, target)
+    def alerts(): Seq[(String, String)] = spark.read.parquet(target)
+      .select("doc_id", "query_id").as[(String, String)].collect().toSeq
+    assert(alerts().sorted == Seq(("a", "b:c"), ("a:b", "c")))
+    // and a redelivery of either still lands nothing
+    Search.percolateDeltaBatch(Seq(("a", "beta")).toDF("doc_id", "text"),
+      "doc_id", Seq("text"), queries, target)
+    assert(alerts().sorted == Seq(("a", "b:c"), ("a:b", "c")))
   }
 
   test("a malformed compactMaxFiles fails the batch before any write") {
