@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Key-equality deduplication — the reference's entire join surface
@@ -90,8 +90,8 @@ object Dedup {
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("dups"))
 
   /** Most canonical edges the driver-local union-find in
-    * [[connectedComponents]] can size: its id map holds up to two ids
-    * per edge plus slack, and a java HashMap is sized by an Int. */
+    * [[connectedComponents]] can size: its endpoint array holds two ids
+    * per edge and is indexed by an Int. */
   private[graft] val LocalCcMaxEdges: Long = (Int.MaxValue - 16L) / 2
 
   /** `graft.cc.localMaxEdges` (default 500k), clamped to
@@ -107,93 +107,119 @@ object Dedup {
     math.min(v, LocalCcMaxEdges)
   }
 
-  /** Connected components over a near-dup pair graph (id_a, id_b) via
-    * the ALTERNATING large-star / small-star algorithm (Kiveris et
-    * al. 2014, "Connected Components in MapReduce and Beyond"):
-    * large-star hooks every node's larger neighbors onto its
-    * neighborhood minimum, small-star collapses the smaller ones, and
-    * the edge set itself contracts toward stars rooted at each
-    * component's min id. Round count is O(log² n) REGARDLESS of graph
-    * shape — min-label propagation (the previous algorithm here) is
-    * O(diameter) on plateau-heavy graphs because pointer jumps
-    * through a local minimum are no-ops (measured on x24's
-    * 0.35-threshold graph: 9 rounds of label creep vs 5 star rounds),
-    * and near-dup chains at 100 TB make diameter, not log², the
-    * number to fear.
-    *
-    * Each round is two groupBy+join passes over the EDGE table (which
-    * only ever shrinks toward one edge per non-root node) with a
-    * localCheckpoint to cut lineage; convergence = edge-set fixpoint,
-    * checked exactly (count + anti-join emptiness — both sides are
-    * canonical distinct sets, so equal count plus empty difference is
-    * set equality, no hash-collision leap of faith). Exhausting
-    * `maxIter` throws rather than silently splitting a true cluster
-    * into several "keepers".
-    *
+  /** Union-find over long ids in primitive arrays, for the first `n`
+    * edges `(us(i), vs(i))`. Returns every endpoint, ascending and
+    * distinct, and beside each the minimum id of its component. Ids
+    * map to dense indices by their rank (sort, then binary search), so
+    * index order is id order and union-by-min makes every root its
+    * set's minimum. Memory is two longs per edge plus one int and one
+    * long per id; nothing is boxed. The driver-local path and the
+    * per-partition pre-contraction of [[connectedComponents]] both run
+    * it. */
+  private[graft] def unionFindMin(us: Array[Long], vs: Array[Long],
+                                  n: Int): (Array[Long], Array[Long]) = {
+    val all = new Array[Long](2 * n)
+    System.arraycopy(us, 0, all, 0, n)
+    System.arraycopy(vs, 0, all, n, n)
+    java.util.Arrays.sort(all)
+    var m = 0
+    var i = 0
+    while (i < all.length) {
+      if (m == 0 || all(i) != all(m - 1)) { all(m) = all(i); m += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, m)
+    val parent = Array.tabulate(m)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    i = 0
+    while (i < n) {
+      val ra = find(java.util.Arrays.binarySearch(ids, us(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, vs(i)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 1
+    }
+    (ids, Array.tabulate(m)(k => ids(find(k))))
+  }
+
+  /** Connected components over a near-dup pair graph (id_a, id_b).
     * Emits `(id, comp)` for every id present in `pairs`, comp = the
     * component's minimum id (the same contract the SQL oracles replay
-    * with a recursive CTE — the algorithm is invisible to parity). */
+    * with a recursive CTE — the algorithm is invisible to parity).
+    *
+    * Routing: the canonical edge set (u > v, no self-loops, distinct)
+    * is checkpointed and counted. With long ids and at most
+    * `graft.cc.localMaxEdges` edges (default 500k) it is collected and
+    * solved by a driver-side union-find ([[unionFindMin]]) — the trade
+    * a BroadcastHashJoin makes (collect the small side rather than
+    * shuffle); the collect is edge-bounded, in the size class of a
+    * broadcast build side. Larger sets, and other id types, take the
+    * distributed path below. ClusterSpec pins both paths equal.
+    *
+    * Distributed path:
+    *   1. PRE-CONTRACTION (long ids): one `mapPartitions` runs the same
+    *      union-find over each partition's edges and emits, for each
+    *      node there, the edge (node, its partition-local component
+    *      min). Every input edge lies in one partition, so each local
+    *      star connects what that partition's edges connect and nothing
+    *      more: the union has the same components over the same nodes,
+    *      hence the same minimum ids, in about one edge per node per
+    *      partition (the benchmark corpus: 523,713 edges → ~13k).
+    *   2. The ALTERNATING large-star / small-star rounds (Kiveris et
+    *      al. 2014, "Connected Components in MapReduce and Beyond") on
+    *      that edge set: large-star hooks every node's larger neighbors
+    *      onto its neighborhood minimum, small-star collapses the
+    *      smaller ones, and the edge set contracts toward stars rooted
+    *      at each component's min id. Round count is O(log² n)
+    *      REGARDLESS of graph shape — min-label propagation is
+    *      O(diameter) on plateau-heavy graphs (measured on x24's
+    *      0.35-threshold graph: 9 rounds of label creep vs 5 star
+    *      rounds), and near-dup chains at 100 TB make diameter, not
+    *      log², the number to fear.
+    * Each round is two groupBy+join passes over the edge table with a
+    * lazy localCheckpoint to cut lineage; the round's count() is its
+    * one materializing action, after which the table it superseded is
+    * released ([[Checkpoints.release]]). The last table is kept,
+    * because the result reads it. The rounds stop on the round whose
+    * output is a star forest ([[isStarForest]]), the algorithm's
+    * fixpoint, checked exactly. Exhausting `maxIter` throws rather than
+    * silently splitting a true cluster into several "keepers". */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 16): DataFrame = {
-    // canonical undirected edges: (u, v) with u > v, no self-loops.
-    // LAZY localCheckpoints throughout the loop: the convergence
-    // count() is the materializing action, so each round costs ONE
-    // driver action instead of three (eager checkpoint + fresh count
-    // of next + recount of edges — the previous round's count is
-    // carried in `edgesCount`). Round-16: the r16 A/B adjudication
-    // showed per-job fixed costs are the axis that taxes iterative
-    // operators, and the CC loop sits under every near-dup verdict
-    // (x18/x24/q69/x14/x40 and all five funnels).
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val spark = pairs.sparkSession
     var edges = pairs
       .filter(col("id_a") =!= col("id_b"))
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .distinct().localCheckpoint(eager = false)
-    var edgesCount = edges.count() // materializes the checkpoint
-    // SIZE-ADAPTIVE local path (round 16): a canonical edge set that
-    // fits the broadcast-join size class is solved by driver-side
-    // union-find instead of O(log n) distributed rounds — the exact
-    // trade a BroadcastHashJoin makes (collect the small side rather
-    // than shuffle), and the r16 A/B adjudication showed chains of
-    // short jobs are precisely what a busy cluster/host taxes. The
-    // contract is unchanged and algorithm-invisible (comp = the
-    // component's min id; union-by-min makes every root the min by
-    // construction), so outputs are row-identical to the star rounds
-    // — ClusterSpec pins local == distributed on the same pairs. The
-    // collect is edge-bounded (≤ localMaxEdges × 16 bytes, the same
-    // size class as a broadcast build side); LONG ids only (the one
-    // id type the pair producers emit) — anything else keeps the
-    // distributed loop. At corpus scale the threshold never binds
-    // and the star rounds run exactly as before.
-    val localMax = ccLocalMaxEdges(pairs.sparkSession)
-    if (edgesCount <= localMax &&
-        edges.schema.fields(0).dataType ==
-          org.apache.spark.sql.types.LongType) {
-      val parent = new java.util.HashMap[java.lang.Long, java.lang.Long](
-        (edgesCount * 2).toInt + 16)
-      def find(x: Long): Long = {
-        var root = x
-        while (parent.get(root) != root) root = parent.get(root)
-        var c = x
-        while (c != root) { val n = parent.get(c); parent.put(c, root); c = n }
-        root
-      }
-      edges.collect().foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) {
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      val out = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size())
-      parent.keySet().forEach { id =>
-        out.add(org.apache.spark.sql.Row(id.longValue(), find(id)))
-      }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      return pairs.sparkSession.createDataFrame(out,
+    val edgesCount = edges.count() // materializes the checkpoint
+    val longIds = edges.schema.fields(0).dataType == LongType
+    if (longIds && edgesCount <= ccLocalMaxEdges(spark)) {
+      val rows = edges.collect()
+      Checkpoints.release(edges)
+      val (ids, roots) = unionFindMin(rows.map(_.getLong(0)), rows.map(_.getLong(1)),
+        rows.length)
+      return spark.createDataFrame(
+        java.util.Arrays.asList(ids.indices.map(k => Row(ids(k), roots(k))): _*),
         StructType(Seq(StructField("id", LongType, nullable = false),
           StructField("comp", LongType, nullable = false))))
+    }
+    if (longIds) {
+      val enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+      val contracted = edges.as(enc).mapPartitions { it =>
+        val us = new scala.collection.mutable.ArrayBuilder.ofLong
+        val vs = new scala.collection.mutable.ArrayBuilder.ofLong
+        it.foreach { case (u, v) => us += u; vs += v }
+        val u = us.result()
+        val (ids, roots) = unionFindMin(u, vs.result(), u.length)
+        ids.indices.iterator.filter(k => ids(k) != roots(k)).map(k => (ids(k), roots(k)))
+      }(enc).toDF("u", "v").localCheckpoint(eager = false)
+      contracted.count() // reads `edges` a last time
+      Checkpoints.release(edges)
+      edges = contracted
     }
     var iter = 0
     var converged = false
@@ -220,15 +246,12 @@ object Dedup {
         .select(col("v").as("u"), col("__mn").as("v"))
         .unionByName(ssMin.select(col("u"), col("__mn").as("v")))
         .distinct().localCheckpoint(eager = false)
-      // count() materializes next's checkpoint (it still reads the
-      // previous round's checkpointed edges, which stay resident —
-      // nothing here unpersists mid-lineage); the exceptAll set-equality
-      // confirmation only runs once the counts match (near convergence)
-      val nextCount = next.count()
-      converged = nextCount == edgesCount &&
-        next.exceptAll(edges).head(1).isEmpty
+      // count() materializes next's checkpoint; after it nothing reads
+      // the previous table
+      next.count()
+      Checkpoints.release(edges)
       edges = next
-      edgesCount = nextCount
+      converged = isStarForest(edges)
       iter += 1
     }
     if (!converged)
@@ -241,6 +264,19 @@ object Dedup {
       .unionByName(edges.select(col("v").as("id"), col("v").as("comp")))
       .distinct()
   }
+
+  /** True when canonical edges (u > v) form disjoint stars: every u
+    * hangs from exactly one v, and no v hangs from anything. Each star
+    * is then rooted at its minimum, and stars are the components. One
+    * aggregate over the edges, so the star rounds stop on the round
+    * that reaches the fixpoint instead of running one more to see it
+    * repeat. */
+  private def isStarForest(edges: DataFrame): Boolean =
+    edges.select(col("u").as("x"), lit(1).as("up"))
+      .unionByName(edges.select(col("v").as("x"), lit(0).as("up")))
+      .groupBy(col("x")).agg(sum(col("up")).as("up"), count(lit(1)).as("n"))
+      .filter(col("up") > 1 || (col("up") === 1 && col("n") > 1))
+      .head(1).isEmpty
 
   /** Full near-dup dedup verdicts: every id in `pairs` mapped to its
     * cluster and a keep/drop mark (keeper = min id per component). At

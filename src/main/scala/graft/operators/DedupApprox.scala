@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.{FirstBandPairsExpr, SortedJaccardExpr}
 
 /** Near-duplicate detection for corpus-scale dedup: MinHash+LSH,
   * SimHash, and n-gram Jaccard (the standard pretraining-dedup stack:
@@ -122,8 +125,10 @@ object DedupApprox {
     h
   }
 
-  /** Distinct n-gram shingles as 31-bit hashes — no shingle strings are
-    * ever built: token hashes fold positionally over a sliding window.
+  /** Distinct n-gram shingles as 31-bit hashes, ascending — no
+    * shingle strings are ever built: token hashes fold positionally
+    * over a sliding window. Sorted and duplicate-free, so two sets
+    * verify by one merge pass ([[graft.functions.SetKernels.sortedJaccard]]).
     * Hash-set Jaccard equals string-set Jaccard up to the (replayable)
     * collision rate — immaterial against a 0.x threshold. */
   private[graft] def shingleHashesOf(text: String, n: Int): Array[Long] = {
@@ -132,18 +137,25 @@ object DedupApprox {
     val th = new Array[Long](toks.length)
     var i = 0
     while (i < toks.length) { th(i) = tokenHash31(toks(i)); i += 1 }
-    val set = new scala.collection.mutable.LinkedHashSet[Long]
     val upper = if (toks.length < n) 1 else toks.length - n + 1
     val w = if (toks.length < n) toks.length else n
+    val hs = new Array[Long](upper)
     i = 0
     while (i < upper) {
       var h = 0L
       var j = i
       while (j < i + w) { h = (h * 1000003 + th(j)) % HashMod; j += 1 }
-      set += h
+      hs(i) = h
       i += 1
     }
-    set.toArray
+    java.util.Arrays.sort(hs)
+    var m = 0
+    i = 0
+    while (i < upper) {
+      if (m == 0 || hs(i) != hs(m - 1)) { hs(m) = hs(i); m += 1 }
+      i += 1
+    }
+    if (m == upper) hs else java.util.Arrays.copyOf(hs, m)
   }
 
   /** Minwise signature over 31-bit shingle hashes: vᵢ = (aᵢ·h + bᵢ)
@@ -174,20 +186,27 @@ object DedupApprox {
     flatten(transform(arr, (m, i) =>
       transform(slice(arr, i + 2, size(arr)), n => struct(m.as("a"), n.as("b")))))
 
-  /** Bucketed pair expansion without a self-join: group candidates by
-    * bucket key, expand ordered in-bucket pairs natively. One shuffle;
-    * the upstream (signatures) is computed once, not once per join
-    * branch. Buckets above `maxBucket` are dropped — a degenerate key
-    * (empty docs, all-identical boilerplate) would otherwise expand
-    * quadratically inside a single task; that cap is the standard
-    * recall/cost trade and is logged by callers that care. */
-  private[operators] def explodePairs(df: DataFrame, bucketCols: Seq[Column],
-                                      member: Column,
-                                      maxBucket: Int): DataFrame =
-    df.groupBy(bucketCols: _*)
-      .agg(collect_list(member).as("ms"))
-      .filter(size(col("ms")).between(2, maxBucket))
-      .select(explode(pairExpand(col("ms"))).as("p"))
+  /** Band hashes of a signature: `bands` 64-bit-safe folds of its
+    * consecutive slices. */
+  private def bandHashes(sig: Array[Long], bands: Int): Array[Long] = {
+    val rows = sig.length / bands
+    Array.tabulate(bands) { b =>
+      var h = 7L
+      var i = b * rows
+      while (i < (b + 1) * rows) { h = (h * 31 + sig(i)) % HashMod; i += 1 }
+      h
+    }
+  }
+
+  /** text → its `bands` LSH band hashes, in ONE UDF: tokenize,
+    * hash-shingle, sign and band in a single pass. */
+  private def bandKeys(text: Column, shingleN: Int, numHashes: Int, bands: Int): Column = {
+    require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
+    val ps = perms(numHashes)
+    udf { (t: String) =>
+      bandHashes(minhashSigInt(shingleHashesOf(t, shingleN), ps), bands)
+    }.apply(text)
+  }
 
   /** LSH band-key index of a corpus: (idCol, band, band_hash) — bands
     * rows per doc, each a 64-bit-safe fold of a signature slice. This
@@ -202,23 +221,10 @@ object DedupApprox {
     * shuffle. */
   def minhashIndex(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, numHashes: Int = 64,
-                   bands: Int = 16): DataFrame = {
-    require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    val rows = numHashes / bands
-    val ps = perms(numHashes)
-    val bandsUdf = udf { (text: String) =>
-      val sig = minhashSigInt(shingleHashesOf(text, shingleN), ps)
-      Array.tabulate(bands) { b =>
-        var h = 7L
-        var i = b * rows
-        while (i < (b + 1) * rows) { h = (h * 31 + sig(i)) % HashMod; i += 1 }
-        h
-      }
-    }
-    df.select(col(idCol), posexplode(bandsUdf(col(textCol))))
+                   bands: Int = 16): DataFrame =
+    df.select(col(idCol), posexplode(bandKeys(col(textCol), shingleN, numHashes, bands)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
       .select(col(idCol), col("band"), col("band_hash"))
-  }
 
   /** Incremental (delta-vs-index) near-dup pairs: every doc of `delta`
     * against an already-indexed corpus, WITHOUT re-scanning it. This is
@@ -273,12 +279,9 @@ object DedupApprox {
       .select(col(idCol).as("idx_id"), shHashUdf(col(textCol)).as("sh_i"))
     cand
       .join(newSh, Seq("new_id")).join(idxSh, Seq("idx_id"))
-      .withColumn("__u", size(array_union(col("sh_n"), col("sh_i"))))
       // empty-vs-empty: undefined (null), dropped — see minhashPairs
       .select(col("new_id"), col("idx_id"),
-        when(col("__u") > 0,
-          size(array_intersect(col("sh_n"), col("sh_i"))).cast("double") /
-            col("__u")).as("jaccard"))
+        SortedJaccardExpr(col("sh_n"), col("sh_i")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -306,19 +309,11 @@ object DedupApprox {
                                 shingleN: Int = 3, numHashes: Int = 64,
                                 bands: Int = 16, threshold: Double = 0.5,
                                 maxBucket: Int = 500): DataFrame = {
-    val rows = numHashes / bands
     val ps = perms(numHashes)
     // one text pass: shingle hashes once, signature + band keys from them
     val keysUdf = udf { (text: String) =>
       val sh = shingleHashesOf(text, shingleN)
-      val sig = minhashSigInt(sh, ps)
-      val bk = Array.tabulate(bands) { b =>
-        var h = 7L
-        var i = b * rows
-        while (i < (b + 1) * rows) { h = (h * 31 + sig(i)) % HashMod; i += 1 }
-        h
-      }
-      (sh, bk)
+      (sh, bandHashes(minhashSigInt(sh, ps), bands))
     }
     val banded = delta
       .withColumn("k", keysUdf(col(textCol)))
@@ -336,12 +331,9 @@ object DedupApprox {
       .join(idxBuckets, Seq("band", "band_hash"))
       .select(col("new_id"), col("sh_n"), explode(col("ms")).as("idx_id"))
       .join(idxSh, Seq("idx_id"))
-      .withColumn("__u", size(array_union(col("sh_n"), col("sh_i"))))
       // empty-vs-empty: undefined (null), dropped — see minhashPairs
       .select(col("new_id"), col("idx_id"),
-        when(col("__u") > 0,
-          size(array_intersect(col("sh_n"), col("sh_i"))).cast("double") /
-            col("__u")).as("jaccard"))
+        SortedJaccardExpr(col("sh_n"), col("sh_i")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -359,27 +351,91 @@ object DedupApprox {
   def minhashVerdictBatch(batch: DataFrame, targetDir: String): Unit =
     graft.plans.Ledger.land(batch, targetDir, Seq("new_id", "idx_id"))
 
+  /** The LSH candidates of [[minhashPairs]], each pair once:
+    * `(id, bh)` rows (a doc key and its band hashes) → `(id_a, id_b)`,
+    * id_a < id_b, for every pair sharing a bucket of at most
+    * `maxBucket` docs in some band, emitted by the lowest such band.
+    * A key carried by several rows sits in every bucket of each of its
+    * rows (each row counts toward the cap, as in a per-row grouping);
+    * identical rows pair exactly like one, and rows of one key with
+    * differing texts may emit a pair more than once. */
+  private[operators] def firstBandCandidates(keyed: DataFrame, maxBucket: Int): DataFrame = {
+    val spark = keyed.sparkSession
+    // the configured shuffle width is the floor; the default
+    // parallelism lifts it when it is set below the core count
+    val n = math.max(spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    keyed
+      .select(col("id"), posexplode(col("bh")).as(Seq("band", "h")))
+      .repartition(n, col("band"), col("h"))
+      .withColumn("h", when(
+        count(lit(1)).over(Window.partitionBy(col("band"), col("h"))) <= maxBucket, col("h")))
+      .repartition(n, col("id"))
+      .groupBy(col("id"))
+      .agg(array_distinct(array_sort(collect_list(struct(col("band"), col("h"))))).as("bs"))
+      // one bucket per band, in band order, unless the key came on rows
+      // whose buckets differ: then bh(b) is read by band, the key's max
+      // unmasked hash in band b (the lookup is the slow path)
+      .select(col("id"),
+        when(size(col("bs")) === array_max(col("bs.band")) + 1, col("bs.h"))
+          .otherwise(transform(sequence(lit(0), array_max(col("bs.band"))), b =>
+            array_max(transform(filter(col("bs"), s => s("band") === b), s => s("h")))))
+          .as("bh"),
+        explode(col("bs")).as("s"))
+      .select(col("id"), col("bh"), col("s.band").as("band"), col("s.h").as("h"))
+      .filter(col("h").isNotNull)
+      .repartition(n, col("band"), col("h"))
+      .groupBy(col("band"), col("h"))
+      .agg(collect_list(struct(col("id"), col("bh"))).as("ms"))
+      .select(explode(FirstBandPairsExpr(col("band"), col("ms"))).as("p"))
+      .select(least(col("p.a"), col("p.b")).as("id_a"),
+        greatest(col("p.a"), col("p.b")).as("id_b"))
+  }
+
   /** MinHash+LSH candidate pairs verified by exact Jaccard.
     * Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
-    * bands*rowsPerBand must equal numHashes.
+    * bands*rowsPerBand must equal numHashes. A doc with a null
+    * `idCol` is never paired. A key repeated over several rows (a
+    * redelivered doc) pairs with every other doc that one of its rows
+    * collides with, and each of its rows is verified against that doc.
     *
-    * Shuffle discipline (the sf0.1 profile that motivated it): carrying
-    * the shingle sets (~KBs/doc) through the band explode multiplies
-    * them ×bands through the groupBy shuffle — 80% of the operator's
-    * wall time. So the LSH stage shuffles only (band, band_hash, id),
-    * and verification joins the candidate pairs BACK to the shingle
-    * sets.
+    * Candidates: a pair is a candidate when it shares a bucket (band,
+    * band hash) of at most `maxBucket` docs in some band. Each
+    * candidate is EMITTED ONCE, by the lowest such band, so no distinct
+    * over per-band copies is needed (a clustered corpus collides in
+    * most of its 16 bands: 8.3M copies of 524k pairs at the benchmark
+    * corpus). Three small shuffles of per-doc rows get there:
+    *   1. a per-bucket count over the (id, band, hash) rows masks a
+    *      doc's hash to null in every band whose bucket is over the
+    *      cap, so a capped bucket neither emits pairs nor hides a pair
+    *      from a higher band;
+    *   2. the masked hashes regroup into one array per doc;
+    *   3. each doc joins its non-null buckets carrying that array, and
+    *      a bucket of band k emits the member pairs whose arrays agree
+    *      at no band below k ([[graft.functions.FirstBandPairsExpr]]).
+    * Each shuffle is repartitioned on its key to the configured shuffle
+    * width, raised to the default parallelism where it is set lower, so
+    * every stage, the in-bucket expansion above all, runs on every core
+    * rather than in the one task AQE coalesces these small per-doc rows
+    * to (the three stages took 1.1–1.2 s coalesced and 0.8–0.9 s spread
+    * on the benchmark corpus, 4 cores). AQE has no skew split to lose
+    * here: a per-bucket count or a per-bucket expansion needs its whole
+    * bucket in one task either way.
+    * Only band hashes shuffle (no shingle sets), and the candidate set
+    * is checkpointed once.
     *
-    * Build-side rule for that join: the PER-DOC side builds, the pair
-    * side streams. Every candidate doc appears in at least one pair, so
-    * the doc side never exceeds about twice the pair count; in
-    * clustered corpora it is far smaller, because pairs grow with the
-    * square of cluster size (26 clusters of 200 near-duplicates are
-    * ~517k pairs over ~5.2k docs). So the shingle table (id, sh) of the
-    * candidate docs is computed once — one shingle-UDF pass — and
-    * broadcast, and each pair probes it twice, by id_a and by id_b (the
-    * second probe reuses the first broadcast). The pairs stream from
-    * the checkpointed candidate set and never move.
+    * Verification joins the candidate pairs BACK to the shingle sets,
+    * and the PER-DOC side builds, the pair side streams. Every candidate
+    * doc appears in at least one pair, so the doc side never exceeds
+    * about twice the pair count; in clustered corpora it is far smaller,
+    * because pairs grow with the square of cluster size (26 clusters of
+    * 200 near-duplicates are ~517k pairs over ~5.2k docs). So the
+    * shingle table (id, sh) of the candidate docs is computed once — one
+    * shingle-UDF pass — and broadcast, and each pair probes it twice, by
+    * id_a and by id_b (the second probe reuses the first broadcast). The
+    * pairs stream from the checkpointed candidate set and never move.
+    * The shingle sets are sorted and duplicate-free, so the Jaccard is
+    * one merge pass per pair ([[graft.functions.SortedJaccardExpr]]).
     * `broadcastCandidates` governs the broadcasts of the per-doc sides
     * (the candidate-id semi-join and the shingle table); false drops
     * the hints and lets AQE shuffle both sides — same plan shape, no
@@ -389,24 +445,16 @@ object DedupApprox {
                    shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
                    threshold: Double = 0.5, maxBucket: Int = 500,
                    broadcastCandidates: Boolean = true): DataFrame = {
-    // band keys in ONE text→keys UDF: tokenize, hash-shingle, sign and
-    // band in a single pass — no shingle strings are materialized in
-    // the LSH stage, and only (bands × i64) per doc ever reach the
-    // shuffle.
-    val banded = minhashIndex(df, idCol, textCol, shingleN, numHashes, bands)
     // materialized once (localCheckpoint): the candidate set feeds the
     // candidate-id semi-join (inside the shingle table's broadcast) and
     // the pair stream, and an un-materialized set would re-run the
     // whole LSH subtree once per consumer.
-    val cand = explodePairs(banded, Seq(col("band"), col("band_hash")),
-        col(idCol), maxBucket)
-      .select(least(col("p.a"), col("p.b")).as("id_a"),
-        greatest(col("p.a"), col("p.b")).as("id_b"))
-      .dropDuplicates("id_a", "id_b")
+    val cand = firstBandCandidates(df.filter(col(idCol).isNotNull)
+        .select(col(idCol).as("id"), bandKeys(col(textCol), shingleN, numHashes, bands).as("bh")),
+        maxBucket)
       .localCheckpoint()
     // verification shingles are computed only for docs that appear in a
-    // candidate pair (a small fraction of the corpus), not corpus-wide;
-    // the 32-bit hashed form makes the exact intersect/union integer ops.
+    // candidate pair (a small fraction of the corpus), not corpus-wide.
     val shHashUdf = udf { (text: String) => shingleHashesOf(text, shingleN) }
     val bc: DataFrame => DataFrame =
       if (broadcastCandidates) broadcast else identity
@@ -420,21 +468,15 @@ object DedupApprox {
       .select(col(idCol).as("id"), shHashUdf(col(textCol)).as("sh")))
     // shingle-less pairs (both texts empty after upstream cleaning) have
     // union 0: jaccard is undefined (null), the pair is dropped by the
-    // threshold filter — matching the oracle, where 0.0/0 is NULL in DuckDB and
-    // fails the filter the same way. The guard must live INSIDE the
-    // expression (CaseWhen evaluates lazily): a separate filter(__u>0)
-    // is not safe because predicate pushdown combines it with the
-    // threshold conjunct in unspecified order, and ANSI division
-    // throws before the guard runs.
+    // threshold filter — matching the oracle, where 0.0/0 is NULL in
+    // DuckDB and fails the filter the same way. The null comes from
+    // inside the kernel, so no separate guard can be reordered against
+    // the threshold conjunct.
     cand
       .join(docSh.as("a"), col("id_a") === col("a.id"))
       .join(docSh.as("b"), col("id_b") === col("b.id"))
-      .select(col("id_a"), col("id_b"), col("a.sh").as("sh_a"), col("b.sh").as("sh_b"))
-      .withColumn("__u", size(array_union(col("sh_a"), col("sh_b"))))
       .select(col("id_a"), col("id_b"),
-        when(col("__u") > 0,
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            col("__u")).as("jaccard"))
+        SortedJaccardExpr(col("a.sh"), col("b.sh")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 

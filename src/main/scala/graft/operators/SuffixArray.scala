@@ -78,20 +78,6 @@ object SuffixArray {
   private def hasMembers(ranks: DataFrame): Boolean =
     ranks.columns.contains("members")
 
-  /** The checkpointed RDD backing a localCheckpoint'ed Dataset, so a
-    * superseded round table's blocks can be freed eagerly instead of
-    * waiting for ContextCleaner GC. `Dataset.localCheckpoint` embeds
-    * the materialized RDD in a [[org.apache.spark.sql.execution
-    * .LogicalRDD]] leaf; unpersisting THAT RDD (not `df.rdd`, which is
-    * a fresh deserializing derivation) releases the block-manager
-    * memory. Safe only once no later consumer can recompute from it. */
-  private def checkpointRdd(df: DataFrame)
-      : Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-      case _ => None
-    }
-
   /** The doubling chain: per-round rank tables (k, ranks-after-round-k)
     * for k = 1..rounds, each localCheckpoint'ed so later consumers see
     * a flat lineage. After round k, `r` identifies the suffix's first
@@ -191,7 +177,7 @@ object SuffixArray {
     val out = scala.collection.mutable.ArrayBuffer[(Int, DataFrame)](1 -> cur)
     var k = 2
     var done = allUnique(cur) // materializes the entry checkpoint
-    var prevCk = checkpointRdd(cur)
+    var prev = cur
     while (k <= rounds && !done) {
       cur = oneRound(cur, k)
       // the probe materializes round k FIRST; only then free — unless
@@ -200,8 +186,8 @@ object SuffixArray {
       // next round's shuffle starts). Freeing before the probe would
       // truncate the lineage the lazy round-k checkpoint still reads.
       done = allUnique(cur)
-      if (!keepAll) prevCk.foreach(_.unpersist(blocking = true))
-      prevCk = checkpointRdd(cur)
+      if (!keepAll) Checkpoints.release(prev, blocking = true)
+      prev = cur
       out += (k -> cur)
       k += 1
     }
@@ -361,15 +347,15 @@ object SuffixArray {
     require(n >= 0, s"n must be >= 0 (got $n)")
     var cur = state.ranks
     var k = state.round + 1
-    var prevCk: Option[org.apache.spark.rdd.RDD[_]] = None
+    var prev: Option[DataFrame] = None
     var done = allUnique(cur)
     while (k <= state.round + n && !done) {
       cur = oneRound(cur, k)
       // materialize (probe) before freeing the superseded round — the
       // lazy round-k checkpoint still reads it until then
       done = allUnique(cur)
-      prevCk.foreach(_.unpersist(blocking = true))
-      prevCk = checkpointRdd(cur)
+      prev.foreach(Checkpoints.release(_, blocking = true))
+      prev = Some(cur)
       k += 1
     }
     SuffixState(state.round + n, cur)

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Blocklist, Dedup, DedupApprox, Export, TextAnalysis}
+import graft.operators.{Blocklist, Checkpoints, Dedup, DedupApprox, Export, TextAnalysis}
 
 /** The canonical pretraining-corpus prep recipe — the published
   * pipeline order (C4, Raffel et al. 2020 §2.2; CCNet, Wenzek et al.
@@ -646,9 +646,8 @@ object CorpusPipeline {
       sigs.join(verdicts.filter(col("keep")), Seq("media_id"), "left_semi")
         .write.mode("append").parquet(s"$baseDir/signatures")
     })
-    sigs.unpersist()
-    verdicts.unpersist()
-    ()
+    Checkpoints.release(sigs)
+    Checkpoints.release(verdicts)
   }
 
   /** Read the current card from the partial dirs: natural-key dedup

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.Dedup
+import graft.operators.{Checkpoints, Dedup}
 
 /** The effectively-once contract of every delta sink, written once.
   * It is the reference's idempotence rule (the consumer's per-url
@@ -52,7 +52,9 @@ object Ledger {
     * concurrently (see [[concurrently]]; on q109 and q111 that beat
     * sequential partials, `records/ab_r17_ledger.json`), and a failing
     * one keeps the ids from landing. Writes that must run in order go
-    * into one partial. Returns whether anything landed. */
+    * into one partial. The fresh set's checkpoint blocks are released
+    * on return, so nothing may read `fresh` after the commit. Returns
+    * whether anything landed. */
   def commit(fresh: DataFrame, id: Column, idsDir: String)
             (partials: (() => Unit)*): Boolean =
     try {
@@ -62,10 +64,7 @@ object Ledger {
         fresh.select(id).write.mode("append").parquet(idsDir)
       }
       landed
-    } finally {
-      fresh.unpersist()
-      ()
-    }
+    } finally Checkpoints.release(fresh)
 
   /** Insert-if-absent: `rows`, one per `keys`, minus the keys that
     * `targetDir` already holds, appended to `targetDir`. The keys are

@@ -86,6 +86,127 @@ class DedupApproxSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(builds.nonEmpty && builds.forall(o => !o.contains("id_a") && !o.contains("id_b")))
   }
 
+  private def bandRows(rows: Seq[(Long, Seq[Long])]) = rows.toDF("id", "bh")
+
+  test("firstBandCandidates: a capped lower band does not hide a higher-band pair, which comes out once") {
+    // bucket (0, 5) holds docs 1, 2 and three fillers: over a cap of 3.
+    // 1 and 2 also share (1, 7) and (2, 9), both uncapped.
+    val rows = Seq(1L -> Seq(5L, 7L, 9L), 2L -> Seq(5L, 7L, 9L)) ++
+      (10L to 12L).map(i => i -> Seq(5L, 100L + i, 200L + i))
+    val out = DedupApprox.firstBandCandidates(bandRows(rows), maxBucket = 3)
+      .as[(Long, Long)].collect()
+    assert(out.toSeq == Seq((1L, 2L)))
+  }
+
+  test("firstBandCandidates: a pair that collides only in capped buckets is not emitted") {
+    // 3 and 4 share only (0, 6), which five docs crowd past the cap
+    val rows = Seq(3L -> Seq(6L, 31L, 41L), 4L -> Seq(6L, 32L, 42L)) ++
+      (20L to 22L).map(i => i -> Seq(6L, 100L + i, 200L + i))
+    val out = DedupApprox.firstBandCandidates(bandRows(rows), maxBucket = 3).collect()
+    assert(out.isEmpty)
+  }
+
+  test("firstBandCandidates = every pair of keys whose rows share an uncapped bucket, each once") {
+    val rnd = new scala.util.Random(8)
+    // 4 bands over a small hash range: many multi-band collisions, and
+    // some buckets over a cap of 6. Every third key comes twice: on an
+    // identical row (even keys) or on a row of its own (odd keys)
+    val base = (0L until 80L).map(i => i -> Seq.fill(4)(rnd.nextInt(12).toLong))
+    val rows = base ++ base.filter(_._1 % 3 == 0).map { case (i, bh) =>
+      i -> (if (i % 2 == 0) bh else Seq.fill(4)(rnd.nextInt(12).toLong)) }
+    val size = rows.flatMap { case (_, bh) => bh.zipWithIndex }
+      .groupBy(identity).view.mapValues(_.size).toMap
+    val expected = (for {
+      (a, ba) <- rows; (b, bb) <- rows if a < b
+      if ba.indices.exists(k => ba(k) == bb(k) && size((ba(k), k)) <= 6)
+    } yield (a, b)).toSet
+    val out = DedupApprox.firstBandCandidates(bandRows(rows), maxBucket = 6)
+      .as[(Long, Long)].collect()
+    assert(expected.nonEmpty && size.values.exists(_ > 6))
+    assert(out.toSet == expected)
+    // only a key whose rows differ may repeat a pair
+    val differing = (3L until 80L by 6).toSet
+    val once = out.filterNot { case (a, b) => differing(a) || differing(b) }
+    assert(once.length == once.toSet.size)
+  }
+
+  test("firstBandCandidates: a key on two rows keeps its bands, so a higher-band pair still comes out") {
+    // doc 1 arrives twice; doc 2 collides with it in band 2 only
+    val twice = Seq(1L -> Seq(5L, 7L, 9L, 11L), 1L -> Seq(5L, 7L, 9L, 11L),
+      2L -> Seq(50L, 70L, 9L, 12L))
+    val out = DedupApprox.firstBandCandidates(bandRows(twice), maxBucket = 3)
+      .as[(Long, Long)].collect()
+    assert(out.toSeq == Seq((1L, 2L)))
+    // doc 3's two rows differ; doc 4 collides with its second row in
+    // band 3 only, doc 5 with its first row in band 1 only
+    val differing = Seq(3L -> Seq(1L, 2L, 3L, 4L), 3L -> Seq(10L, 20L, 30L, 40L),
+      4L -> Seq(91L, 92L, 93L, 40L), 5L -> Seq(81L, 2L, 83L, 84L))
+    val out2 = DedupApprox.firstBandCandidates(bandRows(differing), maxBucket = 3)
+      .as[(Long, Long)].collect()
+    assert(out2.toSet == Set((3L, 4L), (3L, 5L)))
+  }
+
+  test("minhashPairs: a redelivered doc still pairs with its near-dup") {
+    val twice = corpus.unionByName(corpus.filter($"doc_id" === 1))
+    val pairs = DedupApprox.minhashPairs(twice, "doc_id", "text", threshold = 0.5)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs == Set((1L, 2L), (3L, 4L)))
+  }
+
+  test("minhashPairs candidates: no aggregate over (id_a, id_b), every stage at least as wide as the cores") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val rnd = new scala.util.Random(9)
+    val cand = DedupApprox.firstBandCandidates(
+      bandRows((0L until 40L).map(i => i -> Seq.fill(4)(rnd.nextInt(5).toLong))), maxBucket = 500)
+    cand.collect()
+    val plan = cand.queryExecution.executedPlan
+    val keyed = collect(plan) { case a: BaseAggregateExec =>
+      a.groupingExpressions.map(_.references.map(_.name).toSet).reduceOption(_ ++ _)
+        .getOrElse(Set.empty[String]) }
+    assert(keyed.nonEmpty && keyed.forall(k => !k.contains("id_a") && !k.contains("id_b")))
+    // the configured shuffle width, floored at the default parallelism
+    def widths(shufflePartitions: Int): Seq[Int] = {
+      val was = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toLong)
+      try {
+        val c = DedupApprox.firstBandCandidates(
+          bandRows((0L until 40L).map(i => i -> Seq.fill(4)(rnd.nextInt(5).toLong))), maxBucket = 500)
+        c.collect()
+        collect(c.queryExecution.executedPlan) {
+          case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e.numPartitions
+        }
+      } finally spark.conf.set("spark.sql.shuffle.partitions", was)
+    }
+    val cores = spark.sparkContext.defaultParallelism
+    assert(widths(cores + 3) == Seq.fill(3)(cores + 3))
+    assert(widths(1) == Seq.fill(3)(cores))
+  }
+
+  test("sorted-merge Jaccard = the array_union/array_intersect Jaccard, empty and one-sided sets too") {
+    val rnd = new scala.util.Random(10)
+    def set() = Seq.fill(rnd.nextInt(12))(rnd.nextInt(20).toLong).distinct.sorted
+    val cases = Seq((Seq.empty[Long], Seq.empty[Long]), (Seq.empty[Long], Seq(1L, 2L)),
+      (Seq(3L), Seq.empty[Long]), (Seq(1L, 2L), Seq(1L, 2L))) ++ Seq.fill(200)((set(), set()))
+    val df = cases.toDF("a", "b")
+    val union = size(array_union($"a", $"b"))
+    val got = df.select(
+        graft.functions.SortedJaccardExpr($"a", $"b"),
+        when(union > 0, size(array_intersect($"a", $"b")).cast("double") / union))
+      .as[(Option[Double], Option[Double])].collect()
+    assert(got.length == cases.length)
+    assert(got.take(4).map(_._1).toSeq == Seq(None, Some(0.0), Some(0.0), Some(1.0)))
+    got.foreach { case (merge, arrayOps) =>
+      assert(merge.map(java.lang.Double.doubleToRawLongBits) ==
+        arrayOps.map(java.lang.Double.doubleToRawLongBits))
+    }
+  }
+
+  test("shingle hashes are ascending and distinct") {
+    val sh = DedupApprox.shingleHashesOf("a b c a b c a b c d", 3)
+    assert(sh.toSeq == sh.toSeq.distinct.sorted && sh.length == 4)
+  }
+
   test("simhashPairs finds the near-dups and not the unrelated doc") {
     val pairs = DedupApprox.simhashPairs(corpus, "doc_id", "text",
       maxHamming = 12, chunks = 16)

@@ -96,6 +96,16 @@ class LedgerSpec extends SparkSpec {
     }
   }
 
+  test("card and media: a committed batch leaves no checkpoint registered") {
+    callers.filter(c => c.name == "card" || c.name == "media").foreach { c =>
+      val dir = tmp(s"graft-ledger-blocks-${c.name}")
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      c.run(c.batch, dir, 0L)
+      assert(new java.io.File(s"$dir/${c.ids}").exists, c.name)
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty, c.name)
+    }
+  }
+
   test("media: a retry after a failed verdict landing lands first-delivery verdicts") {
     // four distinct rasters: every verdict is a keep. Had the keepers'
     // signatures landed before the failed verdicts, the retry would

@@ -10,8 +10,11 @@ parent runs first when i is even and second when it is odd, so the two
 sides alternate. Each run's JSON result line is kept. Untraced runs
 also get a summary per end-to-end metric of BENCHMARK.json: each side's
 quartiles and median, the pairs the change won (ties count for
-neither), the median gap and the parent's quartile spread. A traced run
-keeps its per-layer metrics under `layers`.
+neither), the median gap, the parent's quartile spread (also as a share
+of its median), and `over_bound`: whether the change's median is worse
+than the parent's by more than the metric's BENCHMARK.json bound. The
+printed summary marks such a metric OVER BOUND. A traced run keeps its
+per-layer metrics under `layers`.
 
 The section lands under `--key` (default: the workload) in `--out`;
 other sections already in that file are kept, so one record can hold
@@ -71,13 +74,19 @@ def summary(pairs, end_to_end):
             continue
         wins = sum(1 for a, b in zip(par, chg) if (b < a if lower else b > a))
         qp, qc = quartiles(par), quartiles(chg)
+        ratio = qc[1] / qp[1] if qp[1] else None
+        worse = ratio is not None and (ratio > 1 + m["bound"] if lower
+                                       else ratio < 1 - m["bound"])
         out[name] = {
             "parent_q1_median_q3": qp,
             "change_q1_median_q3": qc,
             "change_wins": f"{wins}/{len(par)}",
             "median_gap": qc[1] - qp[1],
             "parent_iqr": qp[2] - qp[0],
-            "change_over_parent": qc[1] / qp[1] if qp[1] else None,
+            "parent_spread": (qp[2] - qp[0]) / qp[1] if qp[1] else None,
+            "change_over_parent": ratio,
+            "bound": m["bound"],
+            "over_bound": worse,
         }
     return out
 
@@ -136,9 +145,13 @@ def main():
         json.dump(record, f, indent=1)
         f.write("\n")
     for name, s in section.get("summary", {}).items():
+        spread = s["parent_spread"]
         print(f"{name}: parent {s['parent_q1_median_q3'][1]:.3f} -> change "
               f"{s['change_q1_median_q3'][1]:.3f}, wins {s['change_wins']}, "
-              f"gap {s['median_gap']:.3f}, parent IQR {s['parent_iqr']:.3f}")
+              f"gap {s['median_gap']:.3f}, parent IQR {s['parent_iqr']:.3f}"
+              + (f" ({spread:.0%} of its median)" if spread is not None else "")
+              + (f"  OVER BOUND ({s['change_over_parent']:.3f}x, bound "
+                 f"{s['bound']})" if s["over_bound"] else ""))
     return 0
 
 
