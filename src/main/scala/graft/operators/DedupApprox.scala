@@ -29,9 +29,32 @@ object DedupApprox {
 
   // ---- shingling -------------------------------------------------------
 
-  private[graft] def tokensOf(text: String): Array[String] =
-    if (text == null) Array.empty
-    else text.toLowerCase.split("[^a-z0-9']+").filter(_.nonEmpty)
+  private def isTokenChar(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '\''
+
+  /** The corpus tokenizer as one char scan: calls `f(lower, start, end)`
+    * for each maximal run of `[a-z0-9']` in `lower = text.toLowerCase`,
+    * in order. The runs are exactly the non-empty pieces of
+    * `lower.split("[^a-z0-9']+")`; the regex split cost most of each
+    * kernel built on it. Nothing for a null text. */
+  private[graft] def foreachToken(text: String)(f: (String, Int, Int) => Unit): Unit = {
+    if (text == null) return
+    val s = text.toLowerCase
+    val n = s.length
+    var i = 0
+    while (i < n) {
+      while (i < n && !isTokenChar(s.charAt(i))) i += 1
+      val start = i
+      while (i < n && isTokenChar(s.charAt(i))) i += 1
+      if (i > start) f(s, start, i)
+    }
+  }
+
+  private[graft] def tokensOf(text: String): Array[String] = {
+    val out = new scala.collection.mutable.ArrayBuilder.ofRef[String]
+    foreachToken(text)((s, a, b) => out += s.substring(a, b))
+    out.result()
+  }
 
   private[graft] def shinglesOf(text: String, n: Int): Array[String] = {
     val toks = tokensOf(text)
@@ -118,10 +141,12 @@ object DedupApprox {
   private[graft] val EmptySentinel: Long = HashMod
 
   /** 31-bit polynomial hash of a token (base 131, mod [[HashMod]]). */
-  private[graft] def tokenHash31(t: String): Long = {
+  private[graft] def tokenHash31(t: String): Long = tokenHash31(t, 0, t.length)
+
+  private def tokenHash31(s: String, a: Int, b: Int): Long = {
     var h = 0L
-    var i = 0
-    while (i < t.length) { h = (h * 131 + t.charAt(i)) % HashMod; i += 1 }
+    var i = a
+    while (i < b) { h = (h * 131 + s.charAt(i)) % HashMod; i += 1 }
     h
   }
 
@@ -132,15 +157,14 @@ object DedupApprox {
     * Hash-set Jaccard equals string-set Jaccard up to the (replayable)
     * collision rate — immaterial against a 0.x threshold. */
   private[graft] def shingleHashesOf(text: String, n: Int): Array[Long] = {
-    val toks = tokensOf(text)
-    if (toks.isEmpty) return Array.empty
-    val th = new Array[Long](toks.length)
-    var i = 0
-    while (i < toks.length) { th(i) = tokenHash31(toks(i)); i += 1 }
-    val upper = if (toks.length < n) 1 else toks.length - n + 1
-    val w = if (toks.length < n) toks.length else n
+    val thb = new scala.collection.mutable.ArrayBuilder.ofLong
+    foreachToken(text)((s, a, b) => thb += tokenHash31(s, a, b))
+    val th = thb.result()
+    if (th.isEmpty) return Array.empty
+    val upper = if (th.length < n) 1 else th.length - n + 1
+    val w = if (th.length < n) th.length else n
     val hs = new Array[Long](upper)
-    i = 0
+    var i = 0
     while (i < upper) {
       var h = 0L
       var j = i

@@ -6,9 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.functions.Analyzer
 
 /** Text analysis for large-scale training-data pipelines: language ID,
-  * quality scoring, token counting, document fingerprinting. All but
-  * the rolling hash are pure native column expressions (codegen'd, no
-  * UDF serde in the 100 TB hot path).
+  * quality scoring, token counting, document fingerprinting. Per-doc
+  * signals over the corpus tokenizer (language, quality, repetition)
+  * are hand-written single-pass kernels wrapped as UDFs: their Column
+  * forms re-tokenize with a regex split per use and run per-token
+  * lambdas interpreted, several times the kernels' cost
+  * (SCALING.md round 17). The rest are native column expressions.
   */
 object TextAnalysis {
 
@@ -23,66 +26,153 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "les", "de", "des", "et", "est", "une", "dans", "pour"),
     "it" -> Seq("il", "di", "che", "la", "per", "con", "del", "una", "sono", "non"))
 
-  /** Scalar form of [[withLangId]]: same distinct-token overlap,
-    * same (score, lang) argmax tie order. For the SQL registry. */
-  private[graft] def langIdOf(text: String): (String, Int) = {
-    val toks =
-      if (text == null) Set.empty[String]
-      else text.toLowerCase.split("[^a-z0-9']+").filter(_.nonEmpty).toSet
-    val (score, lang) = Profiles.toSeq.sortBy(_._1)
-      .map { case (l, words) => (words.count(toks), l) }.max
-    (if (score > 0) lang else "und", score)
+  /** A token of at most 10 chars packed into a Long, 6 bits a char
+    * (`a-z` → 1..26, `0-9` → 27..36, `'` → 37; no char codes 0, so the
+    * packing is injective across lengths); -1 for longer tokens. The
+    * kernels below look short tokens up in a sorted `Long` table this
+    * way, without building the token's string. */
+  private def packedToken(s: String, a: Int, b: Int): Long = {
+    if (b - a > 10) return -1L
+    var k = 0L
+    var i = a
+    while (i < b) {
+      val c = s.charAt(i)
+      k = (k << 6) | (if (c >= 'a') c - 'a' + 1 else if (c >= '0') c - '0' + 27 else 37)
+      i += 1
+    }
+    k
   }
 
-  /** Column form of the language argmax: `(score, lang)` max over the
-    * profile overlaps — shared by [[withLangId]] and
-    * [[Report.corpusCard]] so every consumer has the identical tie
-    * order. */
+  private def packed(word: String): Long = packedToken(word, 0, word.length)
+
+  private val ProfileLangs: Array[String] = Profiles.keys.toArray.sorted
+
+  /** Sorted packed profile words, and beside each one a bit per
+    * (profile, word) it is: a doc's bit set is then the distinct
+    * profile words it contains, and a profile's score the popcount of
+    * its slice. */
+  private val (profileKeys, profileBits, profileSlices) = {
+    val words = ProfileLangs.map(l => Profiles(l).distinct)
+    require(words.map(_.size).sum <= 64 && words.flatten.forall(_.length <= 10))
+    val offsets = words.scanLeft(0)(_ + _.size)
+    val bits = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
+    for ((ws, p) <- words.zipWithIndex; (w, j) <- ws.zipWithIndex)
+      bits(packed(w)) |= 1L << (offsets(p) + j)
+    val keys = bits.keys.toArray.sorted
+    (keys, keys.map(bits), words.indices.map(p =>
+      ((1L << words(p).size) - 1) << offsets(p)).toArray)
+  }
+
+  /** The language kernel: `(score, lang)`, the `(score, lang)` maximum
+    * over the profiles, where a profile's score is how many of its
+    * words the doc's tokens contain (distinct words; the tokens are
+    * [[DedupApprox.foreachToken]]'s). One token scan, no token
+    * strings. Null for a null text. */
+  private[graft] def langScoreOf(text: String): (Int, String) = {
+    if (text == null) return null
+    var seen = 0L
+    DedupApprox.foreachToken(text) { (s, a, b) =>
+      val k = java.util.Arrays.binarySearch(profileKeys, packedToken(s, a, b))
+      if (k >= 0) seen |= profileBits(k)
+    }
+    var bestScore = -1
+    var bestLang: String = null
+    var p = 0
+    while (p < ProfileLangs.length) {
+      val score = java.lang.Long.bitCount(seen & profileSlices(p))
+      // `>=`: the langs ascend, so a tie goes to the greater lang
+      if (score >= bestScore) { bestScore = score; bestLang = ProfileLangs(p) }
+      p += 1
+    }
+    (bestScore, bestLang)
+  }
+
+  private val langScoreUdf = udf { (text: String) => langScoreOf(text) }
+
+  /** Scalar form of [[withLangId]] for the SQL registry: the same
+    * kernel, "und" below score 1 and for a null text. */
+  private[graft] def langIdOf(text: String): (String, Int) = {
+    val best = langScoreOf(text)
+    if (best == null) ("und", 0)
+    else (if (best._1 > 0) best._2 else "und", best._1)
+  }
+
+  /** Column form of the language argmax, `struct(score, lang)` —
+    * [[langScoreOf]], so [[withLangId]], [[Report.corpusCard]] and the
+    * `lang_id` SQL function share one tie order (the order
+    * `greatest(struct(score, lang))` over the profiles gives). */
   private[graft] def langBest(text: Column): Column = {
-    val toks = array_distinct(Analyzer.tokenize(text))
-    greatest(Profiles.toSeq.sortBy(_._1).map { case (lang, words) =>
-      struct(size(array_intersect(toks, typedLit(words))).as("score"),
-        lit(lang).as("lang"))
-    }: _*)
+    val best = langScoreUdf(text)
+    struct(best("_1").as("score"), best("_2").as("lang"))
   }
 
   /** Language-ID: argmax over stopword-overlap scores. Emits
     * (lang_pred, lang_score). Unknown → "und". */
-  def withLangId(df: DataFrame, textCol: String): DataFrame = {
-    val best = langBest(col(textCol))
-    df.withColumn("lang_pred",
-        when(best.getField("score") > 0, best.getField("lang")).otherwise("und"))
-      .withColumn("lang_score", best.getField("score"))
-  }
+  def withLangId(df: DataFrame, textCol: String): DataFrame =
+    df.withColumn("__l", langBest(col(textCol)))
+      .withColumn("lang_pred",
+        when(col("__l.score") > 0, col("__l.lang")).otherwise("und"))
+      .withColumn("lang_score", col("__l.score"))
+      .drop("__l")
 
   // ---- quality scoring -------------------------------------------------
 
+  private val StopKeys: Array[Long] = Analyzer.StopWords.toArray.map(packed).sorted
+
+  /** The quality kernel: `(n_tokens, stop_hits, token_chars, punct_cps,
+    * cps)` from one token scan and one char scan. Tokens are
+    * [[DedupApprox.foreachToken]]'s (= `Analyzer.tokenize`);
+    * `cps` is Spark's `length()` (code points) and `punct_cps` the
+    * code points outside `[a-zA-Z0-9\s]` (`\s` = the six ASCII
+    * spaces `[ \t\n\x0B\f\r]`) — what
+    * `length(regexp_replace(text, "[a-zA-Z0-9\\s]", ""))` counts. Null
+    * for a null text. */
+  private[graft] def qualityOf(text: String): (Int, Int, Int, Int, Int) = {
+    if (text == null) return null
+    var nToks = 0
+    var stopHits = 0
+    var tokChars = 0
+    DedupApprox.foreachToken(text) { (s, a, b) =>
+      nToks += 1
+      tokChars += b - a
+      if (java.util.Arrays.binarySearch(StopKeys, packedToken(s, a, b)) >= 0) stopHits += 1
+    }
+    // the class chars are single-char code points, so the rest of the
+    // code points are the punct ones
+    val cps = text.codePointCount(0, text.length)
+    var kept = 0
+    var i = 0
+    while (i < text.length) {
+      val c = text.charAt(i)
+      if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') ||
+          c == ' ' || (c >= '\t' && c <= '\r')) kept += 1
+      i += 1
+    }
+    (nToks, stopHits, tokChars, cps - kept, cps)
+  }
+
+  private val qualityUdf = udf { (text: String) => qualityOf(text) }
+
   /** Composite quality heuristics: length, alpha ratio, punct ratio,
     * stopword ratio, mean word length — the usual pretraining-corpus
-    * filters, one pass, all native. */
+    * filters, one pass. The counts come from [[qualityOf]]; each ratio
+    * is one double division of two of its integer counts, so the x06
+    * oracle replays it exactly. */
   def withQuality(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    val nChars = length(t).cast("double")
-    val toks = Analyzer.tokenize(t)
-    val nToks = size(toks).cast("double")
-    // the stop-hit HOF keeps this projection out of whole-stage
-    // codegen, and that is the measured-right trade: the native
-    // alternative (32 chained array_removes) benches 3× worse than
-    // the interpreted single pass (SCALING.md). Mean word length via
-    // array_join is value-identical to the aggregate-HOF fold it
-    // replaced and one native pass.
-    val stopHits = size(filter(toks,
-      w => array_contains(typedLit(Analyzer.StopWords.toSeq), w))).cast("double")
-    val punct = length(regexp_replace(t, "[a-zA-Z0-9\\s]", "")).cast("double")
-    df.withColumn("q_n_tokens", nToks.cast("long"))
-      .withColumn("q_punct_ratio", when(nChars > 0, punct / nChars).otherwise(0.0))
-      .withColumn("q_stopword_ratio", when(nToks > 0, stopHits / nToks).otherwise(0.0))
+    val nToks = col("__q._1").cast("double")
+    val nChars = col("__q._5").cast("double")
+    df.withColumn("__q", qualityUdf(col(textCol)))
+      .withColumn("q_n_tokens", col("__q._1").cast("long"))
+      .withColumn("q_punct_ratio",
+        when(nChars > 0, col("__q._4").cast("double") / nChars).otherwise(0.0))
+      .withColumn("q_stopword_ratio",
+        when(nToks > 0, col("__q._2").cast("double") / nToks).otherwise(0.0))
       .withColumn("q_mean_word_len",
-        when(nToks > 0, length(array_join(toks, ""))
-          .cast("double") / nToks).otherwise(0.0))
+        when(nToks > 0, col("__q._3").cast("double") / nToks).otherwise(0.0))
       .withColumn("q_score",
         when(col("q_n_tokens") >= 5 && col("q_punct_ratio") < 0.3 &&
              col("q_mean_word_len").between(2.0, 12.0), 1.0).otherwise(0.0))
+      .drop("__q")
   }
 
   // ---- token counting --------------------------------------------------

@@ -547,13 +547,22 @@ object CorpusPipeline {
   }
 
   /** Keep survivors and export them as training shards; returns the
-    * shard manifest (one row per shard). */
+    * shard manifest (one row per shard) as a local frame. `kept` is
+    * persisted across the write and the manifest's collect, so the
+    * verdict tail (keeper aggregate, decontamination hits, joins) runs
+    * once, not once per action; `persist` keeps the lineage, so a lost
+    * block recomputes. The manifest has at most `numShards` rows
+    * (under 2^20, [[Export.shardKey]]). */
   def materialize(verdicts: DataFrame, idCol: String, dir: String,
                   cfg: Config = Config()): DataFrame = {
     val kept = verdicts.filter(col("keep"))
       .select(col(idCol), col("text_clean").as("text"))
-    Export.writeShards(kept, idCol, dir, cfg.numShards)
-    Export.manifest(kept, idCol, "text", cfg.numShards)
+      .persist()
+    try {
+      Export.writeShards(kept, idCol, dir, cfg.numShards)
+      val m = Export.manifest(kept, idCol, "text", cfg.numShards)
+      kept.sparkSession.createDataFrame(java.util.Arrays.asList(m.collect(): _*), m.schema)
+    } finally kept.unpersist()
   }
 
   // ---- the incremental release card, maintained by the stream -------

@@ -186,4 +186,20 @@ class CorpusPipelineSpec extends SparkSpec {
     // shard column materialized as a partition directory
     assert(onDisk.columns.contains("shard"))
   }
+
+  test("materialize: the local manifest = the manifest of the shards read back, " +
+    "and no persistent RDD is left") {
+    verdicts.count()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val dir = java.nio.file.Files.createTempDirectory("corpus-out").toString
+    val manifest = CorpusPipeline.materialize(verdicts, "doc_id", dir, cfg)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(manifest.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val readBack = graft.operators.Export.manifest(spark.read.parquet(dir), "doc_id", "text",
+      cfg.numShards)
+    assert(manifest.schema == readBack.schema)
+    assert(manifest.orderBy("shard").collect().toSeq == readBack.orderBy("shard").collect().toSeq)
+  }
 }
