@@ -1,7 +1,13 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Key-equality deduplication — the reference's entire join surface
   * (SURVEY.md §2 J-1/J-2/J-3, O-3).
@@ -79,6 +85,39 @@ object Dedup {
     }
     if (fs.exists(p) && hasCommittedData) spark.read.parquet(dir)
     else fallback
+  }
+
+  /** [[readStateOr]] for a flat state dir whose layout the engine
+    * fixes: `dir` read with its known `schema` (no schema-inference
+    * job), or an empty frame of `schema` when it holds no data file.
+    * One data file's layout is checked first ([[checkLayout]]), so a
+    * dir written with other columns fails here instead of reading them
+    * as nulls. */
+  def readStateAs(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    graft.plans.Maintenance.dataFiles(spark, dir).headOption match {
+      case Some(f) =>
+        checkLayout(spark, f, schema)
+        spark.read.schema(schema).parquet(dir)
+      case None => spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    }
+
+  /** Fails unless the parquet file `file` holds every column of
+    * `schema` under its type (nullability aside), as its Spark writer
+    * recorded them in the footer: the one-file check schema inference
+    * makes, read on the driver instead of in a job. */
+  def checkLayout(spark: SparkSession, file: Path, schema: StructType): Unit = {
+    val footer = ParquetFileReader.readFooter(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val stored = Option(footer.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson).collect { case s: StructType => s }
+      .getOrElse(new StructType())
+    val missing = schema.fields.filterNot(f => stored.fields.exists(s =>
+      s.name == f.name && DataType.equalsIgnoreNullability(s.dataType, f.dataType)))
+    if (missing.nonEmpty)
+      throw new IllegalStateException(s"$file does not hold the expected layout: " +
+        s"missing ${missing.map(_.toDDL).mkString(", ")}; found ${stored.toDDL}")
   }
 
   /** Exact content dedup for a corpus: group identical normalized text,

@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.functions.TermPostingsExpr
 
 /** The inverted index AT REST — the reference's Elasticsearch side
   * materialized Spark-first (reference: app/es_manager.py's
@@ -23,15 +29,22 @@ import org.apache.spark.sql.functions._
   *    (xxhash64(lit(term)) constant-folds), so the postings read
   *    PARTITION-PRUNES to the query's buckets — at 100 TB the scan is
   *    posting-list-sized, the exact property that makes ES serve
-  *    interactive queries over corpora it could never rescan.
-  *    Candidate docs groupBy once (candidate-sized), corpus-level
-  *    constants (N, Σdl) come from a 1-row stats ledger, df(t) from
-  *    the pruned postings themselves (a term's postings live entirely
-  *    in its bucket and the append segment, so the pruned read sees
-  *    every one).
+  *    interactive queries over corpora it could never rescan. A call
+  *    reads the stats ledger once, in one job, and folds it on the
+  *    driver ([[readStats]]): the corpus constants (N, Σdl) enter the
+  *    score as literals and num_buckets names the pruned dirs. Every
+  *    read names its known schema, so no schema-inference job runs.
+  *    Candidate docs groupBy once (candidate-sized, a per-term
+  *    `max(tf)` that also absorbs duplicate postings), and df(t) is
+  *    counted over those same candidates in the same query (a term's
+  *    postings live entirely in its bucket and the append segment, so
+  *    the pruned read sees every one): a [[topK]] is the stats job
+  *    plus one read → score → TakeOrderedAndProject query.
   *  - MAINTAIN: [[appendBatch]] folds a delta batch in ES-bulk style.
-  *    Like an Elasticsearch refresh, each batch's postings land as ONE
-  *    small unbucketed SEGMENT under the reserved partition
+  *    Its fresh set holds one row per doc, so each doc's postings are
+  *    built in the scan ([[TermPostingsExpr]]), with no (term, doc)
+  *    shuffle. Like an Elasticsearch refresh, each batch's postings
+  *    land as ONE small unbucketed SEGMENT under the reserved partition
   *    `bucket=`[[SegmentBucket]] (one file per write task, not one per
   *    touched bucket); every serve read adds that partition to its
   *    bucket predicate, so a term's postings are its bucket plus the
@@ -47,16 +60,19 @@ import org.apache.spark.sql.functions._
   *    Σdl are sums), and the card-family crash contract holds: batches
   *    dedup against a seen-ids ledger (redelivery folds nothing),
   *    partials land FIRST and ids LAST, so the one crash window
-  *    re-appends postings a later read-side `dropDuplicates(term,
-  *    doc_id)` heals — as it heals the fold's own window (rows landed
-  *    in their buckets, segment files not yet deleted).
+  *    re-appends byte-identical postings that every read heals (the
+  *    scorer's per-term `max(tf)`, the joins' `dropDuplicates(term,
+  *    doc_id)`), as it heals the fold's own window (rows landed in
+  *    their buckets, segment files not yet deleted).
   *
   * Scoring is bit-identical to [[Search.bm25Scored]]: the same
   * integer tf/dl/df/N/Σdl enter the same left-associated double
-  * expression, and idf's `log` stays a NON-foldable column expression
-  * so it codegens to StrictMath.log exactly like the scan path (a
-  * driver-side literal would constant-fold through Math.log and risk
-  * the 1-ulp divergence Search.bm25Scored documents). q116's oracle is
+  * expression (N and Σdl as double literals, cast on the driver as
+  * Spark casts them), and idf's `log` stays a NON-foldable column
+  * expression (df is a column), so it codegens to StrictMath.log
+  * exactly like the scan path (an all-literal log would constant-fold
+  * through Math.log and risk the 1-ulp divergence Search.bm25Scored
+  * documents). q116's oracle is
   * therefore the FULL-SCAN BM25 replay — the index changes the cost,
   * not one bit of the answer.
   */
@@ -106,10 +122,10 @@ object InvertedIndex {
     * the batch's id hashes (order-free AND overflow-free — a wrapping
     * sum would trip ANSI long-overflow on full-range hashes). A
     * redelivered batch whose ids ledger never landed re-derives the
-    * SAME fresh set → the same key, so the read-side
-    * `dropDuplicates(batch_key, n_docs, sum_dl)` folds the re-appended
-    * partial exactly once — without it N and avgdl would double-count
-    * and every served BM25 score would silently shift (the posting
+    * SAME fresh set → the same key, so [[foldStats]]' `(batch_key,
+    * n_docs, sum_dl)` dedup folds the re-appended partial exactly
+    * once — without it N and avgdl would double-count and every
+    * served BM25 score would silently shift (the posting
     * duplicates already heal; the stats needed the same contract).
     * Ids are unique within a partial (dropDuplicates upstream), so XOR
     * cancellation needs a hash collision to fire. Hashes the STRING
@@ -130,22 +146,47 @@ object InvertedIndex {
     coalesce(call_function("bit_xor", xxhash64(id.cast("string"))), lit(0L))
       .as("batch_key")
 
-  /** The stats ledger, folded: heal torn-append duplicates first, then
-    * the additive algebra (N and Σdl are sums; num_buckets is a fixed
-    * layout constant, max = the value). */
-  private def readStats(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/stats")
-      .dropDuplicates("batch_key", "n_docs", "sum_dl")
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"),
-        max(col("num_buckets")).as("num_buckets"))
+  /** The stats ledger's columns, as [[writeIndex]] and [[appendBatch]]
+    * write them. */
+  private[operators] val StatsSchema: StructType = new StructType()
+    .add("n_docs", LongType).add("sum_dl", LongType)
+    .add("batch_key", LongType).add("num_buckets", IntegerType)
 
-  /** The standing layout's bucket count, or `default` on an empty dir. */
-  private def storedNumBuckets(spark: SparkSession, dir: String,
-                               default: Int): Int = {
-    val r = Dedup.readStateOr(spark, s"$dir/stats",
-        spark.range(0).select(lit(0).as("num_buckets")))
-      .agg(max(col("num_buckets"))).collect()(0)
-    if (r.isNullAt(0)) default else r.getInt(0)
+  /** A postings file's columns (the `bucket` partition aside). */
+  private[operators] val PostingsSchema: StructType = new StructType()
+    .add("term", StringType).add("doc_id", LongType).add("tf", LongType)
+    .add("dl", LongType).add("positions", ArrayType(IntegerType, containsNull = false))
+
+  private val SeenIdsSchema: StructType = new StructType().add("doc_id", LongType)
+
+  /** The folded stats ledger; `None` where SQL's aggregates would give
+    * null (no partial holds a value: an empty dir has no layout). */
+  private[operators] final case class Stats(nDocs: Option[Long], sumDl: Option[Long],
+                                            numBuckets: Option[Int]) {
+    def layout(dir: String): Int = numBuckets.getOrElse(throw new IllegalArgumentException(
+      s"no index at $dir: its stats ledger holds no num_buckets"))
+  }
+
+  /** The stats ledger, read in one job and folded on the driver. */
+  private[operators] def readStats(spark: SparkSession, dir: String): Stats =
+    foldStats(Dedup.readStateAs(spark, s"$dir/stats", StatsSchema).collect().toSeq)
+
+  /** The ledger's algebra: heal torn-append copies first (one partial
+    * per `(batch_key, n_docs, sum_dl)`, nulls equal as in
+    * `dropDuplicates`), then N and Σdl are sums (an overflow fails, as
+    * ANSI `sum` does) and num_buckets, a fixed layout constant, is the
+    * max. Nulls are skipped as the SQL aggregates skip them. */
+  private[operators] def foldStats(rows: Seq[Row]): Stats = {
+    def opt[T](r: Row, f: String): Option[T] = {
+      val i = r.fieldIndex(f)
+      if (r.isNullAt(i)) None else Some(r.getAs[T](i))
+    }
+    val partials = rows.map(r =>
+      (opt[Long](r, "batch_key"), opt[Long](r, "n_docs"), opt[Long](r, "sum_dl"))).distinct
+    def total(xs: Seq[Option[Long]]): Option[Long] =
+      xs.flatten.reduceOption((a, b) => Math.addExact(a, b))
+    Stats(total(partials.map(_._2)), total(partials.map(_._3)),
+      rows.flatMap(opt[Int](_, "num_buckets")).maxOption)
   }
 
   /** Dictionary view: per-term df (docs containing) and cf (total
@@ -215,7 +256,7 @@ object InvertedIndex {
     // the bucket layout is fixed at first write: appending under a
     // different modulus would mis-bucket new postings while the serve
     // path prunes with the standing value — silently losing matches
-    val stored = storedNumBuckets(spark, dir, numBuckets)
+    val stored = readStats(spark, dir).numBuckets.getOrElse(numBuckets)
     require(stored == numBuckets,
       s"appendBatch numBuckets=$numBuckets does not match the standing " +
         s"index layout at $dir (num_buckets=$stored)")
@@ -229,15 +270,16 @@ object InvertedIndex {
     // corpus-sized token arrays).
     val fresh = graft.plans.Ledger.fresh(
       batch.select(col(idCol), toks(fields).as("__toks")), idCol,
-      s"$dir/seenIds")
-    val landed = graft.plans.Ledger.commit(fresh,
-        col(idCol).cast("long").as("doc_id"), s"$dir/seenIds")(
-      () => fresh.select(col(idCol).cast("long").as("doc_id"),
-          size(col("__toks")).cast("long").as("dl"),
-          posexplode(col("__toks")).as(Seq("pos", "term")))
-        .groupBy(col("term"), col("doc_id"))
-        .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"),
-          sort_array(collect_list(col("pos"))).as("positions"))
+      s"$dir/seenIds", Some(SeenIdsSchema))
+    val docId = col(idCol).cast("long").as("doc_id")
+    // the postings are built per fresh row, so each doc_id must be one
+    // row: only a non-integral id type can cast two ids to one doc_id
+    batch.select(col(idCol)).schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case _ => requireOneRowPerDoc(fresh, docId)
+    }
+    val landed = graft.plans.Ledger.commit(fresh, docId, s"$dir/seenIds")(
+      () => docPostings(fresh, col(idCol), col("__toks"))
         .write.mode("append").parquet(segmentDir(dir)),
       () => fresh.agg(count(lit(1)).as("n_docs"),
           sum(size(col("__toks")).cast("long")).as("sum_dl"),
@@ -273,6 +315,27 @@ object InvertedIndex {
     }
   }
 
+  /** Fails, before anything is written, when two fresh ids cast to one
+    * doc_id: their postings would have to merge, and the doc's dl is
+    * not defined. */
+  private def requireOneRowPerDoc(fresh: DataFrame, docId: Column): Unit =
+    try {
+      val clash = fresh.groupBy(docId).count().filter(col("count") > 1).head(1)
+      require(clash.isEmpty, s"appendBatch: several ids cast to doc_id " +
+        s"${clash.map(_.get(0)).mkString}; the index needs one doc per doc_id")
+    } catch {
+      case NonFatal(e) => Checkpoints.release(fresh); throw e
+    }
+
+  /** [[postings]] of docs that hold one row per id: each doc's posting
+    * rows are built from its token array in the scan, with no shuffle.
+    * The rows equal [[postings]]' groupBy form. */
+  private[operators] def docPostings(docs: DataFrame, id: Column,
+                                     tokens: Column): DataFrame =
+    docs.select(id.cast("long").as("doc_id"), size(tokens).cast("long").as("dl"),
+        inline(TermPostingsExpr(tokens)))
+      .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("positions"))
+
   private def segmentDir(dir: String): String =
     s"$dir/postings/bucket=$SegmentBucket"
 
@@ -285,7 +348,7 @@ object InvertedIndex {
   def foldSegment(spark: SparkSession, dir: String,
                   maxFiles: Int = graft.plans.Maintenance.DefaultMaxFiles): Unit =
     graft.plans.Maintenance.fold(spark, segmentDir(dir), maxFiles) {
-      writeBucketed(_, dir, storedNumBuckets(spark, dir, 64), "append")
+      writeBucketed(_, dir, readStats(spark, dir).numBuckets.getOrElse(64), "append")
     }
 
   /** The pruned postings read for a term set: the query terms' buckets
@@ -296,9 +359,11 @@ object InvertedIndex {
     * Spark lists a root with a parallel job); when none hold data the
     * read falls back to the root. The bucket predicates fold to
     * literals as well, so partition pruning keeps the scan
-    * posting-list-sized either way. The `dropDuplicates` heals the
-    * crash windows: postings re-appended by a retried batch, and
-    * segment rows already folded into their buckets.
+    * posting-list-sized either way. The read names its known schema
+    * (no schema-inference job); one listed file's layout is checked
+    * first. It keeps the crash windows' duplicate postings (re-appended
+    * by a retried batch, or segment rows already folded into their
+    * buckets): each caller heals them as its plan needs.
     *
     * A fold running meanwhile moves segment rows into a bucket dir
     * this read may have found empty before the fold wrote it. The
@@ -313,72 +378,74 @@ object InvertedIndex {
     val root = s"$dir/postings"
     val segment = segmentDir(dir)
     def segmentFiles = graft.plans.Maintenance.dataFiles(spark, segment).toSet
-    def listed(attempts: Int): DataFrame = {
+    def listed(attempts: Int): (DataFrame, Option[org.apache.hadoop.fs.Path]) = {
       val seg = segmentFiles
-      val parts = (if (seg.isEmpty) Nil else Seq(segment)) ++
-        ts.map(t => s"$root/bucket=${bucketId(t, numBuckets)}").distinct
-          .filter(graft.plans.Maintenance.dataFiles(spark, _).nonEmpty)
+      val buckets = ts.map(t => s"$root/bucket=${bucketId(t, numBuckets)}").distinct
+        .map(p => p -> graft.plans.Maintenance.dataFiles(spark, p)).filter(_._2.nonEmpty)
+      val parts = (if (seg.isEmpty) Nil else Seq(segment)) ++ buckets.map(_._1)
+      // `bucket` typed too: the partition column keeps the type it is
+      // inferred with, and an index with no bucket dir still has it
+      val read = spark.read.schema(PostingsSchema.add("bucket", IntegerType))
       // the listing happens here, when the read is built
       val all =
-        if (parts.isEmpty) spark.read.parquet(root)
-        else spark.read.option("basePath", root).parquet(parts: _*)
-      if (seg.subsetOf(segmentFiles)) all
+        if (parts.isEmpty) read.parquet(root)
+        else read.option("basePath", root).parquet(parts: _*)
+      if (seg.subsetOf(segmentFiles)) (all, (buckets.flatMap(_._2) ++ seg).headOption)
       else if (attempts > 1) listed(attempts - 1)
       else throw new IllegalStateException(
         s"postings segment $segment kept being folded during the read")
     }
-    listed(3).filter((lit(SegmentBucket) +: ts.map(t => bucketOf(lit(t), numBuckets)))
+    val (all, sample) = listed(3)
+    sample.foreach(Dedup.checkLayout(spark, _, PostingsSchema))
+    all.filter((lit(SegmentBucket) +: ts.map(t => bucketOf(lit(t), numBuckets)))
         .map(col("bucket") === _).reduce(_ || _))
       .filter(col("term").isin(ts: _*))
-      .dropDuplicates("term", "doc_id")
   }
 
   /** BM25 scores served FROM THE INDEX — bit-same scores as
     * [[Search.bm25Scored]] over the indexed corpus for every doc
     * matching ≥1 term (docs matching none score exactly 0.0 scan-side
-    * and are simply absent here), at posting-list cost: pruned read →
-    * candidate groupBy → 1-row broadcast stats → score. Callers that
+    * and are simply absent here), at posting-list cost: the stats job,
+    * then pruned read → candidate groupBy → df over the candidates →
+    * score in one query. Callers that
     * rank on a QUANTIZED score (the oracle-gate convention) order this
     * frame themselves — [[topK]]'s raw-score order can break
     * quantized ties differently at the cutoff. */
   def scored(spark: SparkSession, dir: String, terms: Seq[String],
              k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "scored needs at least one term")
-    val meta = readStats(spark, dir)
-    val numBuckets = meta.select(col("num_buckets")).collect()(0).getInt(0)
+    scoredWith(spark, dir, readStats(spark, dir), terms, k1, b)
+  }
+
+  private def scoredWith(spark: SparkSession, dir: String, stats: Stats,
+                         terms: Seq[String], k1: Double, b: Double): DataFrame = {
     val ts = terms.map(_.toLowerCase)
-    val post = readPostings(spark, dir, ts, numBuckets)
-    // df(t) from the pruned postings (complete per construction) +
-    // corpus constants, all in ONE 1-row broadcast — the same
-    // `__n/__sumdl/__df_i` columns Search.bm25Scored builds scan-time,
-    // so the downstream arithmetic is expression-identical.
-    val dfAgg = post.agg(
-      coalesce(sum(when(col("term") === ts.head, 1L)), lit(0L))
-        .cast("double").as("__df_0"),
-      ts.zipWithIndex.tail.map { case (t, i) =>
-        coalesce(sum(when(col("term") === t, 1L)), lit(0L))
-          .cast("double").as(s"__df_$i")
-      }: _*)
-    val stats = meta.select(col("n_docs").cast("double").as("__n"),
-        col("sum_dl").cast("double").as("__sumdl"))
-      .crossJoin(dfAgg)
-    val cand = post.groupBy(col("doc_id")).agg(
-      max(col("dl")).as("__dl_l"),
-      ts.zipWithIndex.map { case (t, i) =>
-        sum(when(col("term") === t, col("tf"))).as(s"__tf_$i")
-      }: _*)
-    val avgdl = col("__sumdl") / col("__n")
+    // one row per candidate doc; a duplicate posting is a byte-identical
+    // copy (a retried append, the fold's window), so max(tf) reads it once
+    val cand = readPostings(spark, dir, ts, stats.layout(dir))
+      .groupBy(col("doc_id")).agg(
+        max(col("dl")).as("__dl_l"),
+        ts.zipWithIndex.map { case (t, i) =>
+          max(when(col("term") === t, col("tf"))).as(s"__tf_$i")
+        }: _*)
+    // df(t): the candidates holding t, counted over all of them in the
+    // same query — the `__df_i` columns Search.bm25Scored builds scan-time
+    val all = Window.partitionBy()
+    val withDf = ts.indices.foldLeft(cand)((c, i) =>
+      c.withColumn(s"__df_$i", count(col(s"__tf_$i")).over(all).cast("double")))
+    def dbl(v: Option[Long]): Column = v.fold(lit(null).cast("double"))(x => lit(x.toDouble))
+    val n = dbl(stats.nDocs)
+    val avgdl = dbl(stats.sumDl) / n
     val score = ts.indices.map { i =>
       val tf = coalesce(col(s"__tf_$i"), lit(0L)).cast("double")
-      val idf = log((col("__n") - col(s"__df_$i") + lit(0.5))
+      val idf = log((n - col(s"__df_$i") + lit(0.5))
         / (col(s"__df_$i") + lit(0.5)) + lit(1.0))
       val norm = tf + lit(k1) * (lit(1.0) - lit(b)
         + lit(b) * (col("__dl_l").cast("double") / avgdl))
       when(col(s"__df_$i") === 0.0, 0.0)
         .otherwise(idf * ((tf * lit(k1 + 1.0)) / norm))
     }.reduce(_ + _)
-    cand.crossJoin(broadcast(stats))
-      .withColumn("score", score)
+    withDf.withColumn("score", score)
       .select(col("doc_id"), col("score"))
   }
 
@@ -403,10 +470,10 @@ object InvertedIndex {
   def filteredScored(spark: SparkSession, dir: String, terms: Seq[String],
                      filters: Seq[(String, String)],
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val nb = spark.read.parquet(s"$dir/stats")
-      .agg(max(col("num_buckets")).as("nb"))
-      .collect()(0).getInt(0)
-    filters.foldLeft(scored(spark, dir, terms, k1, b)) { case (acc, (f, v)) =>
+    require(terms.nonEmpty, "filteredScored needs at least one term")
+    val stats = readStats(spark, dir)
+    val nb = stats.layout(dir)
+    filters.foldLeft(scoredWith(spark, dir, stats, terms, k1, b)) { case (acc, (f, v)) =>
       val leg = spark.read.parquet(s"$dir/keywords")
         .filter(col("bucket") ===
           bucketOf(concat(lit(f), lit(":"), lit(v)), nb))
@@ -429,10 +496,10 @@ object InvertedIndex {
     require(must.nonEmpty, "booleanQuery needs at least one must term")
     val ms = must.map(_.toLowerCase)
     val ns = mustNot.map(_.toLowerCase)
-    val nb = spark.read.parquet(s"$dir/stats")
-      .agg(max(col("num_buckets")).as("nb"))
-      .collect()(0).getInt(0)
-    val post = readPostings(spark, dir, (ms ++ ns).distinct, nb)
+    // the must legs' inner joins need one posting per (term, doc)
+    val post = readPostings(spark, dir, (ms ++ ns).distinct,
+        readStats(spark, dir).layout(dir))
+      .dropDuplicates("term", "doc_id")
     val cand = ms.zipWithIndex.map { case (t, i) =>
       post.filter(col("term") === t)
         .select(col("doc_id"), col("tf").as(s"__tf$i"))
@@ -462,10 +529,8 @@ object InvertedIndex {
                   phrase: Seq[String]): DataFrame = {
     require(phrase.length >= 2, "phraseCount needs at least two terms")
     val ts = phrase.map(_.toLowerCase)
-    val nb = spark.read.parquet(s"$dir/stats")
-      .agg(max(col("num_buckets")).as("nb"))
-      .collect()(0).getInt(0)
-    val post = readPostings(spark, dir, ts.distinct, nb)
+    val post = readPostings(spark, dir, ts.distinct, readStats(spark, dir).layout(dir))
+      .dropDuplicates("term", "doc_id")
     val legs = ts.zipWithIndex.map { case (t, i) =>
       post.filter(col("term") === t)
         .select(col("doc_id"), col("positions").as(s"__p$i"))
@@ -496,10 +561,8 @@ object InvertedIndex {
               terms: Seq[String]): DataFrame = {
     require(terms.length >= 2, "minSpan needs at least two terms")
     val ts = terms.map(_.toLowerCase).distinct
-    val nb = spark.read.parquet(s"$dir/stats")
-      .agg(max(col("num_buckets")).as("nb"))
-      .collect()(0).getInt(0)
-    val post = readPostings(spark, dir, ts, nb)
+    val post = readPostings(spark, dir, ts, readStats(spark, dir).layout(dir))
+      .dropDuplicates("term", "doc_id")
     val legs = ts.zipWithIndex.map { case (t, i) =>
       post.filter(col("term") === t)
         .select(col("doc_id"), col("positions").as(s"__p$i"))

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Checkpoints, Dedup}
 
@@ -37,11 +38,14 @@ object Ledger {
     * `idsDir` does not hold, checkpointed lazily: [[commit]]'s
     * emptiness probe materializes it and every partial reuses it. The
     * ledger's one column may have another name than `idCol` (the index
-    * stores `doc_id`); it is compared by position. */
-  def fresh(batch: DataFrame, idCol: String, idsDir: String): DataFrame = {
+    * stores `doc_id`); it is compared by position. A sink that knows its
+    * ledger's schema passes it as `idsSchema`, which reads the ledger
+    * without a schema-inference job ([[Dedup.readStateAs]]). */
+  def fresh(batch: DataFrame, idCol: String, idsDir: String,
+            idsSchema: Option[StructType] = None): DataFrame = {
     val b = batch.dropDuplicates(idCol)
-    val seen = Dedup.readStateOr(batch.sparkSession, idsDir,
-      b.select(col(idCol)).limit(0))
+    val seen = idsSchema.fold(Dedup.readStateOr(batch.sparkSession, idsDir,
+      b.select(col(idCol)).limit(0)))(Dedup.readStateAs(batch.sparkSession, idsDir, _))
     b.join(seen.toDF(idCol), Seq(idCol), "left_anti")
       .localCheckpoint(eager = false)
   }
