@@ -61,16 +61,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.sources.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // session warm-up (codegen/JIT/FS init), not counted
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     // machine-load sentinel: a fixed single-thread integer spin whose
@@ -234,13 +225,13 @@ object Bench {
     // late-alphabet queries >10x (x24: 78 s in-bench vs 6.8 s
     // standalone, round 5). Unpersist is deterministic where
     // ContextCleaner is best-effort. (2) GC-settle: BENCH_r02
-    // recorded a 7x outlier on x16 (both runs!) that X16Probe could
-    // not reproduce in steady state; heavy allocators otherwise tax
-    // the next run's wall time. Runs BETWEEN repeats of the SAME
-    // query too: round 8 measured q87's in-suite median at 115 s vs
-    // 21 s standalone because run 1's ~5 checkpoint tables stayed
-    // pinned under runs 2-3 (the hygiene cost itself is outside the
-    // timed window either way).
+    // recorded a 7x outlier on x16 (both runs!) that X16Probe (last
+    // in b820d97) could not reproduce in steady state; heavy
+    // allocators otherwise tax the next run's wall time. Runs
+    // BETWEEN repeats of the SAME query too: round 8 measured q87's
+    // in-suite median at 115 s vs 21 s standalone because run 1's ~5
+    // checkpoint tables stayed pinned under runs 2-3 (the hygiene
+    // cost itself is outside the timed window either way).
     def hygiene(): Unit = {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

@@ -31,7 +31,8 @@ object Analyzer {
     * measured round-trip through regexp-strip-then-split and through
     * 32 chained array_removes both LOST to the interpreted filter,
     * so this is the only formulation that is both codegen'd and
-    * single-pass — tools/CodegenAudit + bench, SCALING.md). */
+    * single-pass — tools/CodegenAudit (last in b820d97) + bench,
+    * SCALING.md). */
   def tokenize(text: Column): Column =
     array_remove(split(lower(text), "[^a-z0-9']+"), "")
 

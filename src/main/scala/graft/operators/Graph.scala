@@ -77,6 +77,11 @@ object Graph {
     * with very high iteration counts can lower it. */
   val PageRankCheckpointEvery = 4
 
+  /** Default size limit of the PageRank loops' driver-local path: an
+    * edge list of at most this many edges (about 8 MB of long pairs)
+    * is collected and iterated on the driver. */
+  val LocalMaxEdges = 500000L
+
   /** Fixed-point PageRank over an edge list. Returns `(id, rank_q)`
     * for every node appearing as a source or destination, `rank_q` in
     * micro-units (LONG). */
@@ -114,9 +119,7 @@ object Graph {
     // pins localMaxEdges=Some(0) so the calibration sentinel always
     // measures the distributed job shape. At corpus scale the
     // threshold never binds and the loop below runs unchanged.
-    val localMax = localMaxEdges.getOrElse(edges.sparkSession.conf
-      .getOption("graft.graph.localMaxEdges").map(_.toLong)
-      .getOrElse(500000L))
+    val localMax = localMaxEdges.getOrElse(LocalMaxEdges)
     if (nEdges <= localMax &&
         e0.schema.fields.forall(_.dataType ==
           org.apache.spark.sql.types.LongType)) {
@@ -184,7 +187,7 @@ object Graph {
       // style (blocking, at most one checkpoint table resident).
       if (i % checkpointEvery == 0 && i < iters) {
         val cp = ranks.localCheckpoint()
-        lastCheckpoint.foreach(_.unpersist(blocking = true))
+        lastCheckpoint.foreach(Checkpoints.release(_, blocking = true))
         lastCheckpoint = Some(cp)
         ranks = cp
       }
@@ -193,7 +196,7 @@ object Graph {
     // the un-checkpointed tail of the chain still reads them.
     val out = ranks.select(col("id"), col("r").cast("long").as("rank_q"))
       .localCheckpoint()
-    lastCheckpoint.foreach(_.unpersist(blocking = true))
+    lastCheckpoint.foreach(Checkpoints.release(_, blocking = true))
     e0.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     eDeg.unpersist(blocking = false)
@@ -228,9 +231,7 @@ object Graph {
     val nEdges = eW.count()
     // size-adaptive local path — see [[pageRank]]; weighted recurrence
     // c = (r·w) div W(u), identical positive-long arithmetic.
-    val localMax = localMaxEdges.getOrElse(edges.sparkSession.conf
-      .getOption("graft.graph.localMaxEdges").map(_.toLong)
-      .getOrElse(500000L))
+    val localMax = localMaxEdges.getOrElse(LocalMaxEdges)
     if (nEdges <= localMax &&
         e0.schema.fields.take(2).forall(_.dataType ==
           org.apache.spark.sql.types.LongType)) {
@@ -293,14 +294,14 @@ object Graph {
       i += 1
       if (i % checkpointEvery == 0 && i < iters) {
         val cp = ranks.localCheckpoint()
-        lastCheckpoint.foreach(_.unpersist(blocking = true))
+        lastCheckpoint.foreach(Checkpoints.release(_, blocking = true))
         lastCheckpoint = Some(cp)
         ranks = cp
       }
     }
     val out = ranks.select(col("id"), col("r").cast("long").as("rank_q"))
       .localCheckpoint()
-    lastCheckpoint.foreach(_.unpersist(blocking = true))
+    lastCheckpoint.foreach(Checkpoints.release(_, blocking = true))
     e0.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     eW.unpersist(blocking = false)
@@ -396,7 +397,7 @@ object Graph {
       k += 1
       if (k % CheckpointEvery == 0 && k < rounds) {
         val cp = lab.localCheckpoint()
-        lastCheckpoint.foreach(_.unpersist(blocking = true))
+        lastCheckpoint.foreach(Checkpoints.release(_, blocking = true))
         lastCheckpoint = Some(cp)
         lab = cp
       }
@@ -406,7 +407,7 @@ object Graph {
       .select(col("id"), col("label"),
         coalesce(col("__s"), lit(false)).as("is_seed"))
       .localCheckpoint()
-    lastCheckpoint.foreach(_.unpersist(blocking = true))
+    (lastCheckpoint.toSeq :+ seed).foreach(Checkpoints.release(_, blocking = true))
     e.unpersist(blocking = false)
     out
   }

@@ -505,8 +505,9 @@ object Multimodal {
     * media corpus grows — without it, bucket count is fixed while
     * members grow, so in-bucket candidate pairs grow QUADRATICALLY
     * and max occupancy marches into the `maxBucket` drop-cap (the
-    * X38Probe measurement, SCALING.md round 11: at 10× media the
-    * hottest default-plane bucket reached 3790 of the 4096 cap).
+    * X38Probe measurement (last in b820d97), SCALING.md round 11: at
+    * 10× media the hottest default-plane bucket reached 3790 of the
+    * 4096 cap).
     * More planes cost recall only through per-table split
     * probability, which the table union wins back; re-encode pairs
     * sit at cosine ≈ 1 where split probability stays negligible.

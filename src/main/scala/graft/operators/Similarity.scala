@@ -129,8 +129,9 @@ object Similarity {
     * the maxBucket drop-cap; log₂-scaling the planes restores ~linear
     * pair growth (n · targetOcc). The default target of 64 leaves the
     * observed ~12× skew factor (hottest bucket vs mean, X38Probe,
-    * SCALING.md round 11) a further ~5× headroom under the default
-    * 4096 cap. Capped at 30 (bucket ids stay in Int). */
+    * last in b820d97, SCALING.md round 11) a further ~5× headroom
+    * under the default 4096 cap. Capped at 30 (bucket ids stay in
+    * Int). */
   def autoPlanes(n: Long, base: Int, targetOcc: Int = 64): Int = {
     var p = base
     while (p < 30 && (n >> p) > targetOcc) p += 1

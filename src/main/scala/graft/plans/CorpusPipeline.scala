@@ -175,10 +175,9 @@ object CorpusPipeline {
     // scanWide-widened: `annotated` feeds three consumers (pairs,
     // verdicts, finish), and each re-executes the would-be repartition
     // of full text rows — measured q74 5.9 s → 7.9 s WITH the widen
-    // (FunnelProbe round 8), the q80 lesson again. On a few-giant-file
-    // corpus, widen the INPUT (upstream repartitioned write or
-    // `graft.scan.width` at the source) rather than inside a
-    // multi-consumer plan.
+    // (FunnelProbe round 8, last in b820d97), the q80 lesson again. On
+    // a few-giant-file corpus, widen the INPUT (an upstream
+    // repartitioned write) rather than inside a multi-consumer plan.
     val base = docs.filter(!isBenchmark)
     // LAZY localCheckpoint (round 16, reversing the round-8 call): the
     // annotate chain feeds four consumers (the LSH banding input, the

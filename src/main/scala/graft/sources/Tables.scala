@@ -95,14 +95,10 @@ object Tables {
     * predictable cost (the rows were about to be shuffled into the
     * operator's first exchange anyway).
     *
-    * Width: `graft.scan.width` conf if set (0 disables), else the
-    * context default parallelism. An explicit numPartitions repartition
-    * is also exempt from AQE partition coalescing, so the downstream
-    * stage keeps its width even when the shuffled bytes look small. */
-  def scanWide(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val n = spark.conf.getOption("graft.scan.width").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    if (n <= 0) df else df.repartition(n)
-  }
+    * Width: the context default parallelism. An explicit numPartitions
+    * repartition is also exempt from AQE partition coalescing, so the
+    * downstream stage keeps its width even when the shuffled bytes
+    * look small. */
+  def scanWide(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 }

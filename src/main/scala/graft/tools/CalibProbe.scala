@@ -1,30 +1,35 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-/** Measures the Bench calibration kernel standalone: prints N timed
-  * runs so the committed reference band (Bench.CalibRef) can be set
+/** Measures a Bench sentinel kernel standalone: prints N timed runs so
+  * its committed quiet band (records/calib_ref_r16.json) can be set
   * from an unloaded box and re-checked after environment changes.
-  * Usage: sbt "runMain graft.tools.CalibProbe [n]" (default 12). */
+  * Usage: sbt "runMain graft.tools.CalibProbe [n] [iter]" — n runs
+  * (default 12) of the scalar [[graft.Bench.calibKernel]], or of the
+  * iterative-plan [[graft.Bench.iterKernel]] with `iter`. */
 object CalibProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(12)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Bench.calibKernel(spark) // untimed codegen/JIT warm-up
+    val iter = args.drop(1).headOption match {
+      case None => false
+      case Some("iter") => true
+      case Some(a) => throw new IllegalArgumentException(
+        s"usage: CalibProbe [n] [iter], got '$a'")
+    }
+    val spark = graft.Sessions.local()
+    val (label, kernel) =
+      if (iter) ("iter", () => graft.Bench.iterKernel(spark))
+      else ("calib", () => graft.Bench.calibKernel(spark))
+    kernel() // untimed codegen/JIT warm-up
     val ts = (1 to n).map { _ =>
-      System.gc() // match Bench's inter-run hygiene
+      // match Bench's hygiene between samples
+      if (iter) spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+      System.gc()
       val t0 = System.nanoTime()
-      graft.Bench.calibKernel(spark)
+      kernel()
       (System.nanoTime() - t0) / 1e9
     }
-    println("calib runs: " + ts.map(t => f"$t%.3f").mkString(", "))
+    println(s"$label runs: " + ts.map(t => f"$t%.3f").mkString(", "))
     val sorted = ts.sorted
     println(f"median ${sorted(n / 2)}%.3f  min ${sorted.head}%.3f  max ${sorted.last}%.3f")
     spark.stop()

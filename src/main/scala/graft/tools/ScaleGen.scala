@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derives a 10× "sf1-equivalent" corpus from the sf0.1 testdata into
@@ -60,12 +60,15 @@ object ScaleGen {
     val only: Set[String] =
       if (args.length > 7) args(7).split(",").map(_.trim).toSet else Set.empty
     def wanted(t: String): Boolean = only.isEmpty || only(t)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Sessions.envCpus
+    val spark = graft.Sessions.local(cpus)
+    // The copies keep the source files' physical column types: read
+    // them with Spark's own parquet timestamp mapping, not the
+    // bootstrap's (under which a naive events.ts would be rewritten
+    // as a UTC-adjusted one).
+    Seq("spark.sql.legacy.parquet.nanosAsLong",
+        "spark.sql.parquet.inferTimestampNTZ.enabled")
+      .foreach(spark.conf.unset)
 
     def tenfold(df: DataFrame)(per: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until Copies).map(c => per(df, c)).reduce(_ unionByName _)
@@ -78,7 +81,7 @@ object ScaleGen {
       d.select((col("doc_id") + lit(c * IdShift)).as("doc_id"),
         txt.as("text"), col("lang"), col("source"),
         length(txt).cast("long").as("n_chars"))
-    }.repartition(cpus.toInt).write.mode("overwrite")
+    }.repartition(cpus).write.mode("overwrite")
       .parquet(s"$out/documents.parquet")
 
     val emb = spark.read.parquet(s"$src/embeddings.parquet")
@@ -111,19 +114,19 @@ object ScaleGen {
           slice(flipped, 1, rot))
       d.select((col("vec_id") + lit(c * IdShift)).as("vec_id"),
         vec.as("embedding"), col("label"))
-    }.repartition(cpus.toInt).write.mode("overwrite")
+    }.repartition(cpus).write.mode("overwrite")
       .parquet(s"$out/embeddings.parquet")
 
     val li = spark.read.parquet(s"$src/lineitem.parquet")
     if (wanted("lineitem")) tenfold(li) { (d, c) =>
       d.withColumn("l_orderkey", col("l_orderkey") + lit(c * IdShift))
-    }.repartition(cpus.toInt).write.mode("overwrite")
+    }.repartition(cpus).write.mode("overwrite")
       .parquet(s"$out/lineitem.parquet")
 
     val ord = spark.read.parquet(s"$src/orders.parquet")
     if (wanted("orders")) tenfold(ord) { (d, c) =>
       d.withColumn("o_orderkey", col("o_orderkey") + lit(c * IdShift))
-    }.repartition(cpus.toInt).write.mode("overwrite")
+    }.repartition(cpus).write.mode("overwrite")
       .parquet(s"$out/orders.parquet")
 
     // customer: keys shifted per copy; o_custkey is left in the base
@@ -132,7 +135,7 @@ object ScaleGen {
     val cust = spark.read.parquet(s"$src/customer.parquet")
     if (wanted("customer")) tenfold(cust) { (d, c) =>
       d.withColumn("c_custkey", col("c_custkey") + lit(c * IdShift))
-    }.repartition(cpus.toInt).write.mode("overwrite")
+    }.repartition(cpus).write.mode("overwrite")
       .parquet(s"$out/customer.parquet")
 
     // part/supplier: TPC-H scales both linearly with SF — keys shifted
@@ -146,13 +149,13 @@ object ScaleGen {
     val prt = spark.read.parquet(s"$src/part.parquet")
     if (wanted("part")) tenfold(prt) { (d, c) =>
       d.withColumn("p_partkey", col("p_partkey") + lit(c * IdShift))
-    }.repartition(cpus.toInt).write.mode("overwrite")
+    }.repartition(cpus).write.mode("overwrite")
       .parquet(s"$out/part.parquet")
 
     val sup = spark.read.parquet(s"$src/supplier.parquet")
     if (wanted("supplier")) tenfold(sup) { (d, c) =>
       d.withColumn("s_suppkey", col("s_suppkey") + lit(c * IdShift))
-    }.repartition(cpus.toInt).write.mode("overwrite")
+    }.repartition(cpus).write.mode("overwrite")
       .parquet(s"$out/supplier.parquet")
 
     // nation/region are FIXED-size in TPC-H (25/5 rows) at every SF:
@@ -170,7 +173,7 @@ object ScaleGen {
       d.withColumn("event_id", col("event_id") + lit(c * IdShift))
         .withColumn("user_id", col("user_id") + lit(c * IdShift))
         .withColumn("ts", col("ts") + expr(s"INTERVAL ${c * dayShift} DAYS"))
-    }.repartition(cpus.toInt).write.mode("overwrite")
+    }.repartition(cpus).write.mode("overwrite")
       .parquet(s"$out/events.parquet")
 
     Seq("documents", "embeddings", "lineitem", "orders", "customer",

@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Analyzer, Porter}
@@ -31,12 +30,7 @@ object StemDump {
           Files.readAllLines(Paths.get(args(2)))).asScala.toSeq
           .map(_.trim).filter(_.nonEmpty)
       else Seq.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     val vocab = graft.sources.Tables.documents(spark, sfDir)
       .select(explode(Analyzer.tokensNoStop(col("text"))).as("t"))

@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Dev tool: run ONLY the named queries through the Verify dump shape
@@ -15,15 +11,7 @@ object VerifySubset {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
     graft.OracleAnalyzer.sfDir = Some(sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.sources.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => names(kv._1)).foreach { case (name, fn) =>
       // No coalesce(1): it would collapse the final shuffle stage to a
@@ -31,23 +19,7 @@ object VerifySubset {
       // check_oracle.py reads the multi-file dir with a glob anyway.
       fn(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => names(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val stagesJson = SparkEntry.oracleStages.filter(kv => names(kv._1))
-      .map { case (k, (stages, main)) =>
-        s"${q(k)}: {${q("stages")}: [${stages.map(q).mkString(",")}], ${q("main")}: ${q(main)}}"
-      }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_stages.json"), stagesJson)
+    graft.Verify.writeOracleFiles(outDir, names)
     spark.stop()
   }
 }

@@ -5,14 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
 object SparkSessionProvider {
-  lazy val session: SparkSession = graft.sources.Tables.bootstrap(
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+  lazy val session: SparkSession = Sessions.local(4)
 }
 
 trait SparkSpec extends AnyFunSuite {

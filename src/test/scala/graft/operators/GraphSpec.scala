@@ -66,6 +66,23 @@ class GraphSpec extends SparkSpec {
     assert(local == dist)
   }
 
+  test("the distributed loop frees every round checkpoint: only the result stays") {
+    // iters = 9 at the every-4 cadence checkpoints rounds 4 and 8; each
+    // is released as the next table lands, so of the persistent RDDs the
+    // call adds only the result's own checkpoint may remain.
+    val edges = (0L until 200L).map(i => (i, (i * 7 + 3) % 200)).toDF("src", "dst")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Graph.pageRank(edges, "src", "dst", iters = 9,
+      localMaxEdges = Some(0L))
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val result = out.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    assert(added.subsetOf(Set(result)), s"left resident: $added, result $result")
+    assert(out.count() == 200L)
+    Checkpoints.release(out, blocking = true)
+  }
+
   test("weighted: size-adaptive local path matches the distributed loop") {
     val rnd = new scala.util.Random(17)
     val pairs = Seq.fill(300)((rnd.nextInt(50).toLong,

@@ -34,6 +34,20 @@ class LabelPropSpec extends SparkSpec {
     lab.map { case (id, l) => id -> ((l, seedMap.contains(id))) }
   }
 
+  test("round checkpoints and the seed table are freed: only the result stays") {
+    val pairs = (0L until 100L).map(i => (i, (i * 7 + 3) % 100)).toDF("a", "b")
+    val seeds = Seq((0L, "x"), (50L, "y")).toDF("id", "label")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Graph.labelPropagation(pairs, "a", "b", seeds, "id", "label",
+      rounds = 5)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val result = out.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    assert(added.subsetOf(Set(result)), s"left resident: $added, result $result")
+    Checkpoints.release(out, blocking = true)
+  }
+
   test("randomized graphs == brute force (3 seeds)") {
     for (seed <- Seq(47L, 911L, 3030L)) {
       val pairs = (0 until 120).map { i =>

@@ -55,7 +55,7 @@ run_one() { # $1=build(head|old) $2=query $3=rep
 
 # probe gate: kernel median must sit inside the committed quiet band
 echo "=== probe gate (CalibProbe 8, HEAD classes)"
-java $ADDOPENS -Xmx24g -cp "$HEAD_CLASSES:/opt/spark/jars/*" \
+SPARK_GRAFT_CPUS=32 java $ADDOPENS -Xmx24g -cp "$HEAD_CLASSES:/opt/spark/jars/*" \
   graft.tools.CalibProbe 8 > "$OUT/probe_pre.log" 2>&1
 grep -E "^(calib runs|median)" "$OUT/probe_pre.log"
 PM=$(grep "^median" "$OUT/probe_pre.log" | awk '{print $2}')
@@ -77,7 +77,7 @@ for rep in $(seq 1 "$REPS"); do
 done
 
 echo "=== probe gate (post)"
-java $ADDOPENS -Xmx24g -cp "$HEAD_CLASSES:/opt/spark/jars/*" \
+SPARK_GRAFT_CPUS=32 java $ADDOPENS -Xmx24g -cp "$HEAD_CLASSES:/opt/spark/jars/*" \
   graft.tools.CalibProbe 8 > "$OUT/probe_post.log" 2>&1
 grep -E "^(calib runs|median)" "$OUT/probe_post.log"
 echo "done — summarize with: python3 tools/summarize_ab.py"
