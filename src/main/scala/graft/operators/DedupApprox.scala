@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{FirstBandPairsExpr, SortedJaccardExpr}
+import graft.functions.{FirstBandPairsExpr, ShingleTable, SortedJaccardExpr, SpanningEdgesExpr}
 
 /** Near-duplicate detection for corpus-scale dedup: MinHash+LSH,
   * SimHash, and n-gram Jaccard (the standard pretraining-dedup stack:
@@ -23,7 +23,11 @@ import graft.functions.{FirstBandPairsExpr, SortedJaccardExpr}
   * element, turning one tokenize into ~|tokens| of them per row; a
   * profiled 25-60× slowdown at sf0.1. The UDF does one tokenize, one
   * signature pass, and returns exactly the bytes that shuffle.)
-  * Pair expansion/verification stays native Catalyst.
+  * Pair expansion/verification stays native Catalyst, except where
+  * only the connected components are read: [[minhashEdges]] verifies
+  * inside one kernel per LSH bucket, a union-find that skips every
+  * pair it has already connected, so a dense bucket costs about one
+  * merge per member instead of one per pair.
   */
 object DedupApprox {
 
@@ -224,7 +228,7 @@ object DedupApprox {
 
   /** text → its `bands` LSH band hashes, in ONE UDF: tokenize,
     * hash-shingle, sign and band in a single pass. */
-  private def bandKeys(text: Column, shingleN: Int, numHashes: Int, bands: Int): Column = {
+  private[operators] def bandKeys(text: Column, shingleN: Int, numHashes: Int, bands: Int): Column = {
     require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
     val ps = perms(numHashes)
     udf { (t: String) =>
@@ -375,15 +379,16 @@ object DedupApprox {
   def minhashVerdictBatch(batch: DataFrame, targetDir: String): Unit =
     graft.plans.Ledger.land(batch, targetDir, Seq("new_id", "idx_id"))
 
-  /** The LSH candidates of [[minhashPairs]], each pair once:
-    * `(id, bh)` rows (a doc key and its band hashes) → `(id_a, id_b)`,
-    * id_a < id_b, for every pair sharing a bucket of at most
-    * `maxBucket` docs in some band, emitted by the lowest such band.
-    * A key carried by several rows sits in every bucket of each of its
-    * rows (each row counts toward the cap, as in a per-row grouping);
-    * identical rows pair exactly like one, and rows of one key with
-    * differing texts may emit a pair more than once. */
-  private[operators] def firstBandCandidates(keyed: DataFrame, maxBucket: Int): DataFrame = {
+  /** The LSH buckets of `(id, bh)` rows (a doc key and its band
+    * hashes): `(band, h, ms)`, one row per bucket of at most
+    * `maxBucket` rows, `ms` its members as `struct<id, bh>` (each key
+    * once), where a member's `bh` holds a null in every band whose
+    * bucket is over the cap. A key carried by several rows sits in every
+    * bucket of each of its rows (each row counts toward the cap, as in a
+    * per-row grouping); where its rows' buckets differ, its `bh` holds
+    * per band the max unmasked hash of its rows. Shared by
+    * [[firstBandCandidates]] and [[minhashEdges]]. */
+  private[operators] def lshBuckets(keyed: DataFrame, maxBucket: Int): DataFrame = {
     val spark = keyed.sparkSession
     // the configured shuffle width is the floor; the default
     // parallelism lifts it when it is set below the core count
@@ -411,10 +416,18 @@ object DedupApprox {
       .repartition(n, col("band"), col("h"))
       .groupBy(col("band"), col("h"))
       .agg(collect_list(struct(col("id"), col("bh"))).as("ms"))
+  }
+
+  /** The LSH candidates of [[minhashPairs]], each pair once:
+    * `(id_a, id_b)`, id_a < id_b, for every pair of keys sharing a
+    * bucket of [[lshBuckets]] in some band, emitted by the lowest such
+    * band. Identical rows of a key pair exactly like one, and rows of
+    * one key with differing texts may emit a pair more than once. */
+  private[operators] def firstBandCandidates(keyed: DataFrame, maxBucket: Int): DataFrame =
+    lshBuckets(keyed, maxBucket)
       .select(explode(FirstBandPairsExpr(col("band"), col("ms"))).as("p"))
       .select(least(col("p.a"), col("p.b")).as("id_a"),
         greatest(col("p.a"), col("p.b")).as("id_b"))
-  }
 
   /** MinHash+LSH candidate pairs verified by exact Jaccard.
     * Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
@@ -502,6 +515,61 @@ object DedupApprox {
       .select(col("id_a"), col("id_b"),
         SortedJaccardExpr(col("a.sh"), col("b.sh")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
+  }
+
+  /** The components-only sibling of [[minhashPairs]]: a subset of its
+    * output with exactly the same connected components, for callers that
+    * read only which docs connect ([[Dedup.connectedComponents]] and the
+    * verdicts on it). Same parameters and output columns, `(id_a, id_b,
+    * jaccard)` with id_a < id_b and jaccard >= threshold, and the same
+    * contract for null ids and for a key on several rows (its edge to
+    * another doc exists when one of its rows verifies). The returned
+    * frame is checkpointed: release it ([[Checkpoints.release]]) once
+    * its last reader has run.
+    *
+    * The buckets are [[lshBuckets]]' (those of two or more docs), each
+    * sorted by id; the bucket set is checkpointed, then each bucket runs
+    * a union-find over its members ([[graft.functions.SpanningEdgesExpr]]):
+    * a pair is Jaccard-verified only when it collides in no lower band
+    * and the union-find has not yet connected its ends, and a verified
+    * pair is united and emitted. Every verified candidate pair of
+    * [[minhashPairs]] is then either emitted or joined by emitted edges
+    * (by induction on the lowest band it collides in), and nothing else
+    * is emitted, so the components match. A bucket of k docs emits at
+    * most k − 1 edges and, when its smallest id matches the rest, costs
+    * k − 1 merges: on the benchmark corpus (26 clusters of 200 docs)
+    * [[minhashPairs]] gives 523,713 verified pairs, and this about 31k
+    * edges, since a near-duplicate shares a bucket with only some of
+    * its cluster in each band, and each bucket's forest stands alone.
+    *
+    * The shingle sets of the bucketed docs are collected and broadcast
+    * as one table ([[graft.functions.ShingleTable]]), the build side
+    * [[minhashPairs]] broadcasts by default; a corpus whose candidate
+    * docs outgrow a broadcast takes [[minhashPairs]] with
+    * `broadcastCandidates = false`. */
+  def minhashEdges(df: DataFrame, idCol: String, textCol: String,
+                   shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
+                   threshold: Double = 0.5, maxBucket: Int = 500): DataFrame = {
+    val keyed = df.filter(col(idCol).isNotNull)
+      .select(col(idCol).as("id"), bandKeys(col(textCol), shingleN, numHashes, bands).as("bh"))
+    // feeds the shingle table's id set and the edges
+    val buckets = lshBuckets(keyed, maxBucket)
+      .filter(size(col("ms")) > 1)
+      .select(col("band"), sort_array(col("ms")).as("ms"))
+      .localCheckpoint()
+    val shHashUdf = udf { (text: String) => shingleHashesOf(text, shingleN) }
+    val ids = buckets.select(explode(col("ms.id")).as("cid")).distinct()
+    val docSh = df.join(broadcast(ids), col(idCol) === col("cid"), "left_semi")
+      .select(col(idCol), shHashUdf(col(textCol)))
+    val table = df.sparkSession.sparkContext.broadcast(
+      ShingleTable(docSh.schema.head.dataType, docSh.collect()))
+    val edges = buckets
+      .select(explode(SpanningEdgesExpr(col("band"), col("ms"), table, threshold)).as("e"))
+      .select(col("e.a").as("id_a"), col("e.b").as("id_b"), col("e.jaccard").as("jaccard"))
+      .localCheckpoint()
+    Checkpoints.release(buckets)
+    table.destroy()
+    edges
   }
 
   // ---- SimHash ---------------------------------------------------------
@@ -593,16 +661,19 @@ object DedupApprox {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** One-call corpus dedup: MinHash near-dup pairs → connected
-    * components → keep/drop verdict per document. Docs outside any
-    * near-dup cluster keep themselves (cluster = own id, keep = true).
-    * This is the operator a training-data pipeline actually runs; the
-    * pieces stay public for custom thresholds/metrics. */
+  /** One-call corpus dedup: MinHash near-dup edges
+    * ([[minhashEdges]]) → connected components → keep/drop verdict per
+    * document. Docs outside any near-dup cluster keep themselves
+    * (cluster = own id, keep = true). This is the operator a
+    * training-data pipeline actually runs; the pieces stay public for
+    * custom thresholds/metrics. */
   def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
                   threshold: Double = 0.8): DataFrame = {
-    val pairs = minhashPairs(df, idCol, textCol, threshold = threshold)
-    val verdicts = Dedup.clusterVerdicts(pairs)
+    val edges = minhashEdges(df, idCol, textCol, threshold = threshold)
+    // the components are computed here, so the edges have no later reader
+    val verdicts = Dedup.clusterVerdicts(edges)
       .withColumnRenamed("id", idCol)
+    Checkpoints.release(edges)
     df.join(verdicts, Seq(idCol), "left")
       .withColumn("comp", coalesce(col("comp"), col(idCol)))
       .withColumn("keep", coalesce(col("keep"), lit(true)))

@@ -157,6 +157,11 @@ object InvertedIndex {
     .add("term", StringType).add("doc_id", LongType).add("tf", LongType)
     .add("dl", LongType).add("positions", ArrayType(IntegerType, containsNull = false))
 
+  /** A keyword postings file's columns (the `bucket` partition aside),
+    * as [[keywordPostings]] writes them. */
+  private[operators] val KeywordsSchema: StructType = new StructType()
+    .add("field", StringType).add("value", StringType).add("doc_id", LongType)
+
   private val SeenIdsSchema: StructType = new StructType().add("doc_id", LongType)
 
   /** The folded stats ledger; `None` where SQL's aggregates would give
@@ -466,17 +471,24 @@ object InvertedIndex {
     * against the pruned keyword postings. Scoring statistics stay
     * CORPUS-LEVEL (ES semantics: a filter narrows the result set,
     * not idf), and each filter leg reads one keyword bucket — the
-    * corpus is never scanned. */
+    * corpus is never scanned. The bucket dir is named on the driver
+    * ([[bucketId]]) and read with its known schema
+    * ([[Dedup.readStateAs]]): no schema-inference job per leg, and a
+    * bucket written with another layout fails instead of reading
+    * nulls. An index built without keyword columns fails too. */
   def filteredScored(spark: SparkSession, dir: String, terms: Seq[String],
                      filters: Seq[(String, String)],
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "filteredScored needs at least one term")
     val stats = readStats(spark, dir)
     val nb = stats.layout(dir)
+    val kw = new org.apache.hadoop.fs.Path(s"$dir/keywords")
+    if (filters.nonEmpty &&
+        !kw.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(kw))
+      throw new IllegalArgumentException(s"no keyword postings at $kw")
     filters.foldLeft(scoredWith(spark, dir, stats, terms, k1, b)) { case (acc, (f, v)) =>
-      val leg = spark.read.parquet(s"$dir/keywords")
-        .filter(col("bucket") ===
-          bucketOf(concat(lit(f), lit(":"), lit(v)), nb))
+      val leg = Dedup.readStateAs(spark, s"$kw/bucket=${bucketId(s"$f:$v", nb)}",
+          KeywordsSchema)
         .filter(col("field") === f && col("value") === v)
         .select(col("doc_id"))
       acc.join(leg, Seq("doc_id"), "left_semi")

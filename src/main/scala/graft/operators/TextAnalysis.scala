@@ -503,37 +503,19 @@ object TextAnalysis {
     * corpus dashboards, the md5 makes the rewrite hash-checkable
     * without shipping text.
     *
-    * Scale shape: pure projection over the scan (split → HOF filter
-    * → reassemble; every lambda references only its own variable, so
-    * nothing re-evaluates per element). Zero shuffles at any corpus
-    * size. */
-  private def c4Lines(textCol: String): Column =
-    split(coalesce(col(textCol), lit("")), "\n")
-
-  private def c4Keep(textCol: String, minWords: Int,
-                     blocklist: Seq[String],
-                     requireTerminalPunct: Boolean = true): Column =
-    filter(c4Lines(textCol), l => {
-      val t = trim(l)
-      val words = filter(split(t, " +"), w => length(w) > 0)
-      val blocked = blocklist.map(p => contains(lower(t), lit(p)))
-        .reduce(_ || _)
-      val punctOk =
-        if (requireTerminalPunct) t.rlike("[.!?]$") else lit(true)
-      punctOk && size(words) >= minWords && !blocked
-    })
-
+    * Scale shape: one hand-written scan per doc in the projection
+    * ([[c4CleanOf]]). Zero shuffles at any corpus size. */
   def c4LineClean(df: DataFrame, idCol: String, textCol: String,
                   minWords: Int = 3,
                   blocklist: Seq[String] = Seq("javascript", "lorem ipsum", "{"))
       : DataFrame = {
-    val lines = c4Lines(textCol)
-    val keep = c4Keep(textCol, minWords, blocklist)
-    df.select(col(idCol),
-      size(lines).cast("long").as("n_lines"),
-      size(keep).cast("long").as("n_kept"),
-      length(array_join(keep, "\n")).cast("long").as("cleaned_len"),
-      md5(array_join(keep, "\n").cast("binary")).as("cleaned_md5"))
+    val c4 = udf(c4Kernel(minWords, blocklist, requireTerminalPunct = true)).asNonNullable()
+    df.select(col(idCol), c4(col(textCol)).as("__c4"))
+      .select(col(idCol),
+        col("__c4._1").cast("long").as("n_lines"),
+        col("__c4._2").cast("long").as("n_kept"),
+        length(col("__c4._3")).cast("long").as("cleaned_len"),
+        md5(col("__c4._3").cast("binary")).as("cleaned_md5"))
   }
 
   /** The REWRITE twin of [[c4LineClean]]: same keep rules, but emits
@@ -547,9 +529,103 @@ object TextAnalysis {
                       outCol: String = "text_clean", minWords: Int = 3,
                       blocklist: Seq[String] = Seq("javascript", "lorem ipsum", "{"),
                       requireTerminalPunct: Boolean = true)
-      : DataFrame =
-    df.withColumn(outCol,
-      array_join(c4Keep(textCol, minWords, blocklist, requireTerminalPunct), "\n"))
+      : DataFrame = {
+    val c4 = c4Kernel(minWords, blocklist, requireTerminalPunct)
+    // never null, as the array_join it replaced: a nullable column
+    // would store another parquet layout
+    df.withColumn(outCol, udf((t: String) => c4(t)._3).asNonNullable()(col(textCol)))
+  }
+
+  /** [[c4CleanOf]] with its rules bound, and Spark's `lower()` mode
+    * read from the session the plan is built in. */
+  private def c4Kernel(minWords: Int, blocklist: Seq[String],
+                       requireTerminalPunct: Boolean): String => (Int, Int, String) = {
+    val block = blocklist.toArray
+    val icu = org.apache.spark.sql.internal.SQLConf.get.getConf(
+      org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+    t => c4CleanOf(t, minWords, block, requireTerminalPunct, icu)
+  }
+
+  /** The C4 line kernel, one scan per doc: `(n_lines, n_kept, kept)`,
+    * the lines of `text` (a null text reads as "") split on '\n', and
+    * the lines kept joined by '\n'. It keeps the lines the Column form
+    * `filter(split(text, "\n"), ...)` kept (TextKernelsSpec holds that
+    * form as the reference), with each of its steps done by hand:
+    *   - `trim`: strips spaces (U+0020) only;
+    *   - `rlike("[.!?]$")`: the trimmed line ends in `.`, `!` or `?`,
+    *     or in one of them and then one line terminator (`\r`, U+0085,
+    *     U+2028, U+2029), where `$` also matches;
+    *   - `size(filter(split(t, " +"), nonEmpty))`: the runs of non-space
+    *     chars, counted only up to `minWords`;
+    *   - `contains(lower(t), p)`: `lower` as Spark's ([[sparkLower]]),
+    *     run only on a line the other rules keep. A null phrase blocks
+    *     every line, as its null test did. */
+  private[graft] def c4CleanOf(text: String, minWords: Int, blocklist: Array[String],
+                               requireTerminalPunct: Boolean,
+                               icuLower: Boolean): (Int, Int, String) = {
+    val s = if (text == null) "" else text
+    val out = new java.lang.StringBuilder
+    var lines = 0
+    var kept = 0
+    var from = 0
+    while (from <= s.length) {
+      val nl = s.indexOf('\n', from)
+      val to = if (nl < 0) s.length else nl
+      var a = from
+      var b = to
+      while (a < b && s.charAt(a) == ' ') a += 1
+      while (b > a && s.charAt(b - 1) == ' ') b -= 1
+      if ((!requireTerminalPunct || endsTerminal(s, a, b)) && hasWords(s, a, b, minWords) &&
+          !blocked(s, a, b, blocklist, icuLower)) {
+        if (kept > 0) out.append('\n')
+        out.append(s, from, to)
+        kept += 1
+      }
+      lines += 1
+      from = to + 1
+    }
+    (lines, kept, out.toString)
+  }
+
+  private def isTerminalPunct(c: Char): Boolean = c == '.' || c == '!' || c == '?'
+
+  private def endsTerminal(s: String, a: Int, b: Int): Boolean =
+    b > a && (isTerminalPunct(s.charAt(b - 1)) || (b - a >= 2 && {
+      val c = s.charAt(b - 1)
+      (c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029') &&
+        isTerminalPunct(s.charAt(b - 2))
+    }))
+
+  private def hasWords(s: String, a: Int, b: Int, minWords: Int): Boolean = {
+    var words = 0
+    var i = a
+    while (i < b && words < minWords) {
+      while (i < b && s.charAt(i) == ' ') i += 1
+      if (i < b) words += 1
+      while (i < b && s.charAt(i) != ' ') i += 1
+    }
+    words >= minWords
+  }
+
+  private def blocked(s: String, a: Int, b: Int, blocklist: Array[String],
+                      icuLower: Boolean): Boolean =
+    blocklist.nonEmpty && {
+      val lower = sparkLower(s.substring(a, b), icuLower)
+      blocklist.exists(p => p == null || lower.contains(p))
+    }
+
+  /** Spark's `lower()` on a valid string: an ASCII string by table,
+    * any other by ICU's `UCharacter.toLowerCase` when
+    * `spark.sql.icu.caseMappings.enabled` (the default) is on and by
+    * the JVM's `toLowerCase` when it is off. */
+  private[graft] def sparkLower(t: String, icu: Boolean): String = {
+    var ascii = true
+    var i = 0
+    while (ascii && i < t.length) { ascii = t.charAt(i) < 0x80; i += 1 }
+    if (ascii) t.toLowerCase(java.util.Locale.ROOT)
+    else if (icu) com.ibm.icu.lang.UCharacter.toLowerCase(t)
+    else t.toLowerCase
+  }
 
   // ---- span-level cross-doc dedup (line-dedup analog) -----------------
 

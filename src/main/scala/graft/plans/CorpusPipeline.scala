@@ -36,7 +36,10 @@ import graft.operators.{Blocklist, Checkpoints, Dedup, DedupApprox, Export, Text
   *
   * Shuffle budget = exactly the sum of the component floors measured
   * in SCALING.md: the scan-local stages (clean/lang/quality/
-  * repetition) add zero; dedup contributes its band-key shuffles;
+  * repetition) add zero; dedup contributes its band-key shuffles
+  * (its verdict reads only which docs connect, so it verifies a
+  * spanning forest of each LSH bucket, [[DedupApprox.minhashEdges]],
+  * not every candidate pair);
   * decontamination its bloom-build partials; export its one
   * shard-keyed exchange.
   */
@@ -181,7 +184,7 @@ object CorpusPipeline {
     val base = docs.filter(!isBenchmark)
     // LAZY localCheckpoint (round 16, reversing the round-8 call): the
     // annotate chain feeds four consumers (the LSH banding input, the
-    // candidate-verification re-read inside minhashPairs, the keeper
+    // shingle-table re-read inside minhashEdges, the keeper
     // scores, and the verdict join — plus the substr stage's re-read
     // when on), and each re-executed the scan+clean chain. Round 8
     // measured an EAGER checkpoint losing (7.2 s vs 5.9 s) — the lazy
@@ -192,14 +195,18 @@ object CorpusPipeline {
     // once, MEMORY_AND_DISK — spills, never OOMs.
     val annotated = annotate(base, textCol, cfg).localCheckpoint(eager = false)
 
-    // fuzzy dedup verdict: LSH pairs over the CLEANED text (line noise
-    // must not block near-dup detection), keeper = highest token count
-    val pairs = DedupApprox.minhashPairs(
+    // fuzzy dedup verdict: LSH edges over the CLEANED text (line noise
+    // must not block near-dup detection), keeper = highest token count.
+    // The verdict reads only the components, so the spanning edges
+    // stand in for every verified pair; the components are computed as
+    // the verdict frame is built, after which nothing reads the edges.
+    val edges = DedupApprox.minhashEdges(
       annotated.select(col(idCol), col("text_clean")), idCol, "text_clean",
       threshold = cfg.dedupThreshold)
     val dedupVerdicts = Dedup.clusterVerdictsBy(
-        annotated, idCol, pairs, col("q_n_tokens"))
+        annotated, idCol, edges, col("q_n_tokens"))
       .select(col(idCol), col("comp"), col("keep").as("v_dedup"))
+    Checkpoints.release(edges)
 
     // decontamination verdict: benchmark docs collapse to a bloom
     // artifact (or an exact broadcast gram set); training docs probe
@@ -283,7 +290,7 @@ object CorpusPipeline {
     *     standing doc ([[DedupApprox.minhashPairsAgainst]] — band keys
     *     probe the at-rest index, x28's proven plan) AND it is the
     *     quality keeper of its within-delta cluster
-    *     ([[DedupApprox.minhashPairs]] over the delta alone + the q69
+    *     ([[DedupApprox.minhashEdges]] over the delta alone + the q69
     *     keeper). The STANDING side is immutable BY POLICY: even a
     *     higher-quality delta doc loses to its standing match —
     *     shipped shards don't un-ship. This is the one documented
@@ -323,12 +330,13 @@ object CorpusPipeline {
       .withColumn("__standing_dup", lit(true))
 
     // within-delta clusters + quality keeper (the batch machinery on
-    // the delta alone)
-    val deltaPairs = DedupApprox.minhashPairs(
+    // the delta alone; its edges are released once the components are)
+    val deltaEdges = DedupApprox.minhashEdges(
       cleanedDelta, idCol, "text_clean", threshold = cfg.dedupThreshold)
     val deltaKeeper = Dedup.clusterVerdictsBy(
-        annotated, idCol, deltaPairs, col("q_n_tokens"))
+        annotated, idCol, deltaEdges, col("q_n_tokens"))
       .select(col(idCol), col("comp"), col("keep").as("__delta_keeper"))
+    Checkpoints.release(deltaEdges)
 
     // decontamination vs the standing benchmark set
     val flagged = delta.select(col(idCol), col(textCol))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.ProjectExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -227,6 +228,129 @@ class DedupApproxSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val j = DedupApprox.jaccardPairs(dup, "doc_id", "text", threshold = 0.9)
       .select("jaccard").as[Double].head()
     assert(j == 1.0)
+  }
+
+  // ---- minhashEdges: a spanning forest of the verified pairs --------------
+
+  /** The member ids of every LSH bucket of two or more docs: the
+    * buckets minhashEdges walks. */
+  private def bucketsOf(docs: DataFrame, bands: Int, maxBucket: Int): Seq[Seq[Long]] =
+    DedupApprox.lshBuckets(docs.filter($"doc_id".isNotNull)
+        .select($"doc_id".as("id"), DedupApprox.bandKeys($"text", 3, 64, bands).as("bh")),
+        maxBucket)
+      .select($"ms.id").as[Seq[Long]].collect().toSeq.filter(_.size > 1)
+
+  /** minhashEdges against minhashPairs on `docs`: the connected
+    * components over both are equal row for row, every edge is a
+    * verified pair with its Jaccard, and there are at most
+    * Σ(|bucket| − 1) edges, none of them twice unless an end is a key
+    * on several rows. Returns the buckets, the edges and the
+    * pair count. */
+  private def sameComponents(docs: DataFrame, threshold: Double, bands: Int = 16,
+                             maxBucket: Int = 500)
+      : (Seq[Seq[Long]], Seq[(Long, Long, Double)], Int) = {
+    val pairs = DedupApprox.minhashPairs(docs, "doc_id", "text", bands = bands,
+      threshold = threshold, maxBucket = maxBucket)
+    val edges = DedupApprox.minhashEdges(docs, "doc_id", "text", bands = bands,
+      threshold = threshold, maxBucket = maxBucket)
+    try {
+      val want = Dedup.connectedComponents(pairs).orderBy("id").collect().toSeq
+      val got = Dedup.connectedComponents(edges).orderBy("id").collect().toSeq
+      assert(got == want)
+      val p = pairs.as[(Long, Long, Double)].collect().toSet
+      val e = edges.as[(Long, Long, Double)].collect().toSeq
+      assert(e.toSet.subsetOf(p), (e.toSet -- p).take(5))
+      // only a key on several rows may repeat an edge, as in minhashPairs
+      val multi = docs.groupBy("doc_id").count().filter($"count" > 1)
+        .select("doc_id").as[Option[Long]].collect().flatten.toSet
+      val once = e.filterNot { case (a, b, _) => multi(a) || multi(b) }
+      assert(once.size == once.toSet.size)
+      val bs = bucketsOf(docs, bands, maxBucket)
+      assert(e.size <= bs.map(_.size - 1).sum)
+      (bs, e, p.size)
+    } finally Checkpoints.release(edges)
+  }
+
+  /** The components of edges `(a, b, _)`: id → its component's min id. */
+  private def componentsOf(e: Seq[(Long, Long, Double)]): Map[Long, Long] = {
+    val ids = e.flatMap(x => Seq(x._1, x._2)).distinct.sorted.toArray
+    val (nodes, roots) = Dedup.unionFindMin(e.map(_._1).toArray, e.map(_._2).toArray, e.size)
+    assert(nodes.toSeq == ids.toSeq)
+    nodes.zip(roots).toMap
+  }
+
+  test("minhashEdges: minhashPairs' components on the spec corpus") {
+    val (_, e, _) = sameComponents(corpus, threshold = 0.5)
+    assert(e.map(x => (x._1, x._2)).toSet == Set((1L, 2L), (3L, 4L)))
+  }
+
+  test("minhashEdges: minhashPairs' components on the clique, in a spanning forest") {
+    val (_, e, pairs) = sameComponents(cliqueDocs.toDF("doc_id", "text"), threshold = 0.5)
+    assert(pairs >= 60 * 59 / 2)
+    assert(e.size >= 59 && e.size * 10 < pairs, s"${e.size} edges for $pairs pairs")
+    assert(componentsOf(e).filter(_._1 < 60).values.toSet == Set(0L))
+  }
+
+  /** `n` words of group `g` from index `from`: groups share no word. */
+  private def words(g: String, from: Int, n: Int): String =
+    (from until from + n).map(i => s"$g$i").mkString(" ")
+
+  // Bucket shapes, at 64 bands of one row each: a pair with a Jaccard of
+  // 0.2 shares some bucket with probability 1 − 0.8^64 > 0.9999
+  private lazy val shapes: DataFrame = {
+    // a chain: each doc shifts a 40-word window by 4 words, so a doc
+    // verifies with the docs up to two steps away (0.81, 0.65) and not
+    // with the rest (0.52 at three steps, 0.31 end to end)
+    val chain = (0 until 6).map(i => (Option(10L + i), words("c", 4 * i, 40)))
+    // doc 20 shares 14 of its shingles with each of 21–24 (Jaccard
+    // 0.22), which are near-duplicates of each other (0.90)
+    val minFails = (Option(20L), words("m", 0, 16) + " " + words("x", 0, 24)) +:
+      (21L to 24L).map(i => (Option(i), words("m", 0, 40) + s" tail$i"))
+    // exact duplicates and a near-duplicate of them
+    val dups = (30L to 32L).map(i => (Option(i), words("d", 0, 30))) :+
+      ((Option(33L), words("d", 0, 30) + " extra"))
+    // ten identical docs: each of their buckets is over the cap of 8
+    val capped = (40L to 49L).map(i => (Option(i), words("k", 0, 30)))
+    // null ids; empty, blank, punctuation-only and null texts
+    val odd = Seq((None, words("m", 0, 40)), (None, ""), (Option(50L), ""),
+      (Option(51L), "  "), (Option(52L), null), (Option(53L), "!!"))
+    // key 60 on two rows, one a near-duplicate of 61, the other of 62;
+    // key 63 on two rows, neither of them one of 64 (0.47 each)
+    val twoRows = Seq((Option(60L), words("p", 0, 30)), (Option(60L), words("q", 0, 30)),
+      (Option(61L), words("p", 0, 30) + " p"), (Option(62L), words("q", 0, 30) + " q"),
+      (Option(63L), words("r", 0, 30)), (Option(63L), words("r", 20, 30)),
+      (Option(64L), words("r", 10, 30)))
+    (chain ++ minFails ++ dups ++ capped ++ odd ++ twoRows).toDF("doc_id", "text")
+  }
+
+  test("minhashEdges: minhashPairs' components on chains, failed minima, duplicates, caps, odd rows and two-row keys") {
+    val (bs, e, _) = sameComponents(shapes, threshold = 0.6, bands = 64, maxBucket = 8)
+    // the shapes are there: a bucket whose minimum fails with the rest,
+    // a chain bucket holding both ends, no bucket of the capped docs
+    assert(bs.exists(b => b.min == 20L && b.count(i => i >= 21L && i <= 24L) >= 2))
+    assert(bs.exists(b => b.contains(10L) && b.contains(15L)))
+    assert(!bs.exists(_.exists(i => i >= 40L && i <= 49L)))
+    assert(bs.exists(b => Set(50L, 51L, 52L, 53L).subsetOf(b.toSet)))
+    assert(bs.exists(b => b.contains(63L) && b.contains(64L)))
+    val comp = componentsOf(e)
+    val expected = Map(10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L, 14L -> 10L,
+      15L -> 10L, 21L -> 21L, 22L -> 21L, 23L -> 21L, 24L -> 21L, 30L -> 30L, 31L -> 30L,
+      32L -> 30L, 33L -> 30L, 60L -> 60L, 61L -> 60L, 62L -> 60L)
+    assert(comp == expected)
+  }
+
+  test("minhashEdges: minhashPairs' components on a random 500-doc corpus") {
+    val rnd = new scala.util.Random(21)
+    val bases = Seq.fill(40)(Array.fill(30)(s"v${rnd.nextInt(3000)}"))
+    val docs = (0 until 500).map { i =>
+      val b = bases(rnd.nextInt(bases.size)).clone()
+      (0 until rnd.nextInt(14)).foreach(_ => b(rnd.nextInt(b.length)) = s"v${rnd.nextInt(3000)}")
+      (Option(i.toLong).filter(_ => i % 83 != 5), if (i % 71 == 3) "" else b.mkString(" "))
+    } ++ (0 until 500 by 37).map(i => (Option(i.toLong), bases(i % 40).mkString(" ") + " again"))
+    val df = docs.toDF("doc_id", "text")
+    val (_, e, pairs) = sameComponents(df, threshold = 0.5)
+    assert(e.nonEmpty && e.toSet.size < pairs, s"${e.toSet.size} edges for $pairs pairs")
+    sameComponents(df, threshold = 0.8, maxBucket = 6)
   }
 }
 

@@ -155,6 +155,21 @@ class InvertedIndexReadsSpec extends SparkSpec {
     Seq("x").toDF("id").write.mode("overwrite").parquet(s"$otherIds/seenIds")
     assert(layoutError(InvertedIndex.appendBatch(docs, "doc_id", Seq("text"), otherIds))
       .contains("doc_id"))
+
+    // keyword postings without value, under a valid index
+    val kw = tmp("graft-idx-lay5")
+    InvertedIndex.writeIndex(docs.withColumn("tag", lit("t")), "doc_id", Seq("text"), kw,
+      keywordCols = Seq("tag"))
+    val noValue = tmp("graft-idx-lay5n")
+    Seq("stats", "postings").foreach(d => org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$kw/$d"), new java.io.File(s"$noValue/$d")))
+    spark.read.parquet(s"$kw/keywords").drop("value")
+      .write.partitionBy("bucket").parquet(s"$noValue/keywords")
+    assert(layoutError(InvertedIndex.filteredScored(spark, noValue, Seq("beta"),
+      Seq("tag" -> "t"))).contains("value"))
+    // an index built without keyword columns has no keyword postings
+    intercept[IllegalArgumentException](
+      InvertedIndex.filteredScored(spark, built, Seq("beta"), Seq("tag" -> "t")))
   }
 
   // ---- job-count guard -----------------------------------------------------
@@ -194,5 +209,31 @@ class InvertedIndexReadsSpec extends SparkSpec {
     val append = jobsOf(InvertedIndex.appendBatch(docs.filter(col("doc_id") % 2 === 1),
       "doc_id", Seq("text"), d))
     assert(append <= 9, s"appendBatch ran $append jobs")
+  }
+
+  test("a 2-filter filteredScored reads its keyword legs typed: fewer jobs, the same answers") {
+    val d = tmp("graft-idx-filt2")
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    InvertedIndex.writeIndex(docs, "doc_id", Seq("text"), d, keywordCols = Seq("source", "lang"))
+    val terms = Seq("dup", "window", "scan")
+    val filters = Seq("source" -> "src1", "lang" -> "en")
+    // the inferred-schema legs these reads replaced
+    def inferred(fs: Seq[(String, String)]): DataFrame =
+      fs.foldLeft(InvertedIndex.scored(spark, d, terms)) { case (acc, (f, v)) =>
+        acc.join(spark.read.parquet(s"$d/keywords")
+          .filter(col("bucket") === InvertedIndex.bucketOf(concat(lit(f), lit(":"), lit(v)), 64))
+          .filter(col("field") === f && col("value") === v)
+          .select(col("doc_id")), Seq("doc_id"), "left_semi")
+      }
+    def rows(df: DataFrame): Seq[(Long, Double)] =
+      df.as[(Long, Double)].collect().toSeq.sorted
+    val typedJobs = jobsOf(InvertedIndex.filteredScored(spark, d, terms, filters).collect())
+    val inferredJobs = jobsOf(inferred(filters).collect())
+    assert(typedJobs < inferredJobs, s"$typedJobs jobs, inferred legs $inferredJobs")
+    val got = rows(InvertedIndex.filteredScored(spark, d, terms, filters))
+    assert(got.nonEmpty && got == rows(inferred(filters)))
+    Seq(Seq("source" -> "src1"), Seq("lang" -> "xx"), Seq("source" -> "src2", "source" -> "src1"))
+      .foreach(fs => assert(rows(InvertedIndex.filteredScored(spark, d, terms, fs)) ==
+        rows(inferred(fs))))
   }
 }

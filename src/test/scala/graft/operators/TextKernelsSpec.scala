@@ -7,10 +7,10 @@ import graft.functions.Analyzer
 
 /** The hand-written text kernels (`DedupApprox.foreachToken` and the
   * kernels on it: `tokensOf`, `shinglesOf`, `shingleHashesOf`,
-  * `TextAnalysis.qualityOf`, `langScoreOf`) against the regex-split
-  * Column and Scala forms they replaced, kept here as the reference:
-  * the same rows, bit for bit, on edge texts, every BMP char and a
-  * random corpus. */
+  * `TextAnalysis.qualityOf`, `langScoreOf`; the C4 line clean,
+  * `TextAnalysis.c4CleanOf`) against the regex-split Column and Scala
+  * forms they replaced, kept here as the reference: the same rows, bit
+  * for bit, on edge texts, every BMP char and a random corpus. */
 class TextKernelsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -79,6 +79,27 @@ class TextKernelsSpec extends SparkSpec {
     (if (score > 0) lang else "und", score)
   }
 
+  /** The C4 line filter as a Column: split, then a lambda with a regex
+    * split, `lower` per phrase and an `rlike` per line. */
+  private def refC4Keep(textCol: String, minWords: Int, blocklist: Seq[String],
+                        requireTerminalPunct: Boolean): Column =
+    filter(split(coalesce(col(textCol), lit("")), "\n"), l => {
+      val t = trim(l)
+      val words = filter(split(t, " +"), w => length(w) > 0)
+      val blocked = blocklist.map(p => contains(lower(t), lit(p))).reduce(_ || _)
+      val punctOk = if (requireTerminalPunct) t.rlike("[.!?]$") else lit(true)
+      punctOk && size(words) >= minWords && !blocked
+    })
+
+  private def refC4LineClean(df: DataFrame, minWords: Int, blocklist: Seq[String]): DataFrame = {
+    val keep = refC4Keep("text", minWords, blocklist, requireTerminalPunct = true)
+    df.select(col("id"),
+      size(split(coalesce(col("text"), lit("")), "\n")).cast("long").as("n_lines"),
+      size(keep).cast("long").as("n_kept"),
+      length(array_join(keep, "\n")).cast("long").as("cleaned_len"),
+      md5(array_join(keep, "\n").cast("binary")).as("cleaned_md5"))
+  }
+
   // ---- inputs ------------------------------------------------------------
 
   private val edgeTexts: Seq[String] = Seq(
@@ -122,6 +143,45 @@ class TextKernelsSpec extends SparkSpec {
     }
 
   private def frame(texts: Seq[(Long, String)]): DataFrame = texts.toDF("id", "text")
+
+  /** Line-structured texts for the C4 clean: terminal punctuation
+    * before and after line terminators, runs of spaces and tabs,
+    * blocklist phrases in other cases, empty lines. */
+  private val c4Texts: Seq[String] = Seq(
+    "Line one is here.\nshort.\nno punct here\njavascript is bad.\nLOREM IPSUM dolor sit.\n" +
+      "{ brace } here.\n  spaced out line .  \n\n",
+    "ends with CR.\r\nnext line ok!\r\nbare CR\r\n\r", "a b c.\r\r", "a b c.\u0085",
+    "a b c.\u2028", "a b c.\u2029\n", "a b c\u2028.", "tab\tsep words here.",
+    "multi   space   words ok?", "  \n  . \n?", "\n", "\n\n", "a b c", "a b c.",
+    "İstanbul JAVASCRIPT x.", "Kelvin \u212A javaſcript x.", "x STRASSE ẞ y.", "ΣΑΣ x y.")
+
+  /** Per code point (as in [[charTexts]]), lines that put the char at
+    * a line's ends, between words, after a terminal punctuation mark and
+    * inside a word. */
+  private lazy val c4CharTexts: Seq[(Long, String)] =
+    ((0 until 0xD800) ++ (0xE000 to 0xFFFF) ++ (0x10000 to 0x10FFFF by 61)).map { cp =>
+      val c = new String(Character.toChars(cp))
+      (cp.toLong, s"x y$c\n$c x y.\nx y.$c\n$c\nab${c}cd ef.\nx$c$c y!")
+    }
+
+  /** (minWords, blocklist, requireTerminalPunct) of each C4 check: the
+    * defaults; one word and phrases that chars outside ASCII lower to;
+    * no word or punctuation rule. */
+  private val c4Params: Seq[(Int, Seq[String], Boolean)] = Seq(
+    (3, Seq("javascript", "lorem ipsum", "{"), true),
+    (1, Seq("javascript", "{", "ß", "i\u0307", "σ", "ς", "k", "ǆ"), true),
+    (0, Seq("lorem ipsum"), false))
+
+  private def checkC4(texts: Seq[(Long, String)]): Unit = {
+    val df = frame(texts)
+    c4Params.foreach { case (minWords, blocklist, punct) =>
+      same(TextAnalysis.c4LineCleanText(df, "text", "c", minWords, blocklist, punct),
+        df.withColumn("c", array_join(refC4Keep("text", minWords, blocklist, punct), "\n")))
+      if (punct)
+        same(TextAnalysis.c4LineClean(df, "id", "text", minWords, blocklist),
+          refC4LineClean(df, minWords, blocklist))
+    }
+  }
 
   private def same(a: DataFrame, b: DataFrame): Unit = {
     assert(a.columns.toSeq == b.columns.toSeq)
@@ -170,7 +230,25 @@ class TextKernelsSpec extends SparkSpec {
     checkAll(charTexts)
   }
 
+  test("C4 line clean = the Column form on edge texts") {
+    checkC4((edgeTexts ++ c4Texts).zipWithIndex.map { case (t, i) => (i.toLong, t) })
+    val kept = TextAnalysis.c4LineCleanText(frame(Seq(0L -> c4Texts.head)), "text")
+      .select("text_clean").as[String].head()
+    assert(kept == "Line one is here.\n  spaced out line .  ")
+  }
+
+  test("C4 line clean = the Column form on every BMP char") {
+    checkC4(c4CharTexts)
+    // the lower-casing itself, char by char, against Spark's lower()
+    val df = frame(c4CharTexts)
+    val icu = spark.conf.get("spark.sql.icu.caseMappings.enabled", "true").toBoolean
+    same(df.select(col("id"), udf((t: String) => TextAnalysis.sparkLower(t, icu))
+        .apply(col("text")).as("l")),
+      df.select(col("id"), lower(col("text")).as("l")))
+  }
+
   test("text kernels = the reference forms on a random 500-doc corpus") {
     checkAll(randomCorpus(500, 17L))
+    checkC4(randomCorpus(500, 18L))
   }
 }

@@ -1,15 +1,25 @@
-// Wall times of the three passes of the near-dup graph, in one JVM, on
-// the corpus_prep benchmark corpus (seed ND_SEED, default 7; the raw
-// text, without the funnel's cleaning): `cand` is the minhashPairs call
-// (its candidate set is checkpointed eagerly), `verify` checkpoints the
-// Jaccard-verified pairs, `cc` counts connectedComponents over them
-// with the distributed path forced (graft.cc.localMaxEdges=0). One
-// warm-up rep (rep 0, not reported), then ND_REPS timed reps; persisted
-// RDDs are dropped and a GC runs before each rep. Prints the pair and
-// component-row counts, then one line,
-// `NDPASSES {"cand": [ms, ...], "verify": [...], "cc": [...]}`. Runs against any
-// checkout's benchmark build, so an A/B alternates JVMs of two
-// checkouts:
+// Wall times of the passes of the near-dup graph, in one JVM, on the
+// corpus_prep benchmark corpus (seed ND_SEED, default 7; the raw text,
+// without the funnel's cleaning). The pair path: `cand` is the
+// minhashPairs call (its candidate set is checkpointed eagerly),
+// `verify` checkpoints the Jaccard-verified pairs, `cc` counts
+// connectedComponents over them. The edge path: `edges` is the
+// minhashEdges call (buckets, union-find verification, its edges
+// checkpointed), `edges_cc` counts connectedComponents over them. Both
+// CC passes run the distributed rounds (graft.cc.localMaxEdges=0), so
+// the two CC times compare the same algorithm on the two edge sets.
+// One warm-up rep (rep 0, not reported), then ND_REPS timed reps;
+// persisted RDDs are dropped and a GC runs before each rep. Prints the
+// pair, edge and component-row counts, then three lines: the times,
+// the Janino compiles (CodegenMetrics.METRIC_COMPILATION_TIME count)
+// and their compile time in ms (CodeGenerator.compileTime) per pass and
+// rep,
+//   NDPASSES {"cand": [ms, ...], "verify": [...], "cc": [...], "edges": [...], "edges_cc": [...]}
+//   NDCOMPILES {"cand": [n, ...], ...}
+//   NDCOMPILE_MS {"cand": [ms, ...], ...}
+// Runs against any checkout's benchmark build, so an A/B alternates
+// JVMs of two checkouts (a checkout without minhashEdges fails to
+// compile this script):
 //
 //   python3 perfbench/build.py        # in the checkout; prints <classes>
 //   ND_DIR=/path/to/scratch ND_REPS=4 \
@@ -18,8 +28,10 @@
 //       --conf spark.sql.adaptive.enabled=true \
 //       --conf spark.sql.session.timeZone=UTC -i tools/neardup_passes.scala
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.types._
-import graft.operators.{Dedup, DedupApprox}
+import graft.operators.{Checkpoints, Dedup, DedupApprox}
 graft.sources.Tables.bootstrap(spark)
 spark.sparkContext.setLogLevel("ERROR")
 val seed = sys.env.getOrElse("ND_SEED", "7").toLong
@@ -34,12 +46,20 @@ if (!new java.io.File(path).exists) {
     .write.parquet(path)
 }
 val docs = spark.read.parquet(path)
-val times = Map("cand" -> new StringBuilder, "verify" -> new StringBuilder, "cc" -> new StringBuilder)
+val passes = Seq("cand", "verify", "cc", "edges", "edges_cc")
+val times, compiles, compileMs = passes.map(_ -> new StringBuilder).toMap
+def add(to: Map[String, StringBuilder], pass: String, v: Any): Unit =
+  to(pass).append(if (to(pass).isEmpty) "" else ", ").append(v)
 def timed[T](pass: String, rep: Int)(f: => T): T = {
+  val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  val c0 = CodeGenerator.compileTime
   val t0 = System.nanoTime
   val r = f
-  if (rep > 0) times(pass).append(if (times(pass).isEmpty) "" else ", ")
-    .append(((System.nanoTime - t0) / 1e6).round)
+  if (rep > 0) {
+    add(times, pass, ((System.nanoTime - t0) / 1e6).round)
+    add(compiles, pass, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0)
+    add(compileMs, pass, ((CodeGenerator.compileTime - c0) / 1e6).round)
+  }
   r
 }
 spark.conf.set("graft.cc.localMaxEdges", "0")
@@ -49,8 +69,15 @@ for (rep <- 0 to reps) {
   val pairs = timed("cand", rep)(DedupApprox.minhashPairs(docs, "id", "text", threshold = 0.5))
   val verified = timed("verify", rep)(pairs.localCheckpoint())
   val comps = timed("cc", rep)(Dedup.connectedComponents(verified).count())
-  if (rep == 0) println(s"pairs ${verified.count()}, component rows $comps")
+  val edges = timed("edges", rep)(DedupApprox.minhashEdges(docs, "id", "text", threshold = 0.5))
+  val edgeComps = timed("edges_cc", rep)(Dedup.connectedComponents(edges).count())
+  if (rep == 0) println(s"pairs ${verified.count()}, edges ${edges.count()}, " +
+    s"component rows $comps (pairs) $edgeComps (edges)")
+  Checkpoints.release(edges)
 }
-println("NDPASSES {" + Seq("cand", "verify", "cc").map(p => s""""$p": [${times(p)}]""")
-  .mkString(", ") + "}")
+def line(tag: String, m: Map[String, StringBuilder]): String =
+  s"$tag {" + passes.map(p => s""""$p": [${m(p)}]""").mkString(", ") + "}"
+println(line("NDPASSES", times))
+println(line("NDCOMPILES", compiles))
+println(line("NDCOMPILE_MS", compileMs))
 System.exit(0)
