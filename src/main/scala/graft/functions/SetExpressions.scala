@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, GraftBridge, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BoundReference, Expression,
-  InterpretedUnsafeProjection, UnsafeArrayData, UnsafeProjection, UnsafeRow}
+  InterpretedUnsafeProjection, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
@@ -173,14 +173,15 @@ object ShingleTable {
     InterpretedUnsafeProjection.createProjection(
       Seq(BoundReference(0, idType, nullable = false)))
 
-  /** The table of collected `(id, sh: array<bigint>)` rows. */
-  def apply(idType: DataType, rows: Array[Row]): ShingleTable = {
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+  /** The table of `(id, sh: array<bigint>)` rows in their internal
+    * form, as a plan's `executeCollect` returns them (so no shingle is
+    * boxed on the way). */
+  def apply(idType: DataType, rows: Array[InternalRow]): ShingleTable = {
     val key = keyProjection(idType)
     val sets = new java.util.HashMap[UnsafeRow, Array[ArrayData]]
     rows.foreach { r =>
-      val k = key(InternalRow(toCatalyst(r.get(0)))).copy()
-      val sh: ArrayData = UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](1).toArray)
+      val k = key(r).copy()
+      val sh = r.getArray(1)
       val prev = sets.get(k)
       sets.put(k, if (prev == null) Array(sh) else prev :+ sh)
     }

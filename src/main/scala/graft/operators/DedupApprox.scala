@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -538,9 +539,10 @@ object DedupApprox {
     * is emitted, so the components match. A bucket of k docs emits at
     * most k − 1 edges and, when its smallest id matches the rest, costs
     * k − 1 merges: on the benchmark corpus (26 clusters of 200 docs)
-    * [[minhashPairs]] gives 523,713 verified pairs, and this about 31k
-    * edges, since a near-duplicate shares a bucket with only some of
-    * its cluster in each band, and each bucket's forest stands alone.
+    * [[minhashPairs]] gives 523,713 verified pairs, and this 30,815
+    * edges against a Σ(|bucket| − 1) of 72,523, since a near-duplicate
+    * shares a bucket with only some of its cluster in each band, and
+    * each bucket's forest stands alone.
     *
     * The shingle sets of the bucketed docs are collected and broadcast
     * as one table ([[graft.functions.ShingleTable]]), the build side
@@ -561,8 +563,9 @@ object DedupApprox {
     val ids = buckets.select(explode(col("ms.id")).as("cid")).distinct()
     val docSh = df.join(broadcast(ids), col(idCol) === col("cid"), "left_semi")
       .select(col(idCol), shHashUdf(col(textCol)))
-    val table = df.sparkSession.sparkContext.broadcast(
-      ShingleTable(docSh.schema.head.dataType, docSh.collect()))
+    val qe = docSh.queryExecution
+    val table = df.sparkSession.sparkContext.broadcast(ShingleTable(docSh.schema.head.dataType,
+      SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect())))
     val edges = buckets
       .select(explode(SpanningEdgesExpr(col("band"), col("ms"), table, threshold)).as("e"))
       .select(col("e.a").as("id_a"), col("e.b").as("id_b"), col("e.jaccard").as("jaccard"))

@@ -531,8 +531,8 @@ object TextAnalysis {
                       requireTerminalPunct: Boolean = true)
       : DataFrame = {
     val c4 = c4Kernel(minWords, blocklist, requireTerminalPunct)
-    // never null, as the array_join it replaced: a nullable column
-    // would store another parquet layout
+    // non-nullable: a nullable column would store the shards in
+    // another parquet layout
     df.withColumn(outCol, udf((t: String) => c4(t)._3).asNonNullable()(col(textCol)))
   }
 

@@ -10,7 +10,9 @@
 // the two CC times compare the same algorithm on the two edge sets.
 // One warm-up rep (rep 0, not reported), then ND_REPS timed reps;
 // persisted RDDs are dropped and a GC runs before each rep. Prints the
-// pair, edge and component-row counts, then three lines: the times,
+// pair, edge and component-row counts and the edge path's bound, the
+// sum of (|bucket| - 1) over the LSH buckets of 2 to 500 rows (one
+// minhashIndex group per bucket), then three lines: the times,
 // the Janino compiles (CodegenMetrics.METRIC_COMPILATION_TIME count)
 // and their compile time in ms (CodeGenerator.compileTime) per pass and
 // rep,
@@ -28,6 +30,7 @@
 //       --conf spark.sql.adaptive.enabled=true \
 //       --conf spark.sql.session.timeZone=UTC -i tools/neardup_passes.scala
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.types._
@@ -62,6 +65,10 @@ def timed[T](pass: String, rep: Int)(f: => T): T = {
   }
   r
 }
+val bucketBound = DedupApprox.minhashIndex(docs, "id", "text")
+  .groupBy("band", "band_hash").agg(count(lit(1)).as("rows"), countDistinct("id").as("k"))
+  .filter(col("rows") <= 500 && col("k") > 1)
+  .agg(sum(col("k") - 1)).head.getLong(0)
 spark.conf.set("graft.cc.localMaxEdges", "0")
 for (rep <- 0 to reps) {
   spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
@@ -71,8 +78,8 @@ for (rep <- 0 to reps) {
   val comps = timed("cc", rep)(Dedup.connectedComponents(verified).count())
   val edges = timed("edges", rep)(DedupApprox.minhashEdges(docs, "id", "text", threshold = 0.5))
   val edgeComps = timed("edges_cc", rep)(Dedup.connectedComponents(edges).count())
-  if (rep == 0) println(s"pairs ${verified.count()}, edges ${edges.count()}, " +
-    s"component rows $comps (pairs) $edgeComps (edges)")
+  if (rep == 0) println(s"pairs ${verified.count()}, edges ${edges.count()} " +
+    s"(bound $bucketBound), component rows $comps (pairs) $edgeComps (edges)")
   Checkpoints.release(edges)
 }
 def line(tag: String, m: Map[String, StringBuilder]): String =
